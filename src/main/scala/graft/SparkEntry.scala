@@ -28,11 +28,21 @@ object SparkEntry {
     ops.Aggs.aggGroupbySums(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    groups.iterator.flatMap(_._1).toMap
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    disjointUnion(groups.map(_._1))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    groups.iterator.flatMap(_._2).toMap
+  lazy val oracleSql: Map[String, String] =
+    disjointUnion(groups.map(_._2))
+
+  /** The union of `maps`; a key declared by two of them is an error. */
+  private[graft] def disjointUnion[V](maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity).collect {
+      case (k, ks) if ks.size > 1 => k
+    }
+    require(dups.isEmpty,
+      s"query keys declared by more than one group: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.reduce(_ ++ _)
+  }
 }

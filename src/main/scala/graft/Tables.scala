@@ -81,13 +81,22 @@ object Tables {
     * (sfDir, table) so gated query builders pay a filesystem stat once
     * per JVM instead of a catalyst analyze+optimize pass per call
     * (~40 ms, measured as 12% of varda_annotate_multi's bench line when
-    * the gate read `optimizedPlan.stats`). */
+    * the gate read `optimizedPlan.stats`). A failed stat returns 0 (the
+    * small-input plan) uncached, logged to stderr, and is retried on the
+    * next call. */
   private val sizeCache = TrieMap.empty[(String, String), Long]
   def inputBytes(spark: SparkSession, sfDir: String, name: String): Long =
-    sizeCache.getOrElseUpdate((sfDir, name), {
+    sizeCache.getOrElse((sfDir, name), {
       val p = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      try fs.getContentSummary(p).getLength catch { case _: Throwable => 0L }
+      try {
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val n = fs.getContentSummary(p).getLength
+        sizeCache.put((sfDir, name), n)
+        n
+      } catch { case e: Exception =>
+        System.err.println(s"[tables] inputBytes($p) failed, gating as 0 bytes: $e")
+        0L
+      }
     })
 
   /** Drop a session's memoized frames and view registration. For

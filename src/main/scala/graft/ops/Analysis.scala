@@ -114,17 +114,21 @@ object Analysis {
     // state"): bit positions b and b+8 of each band share one 64-bit
     // word in 32-BIT LANES, so the per-doc vote state is 32 packed sums
     // + count instead of 64 single-bit sums + count. EXACT for any
-    // representable input: a doc's distinct-shingle count is bounded by
-    // its token count, and a Spark string cell caps at 2^31 bytes, so
-    // every lane count < 2^31 — lane 0 can never carry into lane 1 and
-    // lane 1's accumulation tops out below 2^62. Measured
-    // (tools/SimhashWidthBench, sf0.1): the wide form's first run paid
-    // ~2.3 s of whole-stage-codegen compilation the packed form avoids
-    // (65-slot two-level aggregate vs 33), warm reps ~equal — and the
-    // bench pays that compile inside the timed key. The majority
-    // decision per bit moves to a post-aggregate projection over the
-    // doc-sized frame (the CASE arithmetic is unchanged, so bands are
-    // bit-identical to the wide form's — the oracle runs the wide SQL).
+    // representable input. Shingles overlap (one per word position, and
+    // `split(text, " ")` admits empty words), so shingle width does not
+    // bound their count: the tight bound is the separator count. A doc's
+    // distinct-shingle count c <= spaces - 1 < doc_bytes <= 2^31 - 1 (a
+    // Spark string cell's byte length is an Int). Lane 0 stays < 2^31,
+    // so it never carries into lane 1 (a carry needs 2^32), and the
+    // whole word tops out at (2^31 - 1) * 2^32 + 2^31 - 1 < 2^63 - 1:
+    // the LONG sum never wraps. Measured at sf0.1 (OPTIMIZATION_r20.md,
+    // OPT-5): the wide form's first run paid ~2.3 s of
+    // whole-stage-codegen compilation the packed form avoids (65-slot
+    // two-level aggregate vs 33), warm reps ~equal — and the bench pays
+    // that compile inside the timed key. The majority decision per bit
+    // moves to a post-aggregate projection over the doc-sized frame (the
+    // CASE arithmetic is unchanged, so bands are bit-identical to the
+    // wide form's — the oracle runs the wide SQL).
     val packedAggs = (0 until 4).flatMap(k => (0 until 8).map(b =>
       sum(expr(s"(shiftright(v$k, $b) & 1) + " +
         s"((shiftright(v$k, ${b + 8}) & 1) * ${1L << 32}L)")).as(s"q${k}_$b")))

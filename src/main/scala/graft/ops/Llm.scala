@@ -458,11 +458,10 @@ object Llm {
     pairwiseCosine(s, e, e, allPairs = true, minCos = minCos)
   }
 
-  /** The candidate stage of [[simAnnLsh]], shared with the decade
-    * measurement tool ([[graft.tools.LshProbe]]) so the measured
-    * candidates-per-query property is the DECLARED key's, not a
-    * re-derivation's. Returns distinct (qid, nid) pairs. */
-  private[graft] def lshCandidatePairs(
+  /** The candidate stage of [[simAnnLsh]]: distinct (qid, nid) pairs.
+    * Its candidates-per-query across decades is recorded in
+    * BENCH_LSH_CANDS_R18.json and BENCH_LSH_CANDS_R19.json. */
+  private def lshCandidatePairs(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     graft.functions.GraftFunctions.registerAll(s)

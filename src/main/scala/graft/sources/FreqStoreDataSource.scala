@@ -129,14 +129,6 @@ object FreqStoreDataSource {
   @volatile private[graft] var lastPlannedLimit: Option[Int] = None
   /** Whether the most recent scan answered COUNT(*) from footers. */
   @volatile private[graft] var lastPushedCountStar: Boolean = false
-  /** A/B hook: force the row-based readers (local-mode benchmarking and
-    * parity tests only — columnar is the real path). Read ONCE per scan
-    * at newScanBuilder time and carried through the ScanBuilder into
-    * the ReaderFactory, so a toggle between planning and execution of
-    * one query can never mismatch BatchScanExec's columnar plan shape
-    * against the reader kind actually created (round-14 ADVICE). A
-    * per-scan `.option("columnar", "false")` overrides it. */
-  @volatile private[graft] var columnarEnabled: Boolean = true
   /** The footer-statistics aggregates the most recent scan pushed
     * (partial pushdown — empty when none). */
   @volatile private[graft] var lastPushedAggs: Seq[String] = Nil
@@ -199,8 +191,11 @@ class FreqStoreTable(dir: String, catalogPartitioned: Boolean = false,
       s.toLongOption.getOrElse(sys.error(
         s"freqstore: asOfGeneration must be a long generation id, got '$s'"))
     }.orElse(asOfFixed) // SQL `VERSION AS OF` pins via the catalog
-    val columnar = Option(options.get("columnar")).map(_.toBoolean)
-      .getOrElse(FreqStoreDataSource.columnarEnabled)
+    // `.option("columnar", "false")` forces the row-based readers (parity
+    // tests). Read ONCE per scan here and carried through the ScanBuilder
+    // into the ReaderFactory, so BatchScanExec's columnar plan shape
+    // always matches the reader kind actually created (round-14 ADVICE).
+    val columnar = Option(options.get("columnar")).forall(_.toBoolean)
     new FreqStoreScanBuilder(dir, asOf, catalogPartitioned, columnar)
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** In-engine CDC parity probe (round 16): drain the MULTIPLEXED
   * `freqstore-changes` feed over the 3-batch replayed store at an
   * arbitrary sf dir and compare `FreqStore.refoldChanges(feed)` against
@@ -13,16 +11,7 @@ import org.apache.spark.sql.SparkSession
 object ChangesParity {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val t0 = System.nanoTime()
     // the declared key IS the drain+refold path (fresh sink+checkpoint,
     // AvailableNow, parquet sink, refold) — run it, then compare

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -44,16 +43,7 @@ object DigestVerify {
     val (sfDir, outDir) = (args(0), args(1))
     val keys = args.drop(2).toSeq
     require(keys.nonEmpty, "usage: DigestVerify <sfDir> <outDir> key...")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     new java.io.File(outDir).mkdirs()
     val entries = keys.map { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic sf1 scale-point generator (round-10): synthesizes a
@@ -43,15 +43,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/root/repo/target/testdata-sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def wr(df: => DataFrame, t: String): Unit = {
@@ -92,17 +84,6 @@ object GenScale {
             x => concat(lit(s"c${i}_"), x)), " "))
         .withColumn("n_chars", length(col("text")).cast("bigint"))),
       "documents")
-
-    // PLANTED SKEW corpus (round-13, VERDICT #6): one hot supplier in
-    // ~20% of lineitem — the adversarial shape for a supplier join.
-    // Deterministic row pick (hash of the line's own key), hot key = 1
-    // (exists in copy 0's supplier). Written beside the fair tables so
-    // skew measurements read the same sf1 directory.
-    wr(spark.read.parquet(s"$dst/lineitem.parquet")
-      .withColumn("l_suppkey",
-        when(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(5)) === 0,
-          lit(1L)).otherwise(col("l_suppkey"))),
-      "lineitem_skew")
 
     // embeddings: deterministic per-component jitter for copies > 0 so
     // no cross-copy vector is an exact duplicate (±0.05, hash-keyed)

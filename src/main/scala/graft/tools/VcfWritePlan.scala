@@ -1,22 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev plan dump (r20): the VCF export's WRITE-side frame — the lines
   * DataFrame handed to `.write.text` — which Explain cannot show (the
   * write runs inside the sink keys' builders). Args: [sfDir]. */
 object VcfWritePlan {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val lines = graft.varda.Annotate.toVcfLines(
       graft.varda.VardaOps.annotateFrame(spark, sfDir))
     println("===== sink_vcf write-side lines frame =====")

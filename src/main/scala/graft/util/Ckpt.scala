@@ -40,7 +40,14 @@ object Ckpt {
 
   /** Lazily checkpoint `df` under the session's configured regime (see
     * object scaladoc). Always lazy: materialization happens inside the
-    * first job that executes the frame — never a hidden driver action. */
+    * first job that executes the frame — never a hidden driver action.
+    *
+    * In `reliable` mode the checkpoint dir belongs to the SparkContext
+    * and is set once, by the first caller whose context has none: a
+    * later session on the same context with a different
+    * `spark.graft.scratchDir` reuses that first dir. Nothing here
+    * deletes checkpoint data under `<dir>/<applicationId>/ckpt`; a
+    * long-lived process owns that cleanup. */
   def narrow[T](df: Dataset[T]): Dataset[T] = {
     val sess = df.sparkSession
     sess.conf.get("spark.graft.checkpoint", "local") match {

@@ -49,7 +49,11 @@ object Annotate {
     * data lines distributed (one part per partition, sorted within the
     * frame before write) plus a `00_header.vcf` part carrying the
     * `##fileformat` / `##INFO` / `#CHROM` header — readers that list the
-    * directory see one valid sites-only VCF. */
+    * directory see one valid sites-only VCF. The data lines are
+    * coordinate-sorted WITHIN each part only: parts come from a
+    * hash-partitioned join, so their ranges interleave, and a consumer
+    * that needs whole-file coordinate order (tabix indexing) must
+    * re-sort. */
   def writeAnnotatedVcf(spark: SparkSession, sfDir: String, outDir: String): Unit =
     // annotateFrame, not vardaAnnotate: the export needs per-partition
     // order only (the writer sorts within partitions); the declared

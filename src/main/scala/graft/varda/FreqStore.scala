@@ -241,7 +241,7 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     // monitor, and the scheduler planning a sibling job over the SAME
     // shared frame holds that RDD monitor while reading checkpointRDD
     // under the companion lock (JVM-reported deadlock, caught live in a
-    // BenchOne run). Cached blocks give the same compute-once sharing
+    // round-12 single-key timing run). Cached blocks give the same compute-once sharing
     // through the BlockManager's per-block locks with no global
     // transition — and recompute on block loss instead of failing the
     // job, which is what a 1000-executor deployment wants anyway. All

@@ -742,7 +742,7 @@ object VardaOps {
     root.mkdirs()
     // sweep prior invocations' run dirs (this key's scratch is
     // exclusively its own; within one session invocations are
-    // sequential — Verify/Bench/RatioBench all run keys serially)
+    // sequential — Verify and Bench run keys serially)
     Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
       def rm(x: java.io.File): Unit = {
         Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)

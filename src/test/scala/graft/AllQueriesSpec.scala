@@ -26,6 +26,25 @@ class AllQueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("a key declared by two groups is an error, not a silent overwrite") {
+    val e = intercept[IllegalArgumentException](SparkEntry.disjointUnion(
+      Seq(Map("a" -> 1, "b" -> 2, "c" -> 3), Map("c" -> 4, "d" -> 5, "b" -> 6))))
+    assert(e.getMessage.endsWith(": b, c"), e.getMessage)
+    assert(SparkEntry.disjointUnion(Seq(Map("a" -> 1), Map("b" -> 2))) ==
+      Map("a" -> 1, "b" -> 2))
+  }
+
+  test("inputBytes does not cache a failed stat: a table written later reports its size") {
+    val dir = java.nio.file.Files.createTempDirectory("inputbytes").toString
+    assert(Tables.inputBytes(spark, dir, "t") == 0L)
+    spark.range(1000).write.parquet(s"$dir/t.parquet")
+    val p = new org.apache.hadoop.fs.Path(s"$dir/t.parquet")
+    val size = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
+    assert(size > 0L)
+    assert(Tables.inputBytes(spark, dir, "t") == size)
+  }
+
   test("agg_comoments sufficient statistics reproduce Spark's corr()") {
     import org.apache.spark.sql.functions.{col, corr}
     val m = ops.Aggs.aggComoments(spark, sf0001).collect()

@@ -68,9 +68,9 @@ class SkewSpec extends AnyFunSuite {
   }
 
   test("planted-skew corpus: the salted plan spreads the hot supplier 8 ways") {
-    // round-13 (VERDICT #6): the SAME plant GenScale writes at sf1 —
-    // one hot supplier key in ~20% of lineitem — built here at sf0.001.
-    // BENCH_SKEW_SF1.json records the measured effect one decade up
+    // round-13 (VERDICT #6): the plant BENCH_SKEW_SF1.json measured at
+    // sf1 — one hot supplier key in ~20% of lineitem — built here at
+    // sf0.001. That artifact records the effect one decade up
     // (max/p50 task ms: unsalted ~7×, salted ~2×; AQE's skew split
     // cannot fire at this size — the hot partition is far below its
     // 256 MB threshold, which is exactly the regime salting is for).

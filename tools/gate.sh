@@ -1,6 +1,8 @@
 #!/bin/bash
 # Full local gate: oracle parity at all scales + tests + bench.
-set -e
+# pipefail: an oracle mismatch (check.py exits 1) fails the gate even
+# though its output is piped through tail.
+set -eo pipefail
 cd /root/repo
 for sf in sf0.001 sf0.01 sf0.1; do
   sbt -batch "runMain graft.Verify /root/testdata/$sf target/verify_$sf" 2>&1 | grep -E "\[verify\]" || true
