@@ -283,7 +283,11 @@ object Aggs {
     * contain a wanted rank. Both forms assign byte-identical ranks
     * (r19, oracle-verified at every scale), so the gate never changes
     * the result. Default 64 MB sits above the r20 sf1 measurement point
-    * (see OPTIMIZATION_r20.md — the crossover measured there). */
+    * (see OPTIMIZATION_r20.md — the crossover measured there). Below
+    * GlobalRank's own small-input threshold
+    * (`spark.graft.globalRank.localMaxBytes`, 8 MB) both branches run
+    * the same single `row_number` window over the events, so this gate
+    * only chooses between the two chunked forms. */
   private def useRankSelect(s: org.apache.spark.sql.SparkSession,
       d: String): Boolean = {
     val thresh = s.conf

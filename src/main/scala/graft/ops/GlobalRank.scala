@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Distributed global ranking — the 100 TB path for analytic ranks over a
   * whole table.
@@ -27,11 +29,41 @@ import org.apache.spark.sql.functions._
   *
   * Requires a TOTAL order (add a unique tiebreak column, as all declared
   * rank queries here already do): with a total order, row_number, rank
-  * and dense_rank coincide and percent_rank/cume_dist derive directly. */
+  * and dense_rank coincide and percent_rank/cume_dist derive directly.
+  *
+  * '''Small inputs take one plain window.''' Every entry point first asks
+  * [[local]]: the input bytes of the leaves of `df`'s analyzed plan (a
+  * file relation counts its already-listed `location.sizeInBytes`, any
+  * other leaf its Catalyst `stats.sizeInBytes`; no job, no optimizer
+  * pass) summed and compared with `spark.graft.globalRank.localMaxBytes`
+  * (default 8 MB). Below it, the entry point runs ONE Spark window —
+  * `Window.orderBy(keys)` or `Window.partitionBy(groupCols)`, with a
+  * `rowsBetween(unboundedPreceding, currentRow)` frame for running sums
+  * and maxes — instead of the chunk, offset and broadcast machinery,
+  * whose fixed cost dominates at that size: counted through
+  * `tools.ProfKeys` at sf0.01, win_global_rank runs 6 jobs, 9 stages and
+  * 16 freshly generated classes chunked against 2, 3 and 4 as one
+  * window. A leaf of unknown size (an RDD scan without origin stats)
+  * always takes the chunked form; `localMaxBytes=0` forces it — the
+  * key exists for that, so tests and `tools/gate.sh` can check the
+  * chunked form on small fixtures; no caller tunes it. 8 MB sits inside
+  * the measured range: in warm `tools.ProfKeys` reps (4-vCPU VM) one
+  * window beat the chunked form on win_global_rank, agg_quartiles,
+  * varda_frequency and varda_coverage_depth both at sf0.1 (`events` and
+  * `orders`, 2.0 and 2.7 MB) and with those tables copied 5 and 4 times
+  * (10.2 and 10.9 MB, above the threshold).
+  *
+  * Schema contract: both forms return the same columns in the same
+  * order, with the same names, types and nullability — so a caller can
+  * never tell which one ran. Row numbers are BIGINT NOT NULL on both
+  * (the local `row_number()` is cast up from INT); a running sum has the
+  * chunked form's `offset + local` type (the local sum is cast to it);
+  * a running max has the value's own type on both. */
 object GlobalRank {
 
   /** Append `out` = global 1-based rank of each row under `keys` (must be
-    * a total order). Distributed: no global single-partition window.
+    * a total order). Above the [[local]] threshold it is distributed: no
+    * global single-partition window.
     *
     * Chunk assignment is DETERMINISTIC BY CONSTRUCTION (round-7; replaces
     * a `localCheckpoint` of the full-width table): the chunk id derives
@@ -59,22 +91,24 @@ object GlobalRank {
     * sorts largest. Requires a deterministic input (both branches
     * re-evaluate `df` — true of every non-checkpointing formulation). */
   def withGlobalRowNumber(df: DataFrame, keys: Seq[Column], out: String,
-      numPartitions: Int = 0): DataFrame = {
-    val bucketed = withChunkId(df, keys, numPartitions)
-    val localW = Window.partitionBy("__gr_pid").orderBy(keys: _*)
-    val local = bucketed.withColumn("__gr_local", row_number().over(localW))
-    // O(chunks) rows from a key-column-pruned scan: cumulative count of
-    // all chunks before pid
-    val offsets = bucketed.groupBy("__gr_pid").count()
-      .withColumn("__gr_offset",
-        coalesce(sum(col("count")).over(
-          Window.orderBy("__gr_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__gr_pid"), col("__gr_offset"))
-    local.join(broadcast(offsets), "__gr_pid")
-      .withColumn(out, col("__gr_offset") + col("__gr_local"))
-      .drop("__gr_pid", "__gr_local", "__gr_offset")
-  }
+      numPartitions: Int = 0): DataFrame =
+    if (local(df)) localRowNumber(df, Nil, keys, out)
+    else {
+      val bucketed = withChunkId(df, keys, numPartitions)
+      val localW = Window.partitionBy("__gr_pid").orderBy(keys: _*)
+      val local = bucketed.withColumn("__gr_local", row_number().over(localW))
+      // O(chunks) rows from a key-column-pruned scan: cumulative count of
+      // all chunks before pid
+      val offsets = bucketed.groupBy("__gr_pid").count()
+        .withColumn("__gr_offset",
+          coalesce(sum(col("count")).over(
+            Window.orderBy("__gr_pid")
+              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .select(col("__gr_pid"), col("__gr_offset"))
+      local.join(broadcast(offsets), "__gr_pid")
+        .withColumn(out, col("__gr_offset") + col("__gr_local"))
+        .drop("__gr_pid", "__gr_local", "__gr_offset")
+    }
 
   /** Append `out` = 1-based rank within each `groupCols` group under the
     * total order `keys` — the PER-GROUP sibling of [[withGlobalRowNumber]]
@@ -95,23 +129,25 @@ object GlobalRank {
     * never over data rows. */
   def withGroupedRowNumber(df: DataFrame, groupCols: Seq[String],
       keys: Seq[Column], out: String, chunkKey: Option[Column] = None,
-      numPartitions: Int = 0): DataFrame = {
-    val gcols = groupCols.map(col)
-    val bucketed = withGroupedChunkId(df, groupCols, keys, chunkKey,
-      numPartitions)
-    val localW = Window.partitionBy(gcols :+ col("__gr_pid"): _*)
-      .orderBy(keys: _*)
-    val local = bucketed.withColumn("__gr_local", row_number().over(localW))
-    val offsets = bucketed.groupBy(gcols :+ col("__gr_pid"): _*).count()
-      .withColumn("__gr_offset",
-        coalesce(sum(col("count")).over(
-          Window.partitionBy(gcols: _*).orderBy("__gr_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(gcols :+ col("__gr_pid") :+ col("__gr_offset"): _*)
-    nullSafeBroadcastJoin(local, offsets, groupCols :+ "__gr_pid")
-      .withColumn(out, col("__gr_offset") + col("__gr_local"))
-      .drop("__gr_pid", "__gr_local", "__gr_offset")
-  }
+      numPartitions: Int = 0): DataFrame =
+    if (local(df)) localRowNumber(df, groupCols, keys, out)
+    else {
+      val gcols = groupCols.map(col)
+      val bucketed = withGroupedChunkId(df, groupCols, keys, chunkKey,
+        numPartitions)
+      val localW = Window.partitionBy(gcols :+ col("__gr_pid"): _*)
+        .orderBy(keys: _*)
+      val local = bucketed.withColumn("__gr_local", row_number().over(localW))
+      val offsets = bucketed.groupBy(gcols :+ col("__gr_pid"): _*).count()
+        .withColumn("__gr_offset",
+          coalesce(sum(col("count")).over(
+            Window.partitionBy(gcols: _*).orderBy("__gr_pid")
+              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .select(gcols :+ col("__gr_pid") :+ col("__gr_offset"): _*)
+      nullSafeBroadcastJoin(local, offsets, groupCols :+ "__gr_pid")
+        .withColumn(out, col("__gr_offset") + col("__gr_local"))
+        .drop("__gr_pid", "__gr_local", "__gr_offset")
+    }
 
   /** The rows of each `groupCols` group at caller-chosen in-group RANKS
     * (1-based, under the total order `keys`) — the order-statistics
@@ -138,38 +174,39 @@ object GlobalRank {
       wanted: DataFrame => DataFrame, chunkKey: Option[Column] = None,
       numPartitions: Int = 0): DataFrame = {
     val gcols = groupCols.map(col)
-    val bucketed = withGroupedChunkId(df, groupCols, keys, chunkKey,
-      numPartitions)
-    // O(groups × chunks); referenced by the offsets window AND the
-    // per-group totals — materialize once instead of re-running the
-    // count aggregate (and its scan) per reference
-    val chunkCounts = graft.util.Ckpt.narrow(
-      bucketed.groupBy(gcols :+ col("__gr_pid"): _*).count())
-    val withOff = chunkCounts
-      .withColumn("__gr_offset",
-        coalesce(sum(col("count")).over(
-          Window.partitionBy(gcols: _*).orderBy("__gr_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val nPer = chunkCounts.groupBy(gcols: _*)
-      .agg(sum(col("count")).as("n"))
-    val want = wanted(nPer)
-    def nullSafeOn(l: DataFrame, r: DataFrame, cs: Seq[String],
-        extra: Column): DataFrame = {
-      val rr = cs.foldLeft(r)((d, c) => d.withColumnRenamed(c, s"__gr_w_$c"))
-      l.join(broadcast(rr),
-        cs.map(c => col(c) <=> col(s"__gr_w_$c")).reduce(_ && _) && extra)
+    val (ranked, nPer, want) = if (local(df)) {
+      // sum, not count: the chunked `n` (a sum of chunk counts) is nullable
+      val nPer = df.groupBy(gcols: _*).agg(sum(lit(1L)).as("n"))
+      (localRowNumber(df, groupCols, keys, out), nPer, wanted(nPer))
+    } else {
+      val bucketed = withGroupedChunkId(df, groupCols, keys, chunkKey,
+        numPartitions)
+      // O(groups × chunks); referenced by the offsets window AND the
+      // per-group totals — materialize once instead of re-running the
+      // count aggregate (and its scan) per reference
+      val chunkCounts = graft.util.Ckpt.narrow(
+        bucketed.groupBy(gcols :+ col("__gr_pid"): _*).count())
+      val withOff = chunkCounts
+        .withColumn("__gr_offset",
+          coalesce(sum(col("count")).over(
+            Window.partitionBy(gcols: _*).orderBy("__gr_pid")
+              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      val nPer = chunkCounts.groupBy(gcols: _*)
+        .agg(sum(col("count")).as("n"))
+      val want = wanted(nPer)
+      // chunks whose global-rank interval contains a wanted rank
+      val needed = nullSafeOn(withOff, want, groupCols,
+          col("__gr_want") > col("__gr_offset") &&
+            col("__gr_want") <= col("__gr_offset") + col("count"))
+        .select(gcols :+ col("__gr_pid") :+ col("__gr_offset"): _*)
+        .distinct()
+      val localW = Window.partitionBy(gcols :+ col("__gr_pid"): _*)
+        .orderBy(keys: _*)
+      val ranked = nullSafeBroadcastJoin(bucketed, needed,
+          groupCols :+ "__gr_pid")
+        .withColumn(out, col("__gr_offset") + row_number().over(localW))
+      (ranked, nPer, want)
     }
-    // chunks whose global-rank interval contains a wanted rank
-    val needed = nullSafeOn(withOff, want, groupCols,
-        col("__gr_want") > col("__gr_offset") &&
-          col("__gr_want") <= col("__gr_offset") + col("count"))
-      .select(gcols :+ col("__gr_pid") :+ col("__gr_offset"): _*)
-      .distinct()
-    val localW = Window.partitionBy(gcols :+ col("__gr_pid"): _*)
-      .orderBy(keys: _*)
-    val ranked = nullSafeBroadcastJoin(bucketed, needed,
-        groupCols :+ "__gr_pid")
-      .withColumn(out, col("__gr_offset") + row_number().over(localW))
     // keep exactly the wanted ranks; attach the group's row count
     val sel = nullSafeOn(ranked, want.select(gcols :+ col("__gr_want"): _*)
         .distinct(), groupCols, col(out) === col("__gr_want"))
@@ -185,7 +222,10 @@ object GlobalRank {
     * [[withGroupedRowNumber]]: every group splits into arithmetic
     * chunks, so a low-cardinality group key (22 chromosomes, 5
     * languages) never serializes into one task per group. `value` must
-    * be exact-arithmetic (integer/decimal) for a deterministic result. */
+    * be exact-arithmetic (integer/decimal) for a deterministic result,
+    * and non-null: a chunk's running sum stays null until its first
+    * non-null value, so the chunked form would depend on where chunks
+    * begin (the [[local]] window simply skips nulls). */
   def withGroupedRunningSum(df: DataFrame, groupCols: Seq[String],
       keys: Seq[Column], value: Column, out: String,
       chunkKey: Option[Column] = None, numPartitions: Int = 0): DataFrame =
@@ -205,30 +245,8 @@ object GlobalRank {
       keys: Seq[Column], values: Seq[(Column, String)],
       chunkKey: Option[Column] = None, numPartitions: Int = 0): DataFrame = {
     require(values.nonEmpty, "withGroupedRunningSums needs >= 1 (value, out) pair")
-    val gcols = groupCols.map(col)
-    val idx = values.indices
-    val tagged = idx.foldLeft(df)((d, i) =>
-      d.withColumn(s"__gr_val$i", values(i)._1))
-    val bucketed = withGroupedChunkId(tagged, groupCols, keys, chunkKey,
-      numPartitions)
-    val localW = Window.partitionBy(gcols :+ col("__gr_pid"): _*)
-      .orderBy(keys: _*).rowsBetween(Window.unboundedPreceding, 0)
-    val local = idx.foldLeft(bucketed)((d, i) =>
-      d.withColumn(s"__gr_local$i", sum(col(s"__gr_val$i")).over(localW)))
-    val offW = Window.partitionBy(gcols: _*).orderBy("__gr_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val tots = idx.map(i => sum(col(s"__gr_val$i")).as(s"__gr_tot$i"))
-    val offsets = bucketed.groupBy(gcols :+ col("__gr_pid"): _*)
-      .agg(tots.head, tots.tail: _*)
-      .select(gcols ++ Seq(col("__gr_pid")) ++ idx.map(i =>
-        coalesce(sum(col(s"__gr_tot$i")).over(offW), lit(0L))
-          .as(s"__gr_offset$i")): _*)
-    val joined = nullSafeBroadcastJoin(local, offsets, groupCols :+ "__gr_pid")
-    idx.foldLeft(joined)((d, i) =>
-        d.withColumn(values(i)._2,
-          col(s"__gr_offset$i") + col(s"__gr_local$i")))
-      .drop("__gr_pid" +: idx.flatMap(i =>
-        Seq(s"__gr_local$i", s"__gr_offset$i", s"__gr_val$i")): _*)
+    groupedRunning(df, groupCols, keys, values, chunkKey, numPartitions,
+      SumMonoid)
   }
 
   /** Append `out` = inclusive running MAX of `value` within each
@@ -257,29 +275,105 @@ object GlobalRank {
       keys: Seq[Column], values: Seq[(Column, String)],
       chunkKey: Option[Column] = None, numPartitions: Int = 0): DataFrame = {
     require(values.nonEmpty, "withGroupedRunningMaxes needs >= 1 (value, out) pair")
-    val gcols = groupCols.map(col)
+    groupedRunning(df, groupCols, keys, values, chunkKey, numPartitions,
+      MaxMonoid)
+  }
+
+  /** How a running aggregate folds: `agg` is the per-row aggregate (also
+    * the per-chunk total), `prefix` turns the exclusive window over the
+    * chunk totals into a chunk's offset, and `combine(offset, local)` is
+    * a row's output. */
+  private case class Monoid(agg: Column => Column, prefix: Column => Column,
+      combine: (Column, Column) => Column)
+  private val SumMonoid = Monoid(sum(_), coalesce(_, lit(0L)), _ + _)
+  private val MaxMonoid = Monoid(max(_), identity, greatest(_, _))
+
+  /** The body of [[withGroupedRunningSums]] and [[withGroupedRunningMaxes]]:
+    * per-chunk local running aggregates plus an O(groups × chunks)
+    * offsets broadcast, or one partition-by-group window on the
+    * [[local]] path. */
+  private def groupedRunning(df: DataFrame, groupCols: Seq[String],
+      keys: Seq[Column], values: Seq[(Column, String)],
+      chunkKey: Option[Column], numPartitions: Int, m: Monoid): DataFrame =
+    if (local(df)) localRunning(df, groupCols, keys, values, m)
+    else {
+      val gcols = groupCols.map(col)
+      val idx = values.indices
+      val tagged = idx.foldLeft(df)((d, i) =>
+        d.withColumn(s"__gr_val$i", values(i)._1))
+      val bucketed = withGroupedChunkId(tagged, groupCols, keys, chunkKey,
+        numPartitions)
+      val localW = Window.partitionBy(gcols :+ col("__gr_pid"): _*)
+        .orderBy(keys: _*).rowsBetween(Window.unboundedPreceding, 0)
+      val local = idx.foldLeft(bucketed)((d, i) =>
+        d.withColumn(s"__gr_local$i", m.agg(col(s"__gr_val$i")).over(localW)))
+      val offW = Window.partitionBy(gcols: _*).orderBy("__gr_pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val tots = idx.map(i => m.agg(col(s"__gr_val$i")).as(s"__gr_tot$i"))
+      val offsets = bucketed.groupBy(gcols :+ col("__gr_pid"): _*)
+        .agg(tots.head, tots.tail: _*)
+        .select(gcols ++ Seq(col("__gr_pid")) ++ idx.map(i =>
+          m.prefix(m.agg(col(s"__gr_tot$i")).over(offW))
+            .as(s"__gr_offset$i")): _*)
+      val joined = nullSafeBroadcastJoin(local, offsets, groupCols :+ "__gr_pid")
+      idx.foldLeft(joined)((d, i) =>
+          d.withColumn(values(i)._2,
+            m.combine(col(s"__gr_offset$i"), col(s"__gr_local$i"))))
+        .drop("__gr_pid" +: idx.flatMap(i =>
+          Seq(s"__gr_local$i", s"__gr_offset$i", s"__gr_val$i")): _*)
+    }
+
+  /** The [[local]] form of the running aggregates: one window with a
+    * `rowsBetween(unboundedPreceding, currentRow)` frame per value, each
+    * cast to the chunked form's `combine(offset, local)` type — that type
+    * is read off a schema-only frame the analyzer resolves without a job.
+    * Values and sums land in temporaries first, as on the chunked path, so
+    * an output that reuses an input's name never feeds another output. */
+  private def localRunning(df: DataFrame, groupCols: Seq[String],
+      keys: Seq[Column], values: Seq[(Column, String)], m: Monoid): DataFrame = {
     val idx = values.indices
     val tagged = idx.foldLeft(df)((d, i) =>
       d.withColumn(s"__gr_val$i", values(i)._1))
-    val bucketed = withGroupedChunkId(tagged, groupCols, keys, chunkKey,
-      numPartitions)
-    val localW = Window.partitionBy(gcols :+ col("__gr_pid"): _*)
-      .orderBy(keys: _*).rowsBetween(Window.unboundedPreceding, 0)
-    val local = idx.foldLeft(bucketed)((d, i) =>
-      d.withColumn(s"__gr_local$i", max(col(s"__gr_val$i")).over(localW)))
-    val offW = Window.partitionBy(gcols: _*).orderBy("__gr_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val tots = idx.map(i => max(col(s"__gr_val$i")).as(s"__gr_tot$i"))
-    val offsets = bucketed.groupBy(gcols :+ col("__gr_pid"): _*)
-      .agg(tots.head, tots.tail: _*)
-      .select(gcols ++ Seq(col("__gr_pid")) ++
-        idx.map(i => max(col(s"__gr_tot$i")).over(offW).as(s"__gr_offset$i")): _*)
-    val joined = nullSafeBroadcastJoin(local, offsets, groupCols :+ "__gr_pid")
-    idx.foldLeft(joined)((d, i) =>
-        d.withColumn(values(i)._2,
-          greatest(col(s"__gr_offset$i"), col(s"__gr_local$i"))))
-      .drop("__gr_pid" +: idx.flatMap(i =>
-        Seq(s"__gr_local$i", s"__gr_offset$i", s"__gr_val$i")): _*)
+    val tots = idx.map(i => m.agg(col(s"__gr_val$i")).as(s"__gr_tot$i"))
+    val types = tagged.agg(tots.head, tots.tail: _*)
+      .select(idx.map(i => m.combine(
+        m.prefix(m.agg(col(s"__gr_tot$i")).over()), col(s"__gr_tot$i"))): _*)
+      .schema.map(_.dataType)
+    val w = Window.partitionBy(groupCols.map(col): _*).orderBy(keys: _*)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val local = idx.foldLeft(tagged)((d, i) => d.withColumn(s"__gr_local$i",
+      m.agg(col(s"__gr_val$i")).over(w).cast(types(i))))
+    idx.foldLeft(local)((d, i) => d.withColumn(values(i)._2, col(s"__gr_local$i")))
+      .drop(idx.flatMap(i => Seq(s"__gr_local$i", s"__gr_val$i")): _*)
+  }
+
+  /** The [[local]] form of the row numbers: one `row_number` window, cast
+    * to the chunked form's BIGINT. */
+  private def localRowNumber(df: DataFrame, groupCols: Seq[String],
+      keys: Seq[Column], out: String): DataFrame =
+    df.withColumn(out, row_number().over(
+      Window.partitionBy(groupCols.map(col): _*).orderBy(keys: _*))
+      .cast(LongType))
+
+  /** True when `df` is small enough for one plain Spark window (object
+    * scaladoc): the input bytes of the leaves of its analyzed plan sum to
+    * less than `spark.graft.globalRank.localMaxBytes` (default 8 MB, the
+    * multiSweep gate's default; 0 forces the chunked form). A file
+    * relation counts its file index's `sizeInBytes`, listed when the
+    * relation was resolved; any other leaf counts its Catalyst
+    * `stats.sizeInBytes` — no job and no optimizer pass. A leaf of
+    * unknown size (an RDD scan without origin stats) reports
+    * `spark.sql.defaultSizeInBytes`, `Long.MaxValue` unless set, so the
+    * sum never falls below any threshold. */
+  private[graft] def local(df: DataFrame): Boolean = {
+    val maxBytes = df.sparkSession.conf
+      .get("spark.graft.globalRank.localMaxBytes", (8L << 20).toString).toLong
+    val sizes = df.queryExecution.analyzed.collectLeaves().map {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        BigInt(fs.location.sizeInBytes)
+      case leaf => leaf.stats.sizeInBytes
+    }
+    sizes.sum < maxBytes
   }
 
   /** Broadcast inner join on `keys` with NULL-SAFE equality (`<=>`):
@@ -293,6 +387,15 @@ object GlobalRank {
     val r = keys.foldLeft(right)((d, c) => d.withColumnRenamed(c, s"__gr_r_$c"))
     val cond = keys.map(c => col(c) <=> col(s"__gr_r_$c")).reduce(_ && _)
     left.join(broadcast(r), cond).drop(keys.map(c => s"__gr_r_$c"): _*)
+  }
+
+  /** Broadcast inner join of `l` and `r` on null-safe equality of `cs`
+    * plus `extra`; keeps `r`'s copies of `cs` as `__gr_w_<c>`. */
+  private def nullSafeOn(l: DataFrame, r: DataFrame, cs: Seq[String],
+      extra: Column): DataFrame = {
+    val rr = cs.foldLeft(r)((d, c) => d.withColumnRenamed(c, s"__gr_w_$c"))
+    l.join(broadcast(rr),
+      cs.map(c => col(c) <=> col(s"__gr_w_$c")).reduce(_ && _) && extra)
   }
 
   /** Shared per-group deterministic chunk assignment: `__gr_pid` derives
@@ -340,23 +443,25 @@ object GlobalRank {
     * a deterministic result — float prefix sums are order-fragile by
     * nature, which is exactly what the declared queries avoid. */
   def withGlobalRunningSum(df: DataFrame, keys: Seq[Column], value: Column,
-      out: String, numPartitions: Int = 0): DataFrame = {
-    val bucketed = withChunkId(df.withColumn("__gr_val", value), keys,
-      numPartitions)
-    val localW = Window.partitionBy("__gr_pid").orderBy(keys: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = bucketed.withColumn("__gr_local", sum(col("__gr_val")).over(localW))
-    val offsets = bucketed.groupBy("__gr_pid")
-      .agg(sum(col("__gr_val")).as("__gr_tot"))
-      .withColumn("__gr_offset",
-        coalesce(sum(col("__gr_tot")).over(
-          Window.orderBy("__gr_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__gr_pid"), col("__gr_offset"))
-    local.join(broadcast(offsets), "__gr_pid")
-      .withColumn(out, col("__gr_offset") + col("__gr_local"))
-      .drop("__gr_pid", "__gr_local", "__gr_offset", "__gr_val")
-  }
+      out: String, numPartitions: Int = 0): DataFrame =
+    if (local(df)) localRunning(df, Nil, keys, Seq(value -> out), SumMonoid)
+    else {
+      val bucketed = withChunkId(df.withColumn("__gr_val", value), keys,
+        numPartitions)
+      val localW = Window.partitionBy("__gr_pid").orderBy(keys: _*)
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val local = bucketed.withColumn("__gr_local", sum(col("__gr_val")).over(localW))
+      val offsets = bucketed.groupBy("__gr_pid")
+        .agg(sum(col("__gr_val")).as("__gr_tot"))
+        .withColumn("__gr_offset",
+          coalesce(sum(col("__gr_tot")).over(
+            Window.orderBy("__gr_pid")
+              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .select(col("__gr_pid"), col("__gr_offset"))
+      local.join(broadcast(offsets), "__gr_pid")
+        .withColumn(out, col("__gr_offset") + col("__gr_local"))
+        .drop("__gr_pid", "__gr_local", "__gr_offset", "__gr_val")
+    }
 
   /** The shared deterministic chunk assignment (scaladoc on
     * [[withGlobalRowNumber]]): `__gr_pid` derives arithmetically from the

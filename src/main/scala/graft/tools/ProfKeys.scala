@@ -1,12 +1,16 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** Per-key layer profile. For each key and rep it prints the builder call
   * (`build_s`), physical planning (`plan_s`, `queryExecution.executedPlan`),
   * execution (`exec_s`, `count()`), `rows`, the `jobs`, `stages` and
-  * `tasks` the rep ran, and `driver_gap_s`: rep wall time no job covered.
+  * `tasks` the rep ran, `driver_gap_s` (rep wall time no job covered) and
+  * `compiles`: the classes Spark's code generator compiled during the rep
+  * (the JVM-wide generated-class cache holds 100, so a warm working set
+  * larger than that recompiles on every rep).
   * The last stdout line is one JSON object holding each key's last (warm)
   * rep. For an AQE-off profile pass
   * `EXTRA_JAVA_OPTS=-Dspark.sql.adaptive.enabled=false`.
@@ -46,6 +50,7 @@ object ProfKeys {
       val fn = graft.SparkEntry.queries(key)
       key -> (1 to reps).map { rep =>
         jobs.synchronized { jobs.clear(); stageJob.clear() }
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val w0 = System.currentTimeMillis()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
@@ -55,6 +60,7 @@ object ProfKeys {
         val rows = df.count()
         val t3 = System.nanoTime()
         val w1 = System.currentTimeMillis()
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         Thread.sleep(300) // let the listener bus drain
         val js = jobs.synchronized(jobs.values.toSeq)
         // union of the job spans inside the rep: overlapping jobs count once
@@ -70,7 +76,8 @@ object ProfKeys {
           "exec_s" -> sec(t2, t3), "rows" -> rows.toString,
           "jobs" -> js.size.toString, "stages" -> js.map(_.stages).sum.toString,
           "tasks" -> js.map(_.tasks).sum.toString,
-          "driver_gap_s" -> f"${(w1 - w0 - covered) / 1e3}%.3f")
+          "driver_gap_s" -> f"${(w1 - w0 - covered) / 1e3}%.3f",
+          "compiles" -> compiles.toString)
         println(s"[profkeys] $key rep$rep " +
           fields.map { case (k, v) => s"$k=$v" }.mkString(" "))
         fields

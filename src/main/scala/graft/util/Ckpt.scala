@@ -45,21 +45,39 @@ object Ckpt {
     * In `reliable` mode the checkpoint dir belongs to the SparkContext
     * and is set once, by the first caller whose context has none: a
     * later session on the same context with a different
-    * `spark.graft.scratchDir` reuses that first dir. Nothing here
-    * deletes checkpoint data under `<dir>/<applicationId>/ckpt`; a
-    * long-lived process owns that cleanup. */
+    * `spark.graft.scratchDir` reuses that first dir, and says so once on
+    * stderr ([[foreignDirWarning]]). Nothing here deletes checkpoint
+    * data under `<dir>/<applicationId>/ckpt`; a long-lived process owns
+    * that cleanup. */
   def narrow[T](df: Dataset[T]): Dataset[T] = {
     val sess = df.sparkSession
     sess.conf.get("spark.graft.checkpoint", "local") match {
       case "reliable" =>
         val sc = sess.sparkContext
-        if (sc.getCheckpointDir.isEmpty) {
-          val base = sess.conf.getOption("spark.graft.scratchDir")
-            .getOrElse(sys.props("java.io.tmpdir") + "/graft-scratch")
-          sc.setCheckpointDir(s"$base/${sc.applicationId}/ckpt")
+        val base = sess.conf.getOption("spark.graft.scratchDir")
+          .getOrElse(sys.props("java.io.tmpdir") + "/graft-scratch")
+        sc.getCheckpointDir match {
+          case None => sc.setCheckpointDir(s"$base/${sc.applicationId}/ckpt")
+          case Some(dir) => foreignDirWarning(dir, base).foreach { msg =>
+            if (warned.putIfAbsent((dir, base), ()).isEmpty) System.err.println(msg)
+          }
         }
         df.checkpoint(eager = false)
       case _ => df.localCheckpoint(eager = false)
     }
+  }
+
+  private val warned = scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
+
+  /** The line [[narrow]] prints when the context's checkpoint dir `dir`
+    * is not under this session's scratch dir `base`; None when it is.
+    * Compares the paths of both (scheme and authority dropped, a relative
+    * path taken from the working directory), component by component. */
+  private[graft] def foreignDirWarning(dir: String, base: String): Option[String] = {
+    def norm(p: String): java.nio.file.Path = java.nio.file.Paths
+      .get(new org.apache.hadoop.fs.Path(p).toUri.getPath).toAbsolutePath.normalize
+    if (norm(dir).startsWith(norm(base))) None
+    else Some(s"[ckpt] reliable checkpoints go to the context's dir $dir, " +
+      s"not under this session's scratch dir $base")
   }
 }

@@ -36,4 +36,16 @@ class CkptSpec extends AnyFunSuite {
       "reliable checkpoint must write under the checkpoint dir")
     Tables.releaseSession(s2)
   }
+
+  test("a checkpoint dir outside the session's scratch dir is named, not reused silently") {
+    import util.Ckpt.foreignDirWarning
+    val base = "/tmp/graft-scratch"
+    assert(foreignDirWarning("file:/tmp/graft-scratch/app-1/ckpt/0f3a", base).isEmpty)
+    assert(foreignDirWarning("/tmp/graft-scratch/app-1/ckpt", base + "/").isEmpty)
+    assert(foreignDirWarning("file:/tmp/graft-scratch", base).isEmpty)
+    val msg = foreignDirWarning("file:/data/ckpt/0f3a", base)
+    assert(msg.exists(m => m.contains("file:/data/ckpt/0f3a") && m.contains(base)), msg)
+    // a sibling that shares the prefix is not under the base
+    assert(foreignDirWarning("file:/tmp/graft-scratch2/app-1/ckpt", base).nonEmpty)
+  }
 }

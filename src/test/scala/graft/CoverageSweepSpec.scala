@@ -37,25 +37,32 @@ class CoverageSweepSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.lit(1)).as("n_regions"),
         org.apache.spark.sql.functions.sum($"pool_size")
           .cast("long").as("total_pool"))
-    val viaSweep = VardaOps.coverageAggBySweep(obs, cov)
-    assert(rows(viaSweep) == rows(viaJoin.select(
-      $"obs_id", $"n_regions", $"total_pool")))
-    // spot-pin the boundaries
-    val m = rows(viaSweep).map(t => t._1 -> ((t._2, t._3))).toMap
-    assert(m(1L) == ((2L, 7L)))
-    assert(m(2L) == ((1L, 2L)))
-    assert(m(3L) == ((2L, 7L)))
-    assert(m(4L) == ((1L, 5L)))
-    assert(!m.contains(5L) && !m.contains(7L))
-    assert(m(6L) == ((1L, 7L)))
+    // both sides of GlobalRank's size gate: these rows run the one-window
+    // sweep by default, the chunked running sums under localMaxBytes=0
+    def check(): Unit = {
+      val viaSweep = VardaOps.coverageAggBySweep(obs, cov)
+      assert(rows(viaSweep) == rows(viaJoin.select(
+        $"obs_id", $"n_regions", $"total_pool")))
+      // spot-pin the boundaries
+      val m = rows(viaSweep).map(t => t._1 -> ((t._2, t._3))).toMap
+      assert(m(1L) == ((2L, 7L)))
+      assert(m(2L) == ((1L, 2L)))
+      assert(m(3L) == ((2L, 7L)))
+      assert(m(4L) == ((1L, 5L)))
+      assert(!m.contains(5L) && !m.contains(7L))
+      assert(m(6L) == ((1L, 7L)))
+    }
+    check()
+    withLocalMaxBytes(0L)(check())
   }
 
   test("declared varda_coverage_join (sweep plan) equals the containment join on the fixture") {
     val d = "/root/testdata/sf0.001"
-    val viaKey = VardaOps.vardaCoverageJoin(spark, d).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val viaJoin = rows(VardaOps.coverageAggByJoin(
       VardaOps.obs(spark, d), VardaOps.cov(spark, d)))
-    assert(viaKey == viaJoin)
+    def viaKey() = VardaOps.vardaCoverageJoin(spark, d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(viaKey() == viaJoin)
+    assert(withLocalMaxBytes(0L)(viaKey()) == viaJoin, "chunked sweep")
   }
 }

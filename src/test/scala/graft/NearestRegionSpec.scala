@@ -44,10 +44,16 @@ class NearestRegionSpec extends AnyFunSuite {
         when(col("position").between(col("begin_pos"), col("end_pos")), 0L)
           .otherwise(greatest(col("begin_pos") - col("position"),
             col("position") - col("end_pos")))), lit(-1L)).as("nearest_dist"))
-    val swept = VardaOps.nearestRegionFrom(pts, cov)
-    assert(swept.count() == pts.count(), "one output row per distinct point")
-    // rows are unique per (chromosome, position), so set-except suffices
-    assert(swept.except(naive).count() == 0, "sweep rows missing from naive")
-    assert(naive.except(swept).count() == 0, "naive rows missing from sweep")
+    // both sides of GlobalRank's size gate: sf0.001 runs the one-window
+    // sweep by default, the chunked running max under localMaxBytes=0
+    def check(): Unit = {
+      val swept = VardaOps.nearestRegionFrom(pts, cov)
+      assert(swept.count() == pts.count(), "one output row per distinct point")
+      // rows are unique per (chromosome, position), so set-except suffices
+      assert(swept.except(naive).count() == 0, "sweep rows missing from naive")
+      assert(naive.except(swept).count() == 0, "naive rows missing from sweep")
+    }
+    check()
+    withLocalMaxBytes(0L)(check())
   }
 }

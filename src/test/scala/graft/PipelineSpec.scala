@@ -13,19 +13,23 @@ import org.scalatest.funsuite.AnyFunSuite
 class PipelineSpec extends AnyFunSuite {
   import TestSpark._
 
+  // localMaxBytes=0: at sf0.001 the default would run the very window
+  // this compares against, so force the chunked form it is meant to check
   test("withGlobalRunningSum equals the single-partition global window") {
-    val df = Tables.lineitem(spark, sf0001)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity").cast("long").as("v"))
-      .withColumn("k", col("l_orderkey") * 10 + col("l_linenumber"))
-    val dist = ops.GlobalRank
-      .withGlobalRunningSum(df, Seq(col("k"), col("v")), col("v"), "run")
-    val naive = df.withColumn("run",
-      sum(col("v")).over(Window.orderBy(col("k"), col("v"))
-        .rowsBetween(Window.unboundedPreceding, 0)))
-    assert(dist.select("k", "v", "run").except(naive.select("k", "v", "run"))
-      .isEmpty && naive.select("k", "v", "run")
-      .except(dist.select("k", "v", "run")).isEmpty)
+    withLocalMaxBytes(0L) {
+      val df = Tables.lineitem(spark, sf0001)
+        .select(col("l_orderkey"), col("l_linenumber"),
+          col("l_quantity").cast("long").as("v"))
+        .withColumn("k", col("l_orderkey") * 10 + col("l_linenumber"))
+      val dist = ops.GlobalRank
+        .withGlobalRunningSum(df, Seq(col("k"), col("v")), col("v"), "run")
+      val naive = df.withColumn("run",
+        sum(col("v")).over(Window.orderBy(col("k"), col("v"))
+          .rowsBetween(Window.unboundedPreceding, 0)))
+      assert(dist.select("k", "v", "run").except(naive.select("k", "v", "run"))
+        .isEmpty && naive.select("k", "v", "run")
+        .except(dist.select("k", "v", "run")).isEmpty)
+    }
   }
 
   test("pack_sequences: bins are contiguous and hold <= budget + one straddler") {

@@ -12,6 +12,31 @@ class PlanShapeSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
 
+  /** A test of the scale plans: `localMaxBytes=0` keeps GlobalRank off
+    * its small-input path (one plain window), which sf0.001 would take. */
+  private def chunkedTest(name: String)(body: => Any)(
+      implicit pos: org.scalactic.source.Position): Unit =
+    test(name)(withLocalMaxBytes(0L)(body))
+
+  /** Those of `keys` whose physical plan at sf0.001 holds a
+    * partition-less window with no aggregate below it. */
+  private def withGlobalWindowOverRows(keys: Seq[String]): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    keys.filter { k =>
+      val p = SparkEntry.queries(k)(spark, sf0001).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      p.exists {
+        case w: WindowExec => w.partitionSpec.isEmpty &&
+          w.child.collectFirst { case a: BaseAggregateExec => a }.isEmpty
+        case _ => false
+      }
+    }
+  }
+
   test("join_broadcast plans a BroadcastHashJoin") {
     assert(plan("join_broadcast").contains("BroadcastHashJoin"))
   }
@@ -199,7 +224,7 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("no declared query runs a global window over unaggregated data") {
+  chunkedTest("no declared query runs a global window over unaggregated data") {
     // Window.orderBy with no partition key moves ALL rows to one
     // partition — the scale-killer GlobalRank and the chunked running max
     // exist to avoid. A global window is sanctioned only above an
@@ -225,6 +250,17 @@ class PlanShapeSpec extends AnyFunSuite {
           s"$k runs a global window over unaggregated data:\n$w")
       }
     }
+  }
+
+  test("keys with a small-input global window plan none at localMaxBytes=0") {
+    // at sf0.001 GlobalRank's small-input path legitimately ranks in one
+    // single-partition window; the same keys must fall back to the
+    // chunked plans the test above checks once the gate is closed
+    val small = withGlobalWindowOverRows(SparkEntry.queries.keys.toSeq.sorted)
+    assert(small.contains("win_global_rank"),
+      s"win_global_rank should take the small-input window: $small")
+    val atScale = withLocalMaxBytes(0L)(withGlobalWindowOverRows(small))
+    assert(atScale.isEmpty, s"global windows over rows at localMaxBytes=0: $atScale")
   }
 
   test("whole-stage codegen covers the hot aggregation path") {

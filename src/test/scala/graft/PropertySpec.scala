@@ -193,27 +193,31 @@ class PropertySpec extends AnyFunSuite {
     intercept[ExprLang.ParseError](ExprLang.parse(")", tags))
   }
 
+  // localMaxBytes=0: 3000 rows sit far below the small-input threshold,
+  // where the default would compare the per-group window with itself
   test("grouped two-pass rank equals the per-group window on random skewed data") {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    // skewed groups (zipf-ish sizes), duplicate-heavy keys, negative
-    // values, and a degenerate single-value group — the chunk arithmetic
-    // must survive all of it
-    val rows = (1 to 3000).map { i =>
-      val g = "g" + (math.log(rnd.nextInt(1 << 10) + 2) / math.log(2)).toInt
-      val v = if (g == "g1") 7L else rnd.nextLong(50) - 25
-      (i.toLong, g, v)
+    withLocalMaxBytes(0L) {
+      import org.apache.spark.sql.expressions.Window
+      import spark.implicits._
+      // skewed groups (zipf-ish sizes), duplicate-heavy keys, negative
+      // values, and a degenerate single-value group — the chunk arithmetic
+      // must survive all of it
+      val rows = (1 to 3000).map { i =>
+        val g = "g" + (math.log(rnd.nextInt(1 << 10) + 2) / math.log(2)).toInt
+        val v = if (g == "g1") 7L else rnd.nextLong(50) - 25
+        (i.toLong, g, v)
+      }
+      val df = rows.toDF("id", "grp", "v")
+      val keys = Seq(col("v"), col("id"))
+      val expected = df.select(col("id"),
+          row_number().over(Window.partitionBy("grp").orderBy(keys: _*)).as("rn"))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val got = graft.ops.GlobalRank.withGroupedRowNumber(
+          df, Seq("grp"), keys, "rn", numPartitions = 7)
+        .select("id", "rn")
+        .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
+      assert(got.size == expected.size && got == expected)
     }
-    val df = rows.toDF("id", "grp", "v")
-    val keys = Seq(col("v"), col("id"))
-    val expected = df.select(col("id"),
-        row_number().over(Window.partitionBy("grp").orderBy(keys: _*)).as("rn"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val got = graft.ops.GlobalRank.withGroupedRowNumber(
-        df, Seq("grp"), keys, "rn", numPartitions = 7)
-      .select("id", "rn")
-      .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
-    assert(got.size == expected.size && got == expected)
   }
 
   test("rangeBuckets is SOUND: every in-range point's bucket is enumerated") {

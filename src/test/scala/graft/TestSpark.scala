@@ -17,6 +17,13 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+  /** Run `body` with GlobalRank's small-input threshold at `bytes`
+    * (`0`: always the chunked form; `Long.MaxValue`: one window for any
+    * input of known size). */
+  def withLocalMaxBytes[T](bytes: Long)(body: => T): T = {
+    spark.conf.set("spark.graft.globalRank.localMaxBytes", bytes.toString)
+    try body finally spark.conf.unset("spark.graft.globalRank.localMaxBytes")
+  }
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }
