@@ -287,7 +287,12 @@ object Aggs {
     * GlobalRank's own small-input threshold
     * (`spark.graft.globalRank.localMaxBytes`, 8 MB) both branches run
     * the same single `row_number` window over the events, so this gate
-    * only chooses between the two chunked forms. */
+    * only chooses between the two chunked forms. Both forms stay: at sf1
+    * (GenScale `events`, 16 MB, so both chunked) warm `tools.ProfKeys`
+    * reps (build + plan + exec, 4-vCPU VM, A B B A) put agg_exact_median
+    * at 2.5-4.4 s full-ranking vs 2.8-4.2 s selecting and agg_quartiles
+    * at 2.3-2.7 s vs 2.7-3.0 s — no win for selecting yet at 16 MB, and
+    * it is the only form that sorts a ~3/32 slice at fact scale. */
   private def useRankSelect(s: org.apache.spark.sql.SparkSession,
       d: String): Boolean = {
     val thresh = s.conf

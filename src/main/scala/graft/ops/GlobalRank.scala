@@ -14,18 +14,17 @@ import org.apache.spark.sql.types.LongType
   * dimension-sized table and fatal at fact-table scale. The classic
   * two-pass alternative implemented here:
   *
-  *  1. `repartitionByRange` on the sort key — rows land in globally
-  *     ordered, evenly sized partitions (range boundaries from Spark's
-  *     reservoir sample).
-  *  2. Per-partition local `row_number` over a window PARTITIONED by the
-  *     physical partition id — every partition ranks independently, no
-  *     data movement.
-  *  3. Per-partition counts (one tiny aggregate, O(partitions) rows) →
+  *  1. A chunk id per row, interpolated from the first sort key between
+  *     its broadcast (min, max) — chunks are globally ordered key ranges
+  *     ([[withGroupedChunkId]]).
+  *  2. Per-chunk local `row_number` over a window PARTITIONED by the
+  *     chunk id — every chunk ranks independently.
+  *  3. Per-chunk counts (one tiny aggregate, O(chunks) rows) →
   *     cumulative offsets → broadcast join; global rank = offset +
   *     local rank.
   *
-  * The only driver-side state is the per-partition count vector —
-  * O(number of partitions), not O(rows).
+  * No driver-side state at all: the bounds and the O(chunks) offsets
+  * ride broadcasts.
   *
   * Requires a TOTAL order (add a unique tiebreak column, as all declared
   * rank queries here already do): with a total order, row_number, rank
@@ -53,6 +52,10 @@ import org.apache.spark.sql.types.LongType
   * `orders`, 2.0 and 2.7 MB) and with those tables copied 5 and 4 times
   * (10.2 and 10.9 MB, above the threshold).
   *
+  * The ungrouped forms ([[withGlobalRowNumber]], [[withGlobalRunningSum]])
+  * are the grouped forms with no group columns: one chunk assignment
+  * ([[withGroupedChunkId]]) and one chunked body per aggregate.
+  *
   * Schema contract: both forms return the same columns in the same
   * order, with the same names, types and nullability — so a caller can
   * never tell which one ran. Row numbers are BIGINT NOT NULL on both
@@ -62,53 +65,11 @@ import org.apache.spark.sql.types.LongType
 object GlobalRank {
 
   /** Append `out` = global 1-based rank of each row under `keys` (must be
-    * a total order). Above the [[local]] threshold it is distributed: no
-    * global single-partition window.
-    *
-    * Chunk assignment is DETERMINISTIC BY CONSTRUCTION (round-7; replaces
-    * a `localCheckpoint` of the full-width table): the chunk id derives
-    * arithmetically from the first sort key's (min, max) — the
-    * [[Streaming]] late-watermark pattern — attached as a broadcast
-    * 1-row frame, so a row's chunk is a pure function of its own values
-    * and the key bounds. `repartitionByRange` + `spark_partition_id` is
-    * NOT that (its sampled boundaries differ between two evaluations of
-    * the same subtree, silently mis-ranking under task retry/speculation
-    * — the failure the late-watermark rewrite hit), and the checkpoint
-    * that papered over it materialized every column to the block manager.
-    * Here the offsets branch re-evaluates only a column-pruned scan of
-    * the first key, and re-evaluation is safe because the chunk
-    * expression is value-deterministic. No driver-side action at all:
-    * the bounds ride a broadcast, the offsets stay O(chunks).
-    *
-    * Chunk boundaries only affect BALANCE, never correctness: any fixed
-    * monotone key→chunk map gives a correct rank (ties share a chunk,
-    * and the in-chunk window orders by the full key tuple). Linear
-    * interpolation balances uniform-ish first keys (the analytic-rank
-    * norm); a heavily value-skewed key concentrates chunks — callers own
-    * choosing a spread leading key, same contract as any range
-    * partitioning. The first key must be numeric-castable; nulls follow
-    * Spark's default placement (first under asc, last under desc), NaN
-    * sorts largest. Requires a deterministic input (both branches
-    * re-evaluate `df` — true of every non-checkpointing formulation). */
+    * a total order): [[withGroupedRowNumber]] with no group columns, so
+    * above the [[local]] threshold no single-partition window. */
   def withGlobalRowNumber(df: DataFrame, keys: Seq[Column], out: String,
       numPartitions: Int = 0): DataFrame =
-    if (local(df)) localRowNumber(df, Nil, keys, out)
-    else {
-      val bucketed = withChunkId(df, keys, numPartitions)
-      val localW = Window.partitionBy("__gr_pid").orderBy(keys: _*)
-      val local = bucketed.withColumn("__gr_local", row_number().over(localW))
-      // O(chunks) rows from a key-column-pruned scan: cumulative count of
-      // all chunks before pid
-      val offsets = bucketed.groupBy("__gr_pid").count()
-        .withColumn("__gr_offset",
-          coalesce(sum(col("count")).over(
-            Window.orderBy("__gr_pid")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("__gr_pid"), col("__gr_offset"))
-      local.join(broadcast(offsets), "__gr_pid")
-        .withColumn(out, col("__gr_offset") + col("__gr_local"))
-        .drop("__gr_pid", "__gr_local", "__gr_offset")
-    }
+    withGroupedRowNumber(df, Nil, keys, out, numPartitions = numPartitions)
 
   /** Append `out` = 1-based rank within each `groupCols` group under the
     * total order `keys` — the PER-GROUP sibling of [[withGlobalRowNumber]]
@@ -122,8 +83,8 @@ object GlobalRank {
     * `keys.head` (ties may share a chunk — in-chunk windows order by the
     * full key tuple, so only balance is affected; defaults to `keys.head`
     * cast to double). Chunk ids derive from the key's per-group broadcast
-    * (min, max) — deterministic by construction, the
-    * [[withGlobalRowNumber]] contract. The offsets frame is
+    * (min, max) — deterministic by construction ([[withGroupedChunkId]]).
+    * The offsets frame is
     * O(groups × chunks) rows and must stay broadcast-sized; its
     * cumulative window partitions BY GROUP over that aggregated frame,
     * never over data rows. */
@@ -215,6 +176,16 @@ object GlobalRank {
         nPer.withColumnRenamed("n", "__gr_n"), groupCols)
       .drop("__gr_pid", "__gr_offset")
   }
+
+  /** Append `out` = inclusive global running sum of `value` under the
+    * total order `keys`: [[withGroupedRunningSum]] with no group columns.
+    * `value` must be exact-arithmetic (integer/decimal) for a
+    * deterministic result — float prefix sums are order-fragile by
+    * nature, which is exactly what the declared queries avoid. */
+  def withGlobalRunningSum(df: DataFrame, keys: Seq[Column], value: Column,
+      out: String, numPartitions: Int = 0): DataFrame =
+    withGroupedRunningSum(df, Nil, keys, value, out,
+      numPartitions = numPartitions)
 
   /** Append `out` = inclusive running sum of `value` within each
     * `groupCols` group under the total order `keys` — the PER-GROUP
@@ -381,13 +352,23 @@ object GlobalRank {
     * grouped chunked forms must too — a plain equi-join would silently
     * DROP every null-group row (null != null), losing rows rather than
     * misranking them. EqualNullSafe is still an equi-join key to the
-    * planner, so this stays a broadcast hash join. */
+    * planner, so this stays a broadcast hash join. A key that is
+    * non-nullable on both sides (the chunk id) joins on plain `===`,
+    * which keeps a single integer key a long-keyed hash relation. No
+    * keys: a cross join with the broadcast `right` (the ungrouped bounds
+    * row). */
   private def nullSafeBroadcastJoin(left: DataFrame, right: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    val r = keys.foldLeft(right)((d, c) => d.withColumnRenamed(c, s"__gr_r_$c"))
-    val cond = keys.map(c => col(c) <=> col(s"__gr_r_$c")).reduce(_ && _)
-    left.join(broadcast(r), cond).drop(keys.map(c => s"__gr_r_$c"): _*)
-  }
+      keys: Seq[String]): DataFrame =
+    if (keys.isEmpty) left.crossJoin(broadcast(right))
+    else {
+      val r = keys.foldLeft(right)((d, c) => d.withColumnRenamed(c, s"__gr_r_$c"))
+      val cond = keys.map { c =>
+        val (lc, rc) = (col(c), col(s"__gr_r_$c"))
+        if (left.schema(c).nullable || right.schema(c).nullable) lc <=> rc
+        else lc === rc
+      }.reduce(_ && _)
+      left.join(broadcast(r), cond).drop(keys.map(c => s"__gr_r_$c"): _*)
+    }
 
   /** Broadcast inner join of `l` and `r` on null-safe equality of `cs`
     * plus `extra`; keeps `r`'s copies of `cs` as `__gr_w_<c>`. */
@@ -398,12 +379,34 @@ object GlobalRank {
       cs.map(c => col(c) <=> col(s"__gr_w_$c")).reduce(_ && _) && extra)
   }
 
-  /** Shared per-group deterministic chunk assignment: `__gr_pid` derives
-    * arithmetically from `chunkKey`'s per-group broadcast (min, max) —
-    * the grouped form of [[withChunkId]]. `chunkKey` must be NUMERIC and
-    * monotone non-decreasing in `keys.head` (ties may share a chunk —
-    * in-chunk windows order by the full key tuple, so only balance is
-    * affected; defaults to `keys.head` cast to double). */
+  /** The shared chunk assignment of every chunked form: `__gr_pid`
+    * derives arithmetically from `chunkKey`'s per-group (min, max),
+    * attached as a broadcast (one row when `groupCols` is empty). `chunkKey`
+    * must be NUMERIC and monotone non-decreasing in `keys.head`; it
+    * defaults to `keys.head` cast to double.
+    *
+    * Chunk assignment is DETERMINISTIC BY CONSTRUCTION (round-7; replaces
+    * a `localCheckpoint` of the full-width table): a row's chunk is a pure
+    * function of its own values and its group's key bounds.
+    * `repartitionByRange` + `spark_partition_id` is NOT that (its sampled
+    * boundaries differ between two evaluations of the same subtree,
+    * silently mis-ranking under task retry/speculation — the failure the
+    * late-watermark rewrite hit), and the checkpoint that papered over it
+    * materialized every column to the block manager. Here the offsets
+    * branch re-evaluates only a column-pruned scan of the key, and
+    * re-evaluation is safe because the chunk expression is
+    * value-deterministic. No driver-side action at all: the bounds ride a
+    * broadcast, the offsets stay O(groups × chunks).
+    *
+    * Chunk boundaries only affect BALANCE, never correctness: any fixed
+    * monotone key→chunk map gives a correct rank (ties share a chunk,
+    * and the in-chunk window orders by the full key tuple). Linear
+    * interpolation balances uniform-ish keys (the analytic-rank norm); a
+    * heavily value-skewed key concentrates chunks — callers own choosing
+    * a spread leading key, same contract as any range partitioning. Nulls
+    * follow Spark's default placement (first under asc, last under desc),
+    * NaN sorts largest. Requires a deterministic input (both branches
+    * re-evaluate `df` — true of every non-checkpointing formulation). */
   private def withGroupedChunkId(df: DataFrame, groupCols: Seq[String],
       keys: Seq[Column], chunkKey: Option[Column],
       numPartitions: Int): DataFrame = {
@@ -421,7 +424,8 @@ object GlobalRank {
       .agg(min(ck).as("__gr_lo"), max(ck).as("__gr_hi"))
     // degenerate span (all of a group's keys equal) → everything in
     // chunk 0; guarded explicitly because ANSI mode makes 0/0 an error,
-    // not a null
+    // not a null (empty input's null bounds still divide to null, which
+    // greatest() ignores)
     val span = col("__gr_hi") - col("__gr_lo")
     val lin = when(span === 0d, lit(0))
       .otherwise(floor((ck - col("__gr_lo")) / span * parts)).cast("int")
@@ -432,83 +436,5 @@ object GlobalRank {
       .withColumn("__gr_pid",
         when(ck.isNull, lit(if (desc) parts else -1)).otherwise(chunk))
       .drop("__gr_lo", "__gr_hi")
-  }
-
-  /** Append `out` = inclusive global running sum of `value` under the
-    * total order `keys` — the prefix-sum sibling of
-    * [[withGlobalRowNumber]], sharing the same deterministic arithmetic
-    * chunk assignment. Per-chunk local running sums plus an O(chunks)
-    * cumulative-offset broadcast: no single-partition global window at
-    * any width. `value` must be exact-arithmetic (integer/decimal) for
-    * a deterministic result — float prefix sums are order-fragile by
-    * nature, which is exactly what the declared queries avoid. */
-  def withGlobalRunningSum(df: DataFrame, keys: Seq[Column], value: Column,
-      out: String, numPartitions: Int = 0): DataFrame =
-    if (local(df)) localRunning(df, Nil, keys, Seq(value -> out), SumMonoid)
-    else {
-      val bucketed = withChunkId(df.withColumn("__gr_val", value), keys,
-        numPartitions)
-      val localW = Window.partitionBy("__gr_pid").orderBy(keys: _*)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val local = bucketed.withColumn("__gr_local", sum(col("__gr_val")).over(localW))
-      val offsets = bucketed.groupBy("__gr_pid")
-        .agg(sum(col("__gr_val")).as("__gr_tot"))
-        .withColumn("__gr_offset",
-          coalesce(sum(col("__gr_tot")).over(
-            Window.orderBy("__gr_pid")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("__gr_pid"), col("__gr_offset"))
-      local.join(broadcast(offsets), "__gr_pid")
-        .withColumn(out, col("__gr_offset") + col("__gr_local"))
-        .drop("__gr_pid", "__gr_local", "__gr_offset", "__gr_val")
-    }
-
-  /** The shared deterministic chunk assignment (scaladoc on
-    * [[withGlobalRowNumber]]): `__gr_pid` derives arithmetically from the
-    * first sort key's broadcast (min, max) — a pure function of the row's
-    * own values, safe under re-evaluation/retry/speculation. */
-  private def withChunkId(df: DataFrame, keys: Seq[Column],
-      numPartitions: Int): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    import org.apache.spark.sql.GraftPlanBridge
-    import org.apache.spark.sql.catalyst.expressions.{Descending, SortOrder}
-    val (firstE, desc) = GraftPlanBridge.expression(keys.head) match {
-      case SortOrder(c, dir, _, _) => (c, dir == Descending)
-      case e => (e, false)
-    }
-    val firstCol = GraftPlanBridge.column(firstE).cast("double")
-    val bounds = df.agg(min(firstCol).as("__gr_lo"), max(firstCol).as("__gr_hi"))
-    // degenerate span (all keys equal) → chunk 0; guarded explicitly
-    // because ANSI mode makes 0/0 an error, not a null (empty input's
-    // null bounds still divide to null, which greatest() ignores)
-    val gspan = col("__gr_hi") - col("__gr_lo")
-    val lin = when(gspan === 0d, lit(0))
-      .otherwise(floor((firstCol - col("__gr_lo")) / gspan * parts))
-      .cast("int")
-    val ascChunk = when(isnan(firstCol), lit(parts - 1))
-      .otherwise(least(greatest(lin, lit(0)), lit(parts - 1)))
-    val chunk = if (desc) lit(parts - 1) - ascChunk else ascChunk
-    df.crossJoin(broadcast(bounds))
-      .withColumn("__gr_pid",
-        when(firstCol.isNull, lit(if (desc) parts else -1)).otherwise(chunk))
-      .drop("__gr_lo", "__gr_hi")
-  }
-
-  /** percent_rank = (rank - 1) / (N - 1) and cume_dist = rank / N over a
-    * total order, built on [[withGlobalRowNumber]] — returns the input
-    * columns plus (rankCol, pctCol, cumeCol). N comes from a 1-row
-    * broadcast, not a driver action. */
-  def withGlobalPercentiles(df: DataFrame, keys: Seq[Column],
-      rankCol: String, pctCol: String, cumeCol: String): DataFrame = {
-    val ranked = withGlobalRowNumber(df, keys, rankCol)
-    val n = df.select(count(lit(1)).as("__gr_n"))
-    ranked.crossJoin(broadcast(n))
-      .withColumn(pctCol,
-        (col(rankCol) - 1).cast("double") /
-          greatest(col("__gr_n") - 1, lit(1L)).cast("double"))
-      .withColumn(cumeCol,
-        col(rankCol).cast("double") / col("__gr_n").cast("double"))
-      .drop("__gr_n")
   }
 }

@@ -88,40 +88,19 @@ object Streaming {
     * true streaming path (withWatermark drop behavior) is additionally
     * asserted in StreamingSpec via MemoryStream.
     *
-    * The running max is fully distributed (round-3 fix — the round-2 form
-    * was the one remaining single-partition global window in the declared
-    * set): arrival order splits into chunks derived arithmetically from
-    * the id range (one 1-row broadcast — deterministic, where
-    * repartitionByRange + spark_partition_id is NOT: its sampled
-    * boundaries can differ between the plan's two evaluations of the same
-    * subtree, which mis-assigned prefixes and dropped valid rows when
-    * first tried). Each chunk computes its local running max; the max
-    * over all EARLIER chunks arrives via an O(chunks)-row broadcast — the
-    * GlobalRank offsets trick applied to a running aggregate. The only
-    * orderBy-without-partition window left runs over one row per chunk,
-    * never over the events. */
+    * The running max is [[GlobalRank.withGroupedRunningMax]] with no
+    * group columns, so above GlobalRank's small-input threshold it is
+    * never a single-partition window: arrival order splits into
+    * value-deterministic chunks of the id range, each chunk computes its
+    * local running max, and the max over all EARLIER chunks arrives via
+    * an O(chunks)-row broadcast. `event_id` is unique and non-null, so
+    * it is a total order. */
   val streamLateWatermark: Q = (s, d) => {
     val lateUs = 10L * 60 * 1000000
-    val parts = s.sessionState.conf.numShufflePartitions
     val base = Tables.events(s, d)
       .withColumn("tu", expr("unix_micros(cast(ts as timestamp))"))
-    val bounds = base.agg(min("event_id").as("__wm_lo"),
-      max("event_id").as("__wm_hi"))
-    val chunked = base.crossJoin(broadcast(bounds))
-      .withColumn("__wm_pid",
-        (((col("event_id") - col("__wm_lo")) * parts)
-          / (col("__wm_hi") - col("__wm_lo") + 1)).cast(IntegerType))
-      .drop("__wm_lo", "__wm_hi")
-    val localW = Window.partitionBy("__wm_pid").orderBy("event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = chunked.withColumn("__wm_local", max(col("tu")).over(localW))
-    val prefixes = local.groupBy("__wm_pid").agg(max("tu").as("__wm_pmax"))
-      .withColumn("__wm_prefix", max(col("__wm_pmax")).over(
-        Window.orderBy("__wm_pid").rowsBetween(Window.unboundedPreceding, -1)))
-      .select(col("__wm_pid"), col("__wm_prefix"))
-    local.join(broadcast(prefixes), "__wm_pid")
-      .withColumn("max_tu", greatest(col("__wm_local"),
-        coalesce(col("__wm_prefix"), col("__wm_local"))))
+    GlobalRank.withGroupedRunningMax(base, Nil, Seq(col("event_id")),
+        col("tu"), "max_tu")
       .filter(col("tu") >= col("max_tu") - lateUs)
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n_kept"))

@@ -39,9 +39,10 @@ object VardaOps {
     * silently dropped points in strictly interior cells of ≥3-cell
     * regions). Fan-out is ceil(length / 2048) rows per region: identical
     * cost for the bounded-length operators that use this, linear-in-
-    * length for long intervals — [[binnedContainment]]'s 5-level bin
-    * hierarchy stays the right plan when lengths are unbounded AND
-    * per-region fan-out must stay O(1). */
+    * length for long intervals. When lengths are unbounded AND per-region
+    * fan-out must stay O(1), the 5-level UCSC bin hierarchy (the plan
+    * [[graft.plans.RewriteIntervalJoin]] emits by default) is the right
+    * plan instead. */
   private[graft] def bucketedContainment(points: DataFrame, regions: DataFrame): DataFrame = {
     val pB = points.withColumn("bkt", shiftright(col("position"), 11))
     val rB = regions.withColumn("bkt", explode(sequence(
@@ -49,26 +50,6 @@ object VardaOps {
     pB.join(rB, Seq("chromosome", "bkt"))
       .filter(col("position") >= col("begin_pos") && col("position") <= col("end_pos"))
       .drop("bkt")
-  }
-
-  /** UCSC-binned containment join: regions carry assign_bin(begin, end);
-    * a point probes its 5 ancestor bins (one per level). Equal by
-    * construction to the naive range join (PropertySpec asserts it).
-    *
-    * This is the general path for *unbounded* interval lengths (the
-    * hierarchy bounds fan-out to 5 whatever the length). When interval
-    * length is bounded and positions are dense — this fixture confines
-    * everything to a single 128kb level-0 bin, degenerating the join key
-    * to the chromosome — [[bucketedContainment]]'s single fine level is
-    * the right plan, so the frequency/coverage operators use that. */
-  private[graft] def binnedContainment(points: DataFrame, regions: DataFrame): DataFrame = {
-    val rB = regions.withColumn("bin",
-      expr(assignBin("begin_pos", "end_pos", shrSpark)).cast(LongType))
-    val cands = pointBins("position", shrSpark).map(b => expr(b).cast(LongType))
-    val pB = points.withColumn("bin", explode(array(cands: _*)))
-    pB.join(rB, Seq("chromosome", "bin"))
-      .filter(col("position") >= col("begin_pos") && col("position") <= col("end_pos"))
-      .drop("bin")
   }
 
   /** Per-chromosome ploidy as a Column (mirrors [[VardaSql.ploidyOf]]). */
@@ -215,78 +196,18 @@ object VardaOps {
         col("pool_size"))
   }
 
-  /** Per-point covered mass over PRE-MERGED intervals (the
-    * [[mergeIntervals]] invariant — each covering sample's mass counts
-    * once because its intervals are disjoint): an interval-STABBING
-    * query answered by a grouped running sum over ±pool endpoint
-    * deltas, never a (point × covering-sample) pair row. `pts` must be
-    * duplicate-free. Deltas sort before probes at equal coordinates
-    * (kind 0 < 1), so a region beginning AT the point counts and one
-    * ending just before does not — the inclusive-[begin,end] boundary
-    * semantics. Returns (chromosome, position, denom_cov) for points
-    * with non-zero covered mass; the coverage-less pool is the
-    * caller's separate broadcast scalar (the [[serveFrom]] shape).
-    *
-    * `standalone` selects between two CHECKPOINT REGIMES (they are not
-    * an on/off pair): `true` (one-shot queries — the sweep is the plan's
-    * spine) checkpoints the change-point-sized EVENT frame `ev`, so the
-    * chunked running sum's four subtree references share one
-    * materialization; `false` (the sweep rides inside a larger
-    * composition of sweeps — fold/retract paths) leaves `ev` live, where
-    * the repeated subtrees collapse via ReusedExchange and a stacked
-    * checkpoint only serializes the job chain (r19: 1.9× slower), and
-    * instead pins the narrow MERGED-interval frame. */
+  /** Per-point covered mass over PRE-MERGED intervals: the one-predicate
+    * form of [[sweepMassMergedMulti]] (every sample counts), keeping only
+    * points with non-zero covered mass as (chromosome, position,
+    * denom_cov). The coverage-less pool is the caller's separate broadcast
+    * scalar (the [[serveFrom]] shape). `standalone` picks the checkpoint
+    * regime ([[sweepMassMergedMulti]]). */
   private[graft] def sweepMassMerged(pts: DataFrame,
-      merged: DataFrame, standalone: Boolean = true): DataFrame = {
-    // when the sweep input is materialized (the ev checkpoint below),
-    // the merged intervals only evaluate inside that ONE materialization
-    // job — the interval-merge windows' two references (begin/end delta
-    // projections) collapse via ReusedExchange, so a second stacked
-    // checkpoint here bought nothing at execution time and cost a full
-    // extra catalyst+toRdd pass per query (r19: ~0.2-0.3 s of the
-    // frequency family's fn-time driver constant). On the lazy
-    // composition paths (standalone=false) it keeps the round-18
-    // behavior: those plans re-evaluate the sweep input per subtree, and
-    // the merged frame is the narrow thing worth pinning.
-    val m = if (standalone) merged
-      else graft.util.Ckpt.narrow(merged)
-    // ±pool deltas COLLAPSED per coordinate before the sweep: on a
-    // dense fixture many intervals share endpoints, so one map-side-
-    // combinable aggregate shrinks the sweep's input to the distinct
-    // coordinates (a no-op-sized exchange when endpoints are sparse)
-    val deltas = m.select(col("chromosome"), col("begin_pos").as("coord"),
-        col("pool_size").cast(LongType).as("dp"))
-      .unionByName(m.select(col("chromosome"),
-        (col("end_pos") + 1).as("coord"),
-        (-col("pool_size")).cast(LongType).as("dp")))
-      .groupBy("chromosome", "coord")
-      .agg(sum(col("dp")).as("dp"))
-      .filter(col("dp") =!= 0)
-      .select(col("chromosome"), col("coord"), lit(0).as("kind"), col("dp"))
-    val evRaw = deltas.unionByName(
-      pts.select(col("chromosome"), col("position").as("coord"),
-        lit(1).as("kind"), lit(0L).as("dp")))
-    // change-point-sized (distinct coords + probe points). The chunked
-    // running sum evaluates its input in four subtrees (local window,
-    // its chunk bounds, the offsets aggregate, ITS bounds) — without
-    // this the delta aggregate AND the probe-point distinct (a full
-    // observation-scan exchange) re-run four times per sweep (r19
-    // measured: 6 events.parquet scans per frequency query, 23
-    // exchanges). Same narrow-frame materialization trade
-    // [[nearestRegionFrom]] documents. Callers whose sweep rides inside
-    // a larger composition of sweeps pass standalone=false: there the
-    // repeated subtrees collapse via ReusedExchange and the checkpoint
-    // only serializes the job chain (r19 measured varda_sample_retract
-    // 1.9x SLOWER with the checkpoint stacked three-deep).
-    val ev = if (standalone) graft.util.Ckpt.narrow(evRaw) else evRaw
-    // grouped running sum per chromosome (chunked two-pass — never a
-    // single-partition window), read off at the probe events
-    graft.ops.GlobalRank.withGroupedRunningSum(ev, Seq("chromosome"),
-        Seq(col("coord"), col("kind")), col("dp"), "__pool_at")
-      .filter(col("kind") === 1 && col("__pool_at") =!= 0)
-      .select(col("chromosome"), col("coord").as("position"),
-        (col("__pool_at") * ploidy).cast(LongType).as("denom_cov"))
-  }
+      merged: DataFrame, standalone: Boolean = true): DataFrame =
+    sweepMassMergedMulti(pts, merged, Seq("cov" -> lit(true)), standalone)
+      .filter(col("mass_cov") =!= 0)
+      .select(col("chromosome"), col("position"),
+        col("mass_cov").as("denom_cov"))
 
   /** Per-point COVERED denominator mass, PAIR-FREE (round-11): Σ over
     * covering samples of pool_size × ploidy, each sample counted once
@@ -301,31 +222,55 @@ object VardaOps {
     sweepMassMerged(pts.dropDuplicates("chromosome", "position"),
       mergeIntervals(covDf))
 
-  /** N per-expression covered masses from ONE endpoint sweep (r20):
-    * the multi-expression sibling of [[sweepMassMerged]], riding
-    * [[GlobalRank.withGroupedRunningSums]]. `merged` must be
+  /** N per-expression covered masses from ONE endpoint sweep (r20),
+    * riding [[GlobalRank.withGroupedRunningSums]]: an interval-STABBING
+    * query answered by a grouped running sum over ±pool endpoint deltas,
+    * never a (point × covering-sample) pair row. `merged` must be
     * per-sample DISJOINT intervals (the [[mergeIntervals]] invariant —
     * what makes "each covering sample counted once per expression"
     * structural); each `preds` entry (name, sample predicate) yields a
     * `mass_<name>` column = Σ over covering samples passing the
-    * predicate of pool_size × ploidy. Returns ONE row per distinct
-    * probe point (masses 0, never null, when nothing covers it).
+    * predicate of pool_size × ploidy. `pts` must be duplicate-free.
+    * Deltas sort before probes at equal coordinates (kind 0 < 1), so a
+    * region beginning AT the point counts and one ending just before does
+    * not — the inclusive-[begin,end] boundary semantics. Returns ONE row
+    * per probe point (masses 0, never null, when nothing covers it).
     *
     * This replaced the multi-annotate containment join + pair distinct:
     * that plan's (point × covering sample) pair volume densifies
-    * quadratically — measured this round at the sf1 decade it put
-    * sink_vcf_multi at 148.7 s (c32) vs 6.2 s for the sweep-based
-    * single-expression sibling. The sweep is O(points + regions) at any
-    * density with ONE pass for all expressions. */
+    * quadratically — measured at the sf1 decade it put sink_vcf_multi at
+    * 148.7 s (c32) vs 6.2 s for the sweep. The sweep is
+    * O(points + regions) at any density with ONE pass for all
+    * expressions.
+    *
+    * `standalone` selects between two CHECKPOINT REGIMES (they are not
+    * an on/off pair): `true` (one-shot queries — the sweep is the plan's
+    * spine) checkpoints the change-point-sized EVENT frame `ev`, so the
+    * chunked running sum's four subtree references (local window, its
+    * chunk bounds, the offsets aggregate, ITS bounds) share one
+    * materialization instead of re-running the delta aggregate and the
+    * probe-point distinct four times (r19 measured: 6 events.parquet
+    * scans per frequency query, 23 exchanges); the merged intervals then
+    * evaluate only inside that one job. `false` (the sweep rides inside a
+    * larger composition of sweeps — fold/retract paths) leaves `ev` live,
+    * where the repeated subtrees collapse via ReusedExchange and a
+    * stacked checkpoint only serializes the job chain (r19:
+    * varda_sample_retract 1.9× slower), and instead pins the narrow
+    * MERGED-interval frame those plans re-evaluate per subtree. */
   private[graft] def sweepMassMergedMulti(pts: DataFrame, merged: DataFrame,
-      preds: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
+      preds: Seq[(String, org.apache.spark.sql.Column)],
+      standalone: Boolean = true): DataFrame = {
+    val m = if (standalone) merged else graft.util.Ckpt.narrow(merged)
     val dpBegin = preds.map { case (n, p) =>
       when(p, col("pool_size")).otherwise(lit(0)).cast(LongType).as(s"dp_$n") }
     val dpEnd = preds.map { case (n, p) =>
       when(p, -col("pool_size")).otherwise(lit(0)).cast(LongType).as(s"dp_$n") }
-    val deltas = merged
+    // ±pool deltas COLLAPSED per coordinate before the sweep: on a dense
+    // fixture many intervals share endpoints, so one map-side-combinable
+    // aggregate shrinks the sweep's input to the distinct coordinates
+    val deltas = m
       .select(Seq(col("chromosome"), col("begin_pos").as("coord")) ++ dpBegin: _*)
-      .unionByName(merged.select(
+      .unionByName(m.select(
         Seq(col("chromosome"), (col("end_pos") + 1).as("coord")) ++ dpEnd: _*))
       .groupBy("chromosome", "coord")
       .agg(sum(col(s"dp_${preds.head._1}")).as(s"dp_${preds.head._1}"),
@@ -337,10 +282,7 @@ object VardaOps {
       pts.select(Seq(col("chromosome"), col("position").as("coord"),
         lit(1).as("kind")) ++
         preds.map { case (n, _) => lit(0L).as(s"dp_$n") }: _*))
-    // change-point-sized, referenced by the chunked running sums' four
-    // subtrees — the same standalone-regime checkpoint sweepMassMerged
-    // documents
-    val ev = graft.util.Ckpt.narrow(evRaw)
+    val ev = if (standalone) graft.util.Ckpt.narrow(evRaw) else evRaw
     graft.ops.GlobalRank.withGroupedRunningSums(ev, Seq("chromosome"),
         Seq(col("coord"), col("kind")),
         preds.map { case (n, _) => col(s"dp_$n") -> s"__mass_$n" })
@@ -1481,27 +1423,32 @@ object VardaOps {
       .orderBy("chromosome", "position", "reference", "observed")
   }
 
-  /** Annotation write-back: left-join input variants (some deliberately
-    * unknown via a +1 position shift) against the frequency table,
-    * null -> 0 (varda/tasks.py :: write_annotation [U]). */
+  /** The annotate input "VCF": the even observations' distinct variants,
+    * every other one shifted one position so it is deliberately unknown
+    * to the frequency table. */
+  private def annotateInput(o: DataFrame): DataFrame =
+    o.filter(col("obs_id") % 2 === 0)
+      .select(col("chromosome"),
+        (col("position") + when(col("obs_id") % 4 === 0, 1).otherwise(0)).as("position"),
+        col("reference"), col("observed"))
+      .distinct()
+
+  /** Annotation write-back: left-join the input variants against a
+    * frequency table, null -> 0 (varda/tasks.py :: write_annotation [U]). */
+  private def annotateWith(input: DataFrame, freq: DataFrame): DataFrame =
+    input.join(freq.select(variantKey.map(col) :+ col("freq_ppm"): _*),
+        variantKey, "left")
+      .select(variantKey.map(col) :+
+        coalesce(col("freq_ppm"), lit(0L)).as("freq_ppm"): _*)
+
   /** [[vardaAnnotate]]'s frame WITHOUT the declared result ordering —
     * the VCF export serializes this one (r20): the writer needs only
     * per-partition position order ([[Vcf.toVcfLines]]), and feeding it
     * the orderBy'd declared frame made every export pay a full global
     * range sort (range-boundary sampling pass + exchange) that the
     * parse-back's own declared orderBy then re-established anyway. */
-  private[graft] def annotateFrame(s: SparkSession, d: String): DataFrame = {
-    val input = obs(s, d).filter(col("obs_id") % 2 === 0)
-      .select(col("chromosome"),
-        (col("position") + when(col("obs_id") % 4 === 0, 1).otherwise(0)).as("position"),
-        col("reference"), col("observed"))
-      .distinct()
-    val freq = frequency(s, d, withZyg = false)
-      .select("chromosome", "position", "reference", "observed", "freq_ppm")
-    input.join(freq, Seq("chromosome", "position", "reference", "observed"), "left")
-      .select(col("chromosome"), col("position"), col("reference"), col("observed"),
-        coalesce(col("freq_ppm"), lit(0L)).as("freq_ppm"))
-  }
+  private[graft] def annotateFrame(s: SparkSession, d: String): DataFrame =
+    annotateWith(annotateInput(obs(s, d)), frequency(s, d, withZyg = false))
 
   val vardaAnnotate: Q = (s, d) =>
     annotateFrame(s, d)
@@ -1517,19 +1464,10 @@ object VardaOps {
     * coverage history; the oracle is the SAME one-shot SQL as
     * `varda_annotate` because the committed replay must converge to
     * it. Store shared (memoized) with the other serving keys. */
-  val vardaAnnotateStore: Q = (s, d) => {
-    val input = obs(s, d).filter(col("obs_id") % 2 === 0)
-      .select(col("chromosome"),
-        (col("position") + when(col("obs_id") % 4 === 0, 1).otherwise(0)).as("position"),
-        col("reference"), col("observed"))
-      .distinct()
-    val freq = new FreqStore(s, committedFreqStore(s, d)).serve()
-      .select("chromosome", "position", "reference", "observed", "freq_ppm")
-    input.join(freq, Seq("chromosome", "position", "reference", "observed"), "left")
-      .select(col("chromosome"), col("position"), col("reference"), col("observed"),
-        coalesce(col("freq_ppm"), lit(0L)).as("freq_ppm"))
+  val vardaAnnotateStore: Q = (s, d) =>
+    annotateWith(annotateInput(obs(s, d)),
+        new FreqStore(s, committedFreqStore(s, d)).serve())
       .orderBy("chromosome", "position", "reference", "observed")
-  }
 
   /** Named sample expressions for multi-annotation, each with its
     * evaluated id set over samples 0..19 (mirrored literally in the
@@ -1562,11 +1500,6 @@ object VardaOps {
       n -> ExprLang.parse(e, sampleTags)
     }
     val o = obs(s, d)
-    val input = o.filter(col("obs_id") % 2 === 0)
-      .select(col("chromosome"),
-        (col("position") + when(col("obs_id") % 4 === 0, 1).otherwise(0)).as("position"),
-        col("reference"), col("observed"))
-      .distinct()
     val pts = o.select("chromosome", "position").distinct()
     // per-expression denominators. Two result-identical forms, gated on
     // the coverage scan's estimated bytes (r20, the OPT-5 gate pattern;
@@ -1581,8 +1514,12 @@ object VardaOps {
     //    per-expression scalar.
     //  - SMALL inputs: the containment join + pair distinct — at sf0.1
     //    its pair volume is trivial and it avoids the sweep machinery's
-    //    ~2 s of fixed per-query stage latency (the measured r20 gap:
-    //    0.3 s join vs 2.3 s sweep at sf0.1, inverted 20× at sf1).
+    //    fixed per-query stage latency (the measured r20 gap: 0.3 s join
+    //    vs 2.3 s sweep at sf0.1, inverted 20× at sf1). The gate stays
+    //    with GlobalRank's small-input window in place: warm
+    //    `tools.ProfKeys` reps at sf0.1 (build + plan + exec, 4-vCPU VM,
+    //    A B B A) put the join at 0.70-1.07 s and the forced sweep
+    //    (minInputBytes=0) at 1.96-2.72 s.
     // gate input: the orders table's raw parquet bytes (the coverage
     // fixture derives from orders) — memoized file stat, not a catalyst
     // stats call (which cost ~40 ms of analyze+optimize per invocation)
@@ -1626,7 +1563,7 @@ object VardaOps {
         expr(s"cast((numer_$n * 1000000) div nullif(denom_$n, 0) as bigint)"),
         lit(0L)).as(s"freq_ppm_$n")
     }
-    input.join(freq, variantKey, "left")
+    annotateInput(o).join(freq, variantKey, "left")
       .select(variantKey.map(col) ++ outPpm: _*)
   }
 

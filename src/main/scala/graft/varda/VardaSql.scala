@@ -110,12 +110,6 @@ object VardaSql {
     s"(CASE $whens ELSE 0 + ${shr(b, 29)} END)"
   }
 
-  /** The 5 candidate bins that can contain a point (one per level). */
-  def pointBins(p: String, shr: (String, Int) => String): Seq[String] =
-    Seq((585, 17), (73, 20), (9, 23), (1, 26), (0, 29)).map {
-      case (off, sh) => s"($off + ${shr(p, sh)})"
-    }
-
   /** Longest-common-prefix length of two string columns, as a CASE chain
     * unrolled to [[Normalize.MaxLen]] chars (fixture alleles are <= 4).
     * `ci` = chars 1..i all present and equal; first failing i ends the

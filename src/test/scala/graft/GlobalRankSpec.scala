@@ -33,24 +33,6 @@ class GlobalRankSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
-  chunkedTest("percentiles match percent_rank/cume_dist under a total order") {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(keys: _*)
-    val expected = customers
-      .select(col("c_custkey"),
-        percent_rank().over(w).as("p"), cume_dist().over(w).as("c"))
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    val got = GlobalRank.withGlobalPercentiles(customers, keys, "rn", "p", "c")
-      .select(col("c_custkey"), col("p"), col("c"))
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    assert(got.size == expected.size)
-    got.foreach { case (k, (p, c)) =>
-      val (ep, ec) = expected(k)
-      assert(math.abs(p - ep) < 1e-12 && math.abs(c - ec) < 1e-12,
-        s"custkey $k: ($p,$c) vs ($ep,$ec)")
-    }
-  }
-
   chunkedTest("descending first key ranks like the single-partition desc window") {
     import org.apache.spark.sql.expressions.Window
     val dkeys = Seq(col("c_acctbal").cast("decimal(18,4)").desc, col("c_custkey"))
@@ -206,10 +188,9 @@ class GlobalRankSpec extends AnyFunSuite {
       assert(localRows == chunkRows)
     }
 
-  test("local and chunked global row numbers agree (asc, desc, percentiles)") {
+  test("local and chunked global row numbers agree (asc, desc)") {
     parity(GlobalRank.withGlobalRowNumber(_, ck, "rn", 4))
     parity(GlobalRank.withGlobalRowNumber(_, ckDesc, "rn", 4))
-    parity(GlobalRank.withGlobalPercentiles(_, ck, "rn", "p", "c"))
   }
 
   test("local and chunked grouped row numbers agree, null groups included") {
@@ -238,10 +219,14 @@ class GlobalRankSpec extends AnyFunSuite {
     }
     parity(GlobalRank.withGroupedRunningSums(_, Seq("g"), ckDesc,
       Seq(col("v") -> "rv", col("d") -> "rd"), numPartitions = 4))
+    parity(GlobalRank.withGroupedRunningSums(_, Nil, ckDesc,
+      Seq(col("v") -> "rv", col("d") -> "rd"), numPartitions = 4))
   }
 
   test("local and chunked running maxes agree, null values included") {
     parity(GlobalRank.withGroupedRunningMax(_, Seq("g"), ck, col("m"), "mx",
+      numPartitions = 4))
+    parity(GlobalRank.withGroupedRunningMax(_, Nil, ck, col("m"), "mx",
       numPartitions = 4))
     parity(GlobalRank.withGroupedRunningMaxes(_, Seq("g"), ckDesc,
       Seq(col("m") -> "m1", col("d") -> "m2"), numPartitions = 4))

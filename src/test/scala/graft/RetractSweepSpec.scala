@@ -73,21 +73,28 @@ class RetractSweepSpec extends AnyFunSuite {
       (1L, "1", 90L, 150L, 2),   // overlaps sample 1's own region: counts once
       (2L, "1", 90L, 500L, 5),
       (3L, "2", 100L, 100L, 7))
-    assert(massSet(VardaOps.denomCovBySweep(pts, cov)) ==
-      massSet(denomCovByPairs(pts, cov)))
-    val m = massSet(VardaOps.denomCovBySweep(pts, cov))
-      .map(t => (t._1, t._2) -> t._3).toMap
-    assert(m(("1", 100L)) == (2 + 5) * 2L)  // dedup held; autosome ploidy 2
-    assert(m(("1", 201L)) == 5L * 2L)
-    assert(!m.contains(("1", 999L)))
+    // at the default (one window) and chunked (localMaxBytes=0)
+    def check(): Unit = {
+      assert(massSet(VardaOps.denomCovBySweep(pts, cov)) ==
+        massSet(denomCovByPairs(pts, cov)))
+      val m = massSet(VardaOps.denomCovBySweep(pts, cov))
+        .map(t => (t._1, t._2) -> t._3).toMap
+      assert(m(("1", 100L)) == (2 + 5) * 2L)  // dedup held; autosome ploidy 2
+      assert(m(("1", 201L)) == 5L * 2L)
+      assert(!m.contains(("1", 999L)))
+    }
+    check()
+    withLocalMaxBytes(0L)(check())
   }
 
   test("denomCovBySweep equals the pair-enumerated form on the fixture") {
     val pts = VardaOps.obs(spark, sf0001)
       .select("chromosome", "position").distinct()
     val cov = VardaOps.cov(spark, sf0001)
-    assert(massSet(VardaOps.denomCovBySweep(pts, cov)) ==
+    def check(): Unit = assert(massSet(VardaOps.denomCovBySweep(pts, cov)) ==
       massSet(denomCovByPairs(pts, cov)))
+    check()
+    withLocalMaxBytes(0L)(check())
   }
 
   test("declared varda_sample_retract (sweep state) equals the remaining-samples one-shot on the fixture") {
