@@ -43,9 +43,10 @@ object Bench {
       SparkEntry.queries.get("agg_approx_hll").foreach(_(spark, sfDir).count())
       // ANN index BUILD (BRP-LSH hyperplanes / IVF k-means quantizer) is
       // the offline step every ANN system amortizes across queries; the
-      // fitted models memoize per (session, sfDir), so building here
-      // makes the timed runs measure the QUERY path — the per-round
-      // numbers stop swinging 3-5x on machine-load noise in the fit.
+      // fitted models are standing builds (graft.util.Standing), so
+      // building here makes the timed runs measure the QUERY path — the
+      // per-round numbers stop swinging 3-5x on machine-load noise in the
+      // fit.
       SparkEntry.queries.get("sim_ann_lsh").foreach(_(spark, sfDir).count())
       SparkEntry.queries.get("sim_ann_ivf").foreach(_(spark, sfDir).count())
       // … and the PERSISTED index build+append (one-time by design —

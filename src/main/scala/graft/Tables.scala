@@ -5,8 +5,11 @@ import org.apache.spark.sql.types.DecimalType
 
 import scala.collection.concurrent.TrieMap
 
-/** Memoized per-sfDir parquet loaders plus the decimal-cast helpers every
-  * query uses for oracle hash-match parity (SURVEY.md §0 discipline).
+import graft.util.Standing
+
+/** Per-sfDir parquet loaders, each a [[graft.util.Standing]] build per
+  * (session, sfDir, table), plus the decimal-cast helpers every query uses
+  * for oracle hash-match parity (SURVEY.md §0 discipline).
   *
   * At 100 TB each of these would be a partitioned table; reading through a
   * single `spark.read.parquet` keeps partition discovery, predicate
@@ -19,13 +22,6 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  // keyed on the SESSION OBJECT (reference equality), not its
-  // identityHashCode — a stopped session's hash can be reused by a new
-  // session, silently serving DataFrames bound to the dead one (the same
-  // ADVICE fix Llm's caches got in round 7). Entries for stopped
-  // sessions are swept on the next miss.
-  private val cache = TrieMap.empty[(SparkSession, String, String), DataFrame]
-
   /** Footer schemas keyed by (sfDir, table) — SESSION-free: the files
     * don't change, so a cloned session (`newSession`, used by the
     * FreqStore commit path for its conf overrides) resolves its reads
@@ -36,19 +32,16 @@ object Tables {
     TrieMap.empty[(String, String), org.apache.spark.sql.types.StructType]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    cache.getOrElseUpdate(
-      (spark, sfDir, name), {
-        cache.filterInPlace { case ((sess, _, _), _) =>
-          !sess.sparkContext.isStopped }
-        val path = s"$sfDir/$name.parquet"
-        schemaCache.get((sfDir, name)) match {
-          case Some(sch) => spark.read.schema(sch).parquet(path)
-          case None =>
-            val df = spark.read.parquet(path)
-            schemaCache.put((sfDir, name), df.schema)
-            df
-        }
-      })
+    Standing.get(spark, "table", (sfDir, name)) {
+      val path = s"$sfDir/$name.parquet"
+      schemaCache.get((sfDir, name)) match {
+        case Some(sch) => spark.read.schema(sch).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          schemaCache.put((sfDir, name), df.schema)
+          df
+      }
+    }
 
   def region(spark: SparkSession, d: String): DataFrame = table(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame = table(spark, d, "nation")
@@ -63,16 +56,15 @@ object Tables {
     * converting to a microsecond TIMESTAMP_NTZ is lossless and matches
     * DuckDB's `CAST(ts AS TIMESTAMP)` bit for bit. */
   def events(spark: SparkSession, d: String): DataFrame =
-    cache.getOrElseUpdate(
-      (spark, d, "events@ts"), {
-        val raw = table(spark, d, "events")
-        if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.timestamp_micros(
-              org.apache.spark.sql.functions.expr("ts div 1000"))
-              .cast(org.apache.spark.sql.types.TimestampNTZType))
-        else raw
-      })
+    Standing.get(spark, "events_ts", d) {
+      val raw = table(spark, d, "events")
+      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+        raw.withColumn("ts",
+          org.apache.spark.sql.functions.timestamp_micros(
+            org.apache.spark.sql.functions.expr("ts div 1000"))
+            .cast(org.apache.spark.sql.types.TimestampNTZType))
+      else raw
+    }
   def documents(spark: SparkSession, d: String): DataFrame = table(spark, d, "documents")
   def embeddings(spark: SparkSession, d: String): DataFrame = table(spark, d, "embeddings")
 
@@ -99,16 +91,12 @@ object Tables {
       }
     })
 
-  /** Drop a session's memoized frames and view registration. For
-    * short-lived CLONED sessions (`newSession` — the FreqStore replay,
-    * the rewrite keys): clones share the live SparkContext, so the
-    * stopped-context sweep can never evict them and a long-lived
-    * process repeatedly running those keys would accumulate
-    * SessionStates and analyzed plans without bound (round-10 review).
-    * Safe to call as soon as the frames are built — eviction only
-    * forgets the memo, it does not touch existing DataFrames. */
+  /** Drop a short-lived CLONED session's standing builds and view
+    * registration (`newSession` — the FreqStore replay, the rewrite
+    * keys), so repeated calls do not accumulate SessionStates and
+    * analyzed plans. Safe once its frames are built. */
   def releaseSession(spark: SparkSession): Unit = {
-    cache.filterInPlace { case ((sess, _, _), _) => sess ne spark }
+    Standing.release(spark)
     viewDir.remove(spark)
   }
 
@@ -120,9 +108,8 @@ object Tables {
   def registerViews(spark: SparkSession, sfDir: String): Unit = {
     val k = spark
     if (!viewDir.get(k).contains(sfDir)) {
-      // sweep-on-miss, like every other session-keyed cache here: without
-      // it each stopped session stays pinned as a map key for the JVM's
-      // lifetime
+      // sweep-on-miss (Standing's liveness rule): without it each stopped
+      // session stays pinned as a map key for the JVM's lifetime
       viewDir.filterInPlace((sess, _) => !sess.sparkContext.isStopped)
       names.foreach {
         case "events" => events(spark, sfDir).createOrReplaceTempView("events")

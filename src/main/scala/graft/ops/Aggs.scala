@@ -99,7 +99,7 @@ object Aggs {
   val aggHllPartials: Q = (s, d) => {
     // the write is the INGEST side's job — amortized once, like every
     // standing index (the ANN builds, the serving freq store)
-    val dir = Llm.cachedModel(s, s"hll_partials:$d") {
+    val dir = graft.util.Standing.get(s.sparkContext, "hll_partials", d) {
       val p = Scans.scratch(s, "hll_partials", d)
       Tables.events(s, d)
         .select(col("event_type"),

@@ -288,12 +288,10 @@ object Analysis {
     * frame. */
   val dedupNearEmbeddingLsh: Q = (s, d) => {
     val planted = plantNearPairs(Tables.embeddings(s, d))
-    // the fit-step count memoizes per (session, corpus) like the
-    // sibling ANN keys' (round-16 review: an unmemoized count was a
-    // full extra corpus scan on every timed invocation)
-    val n = Llm.cachedModel(s, s"near_lsh_n:$d") {
-      java.lang.Long.valueOf(planted.count())
-    }.longValue()
+    // the fit-step count is a standing build per corpus, like the
+    // sibling ANN keys' (an unmemoized count was a full extra corpus scan
+    // on every timed invocation)
+    val n = graft.util.Standing.get(s.sparkContext, "near_lsh_n", d)(planted.count())
     nearIdenticalLsh(planted, nHint = Some(n)).orderBy("d1", "d2")
   }
 

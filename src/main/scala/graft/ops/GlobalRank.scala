@@ -371,12 +371,14 @@ object GlobalRank {
     }
 
   /** Broadcast inner join of `l` and `r` on null-safe equality of `cs`
-    * plus `extra`; keeps `r`'s copies of `cs` as `__gr_w_<c>`. */
+    * plus `extra`; keeps `r`'s copies of `cs` as `__gr_w_<c>`. With no
+    * `cs` the join is on `extra` alone. */
   private def nullSafeOn(l: DataFrame, r: DataFrame, cs: Seq[String],
       extra: Column): DataFrame = {
     val rr = cs.foldLeft(r)((d, c) => d.withColumnRenamed(c, s"__gr_w_$c"))
     l.join(broadcast(rr),
-      cs.map(c => col(c) <=> col(s"__gr_w_$c")).reduce(_ && _) && extra)
+      cs.map(c => col(c) <=> col(s"__gr_w_$c")).reduceOption(_ && _)
+        .fold(extra)(_ && extra))
   }
 
   /** The shared chunk assignment of every chunked form: `__gr_pid`

@@ -39,8 +39,15 @@ import org.apache.spark.sql.Dataset
 object Ckpt {
 
   /** Lazily checkpoint `df` under the session's configured regime (see
-    * object scaladoc). Always lazy: materialization happens inside the
-    * first job that executes the frame — never a hidden driver action.
+    * object scaladoc). The checkpoint's blocks are written inside the
+    * first job that executes the frame. Lazy is not job-free, though:
+    * with AQE on (the default), building the checkpointed frame runs
+    * every shuffle stage below it as a job of its own, because the
+    * adaptive plan must execute those stages to produce the RDD. A frame
+    * with no exchange below it runs no job at build. With AQE off the
+    * build runs none. (Spark 4.1, `local[2]`: a `groupBy` or a global
+    * window under `localCheckpoint(eager = false)` ran 1 job at build
+    * with AQE on, 0 with it off.)
     *
     * In `reliable` mode the checkpoint dir belongs to the SparkContext
     * and is set once, by the first caller whose context has none: a

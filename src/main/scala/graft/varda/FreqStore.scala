@@ -1816,10 +1816,9 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
   }
 
   /** Merge a fragment set to disjoint (coalescing touching pieces) per
-    * (sample, chromosome, cell): the classic interval-union via a
-    * running-max window — new segment starts where a fragment begins
-    * past every previous end + 1. Strictly local to each cell, so
-    * bucket-restricted merges never need rows from other buckets.
+    * (sample, chromosome, cell) with [[VardaOps.mergeIntervals]].
+    * Strictly local to each cell, so bucket-restricted merges never need
+    * rows from other buckets.
     *
     * With `bucketed = true` the input must come through [[bucketize]]:
     * `bkt` (a function of (chromosome, cell)) leads every partition
@@ -1827,23 +1826,11 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     * and the output stays write-ready for `partitionBy("bkt")`. */
   private[graft] def mergeFragments(frags: DataFrame,
       bucketed: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val key = (if (bucketed) Seq("bkt") else Nil) ++
-      Seq("sample_id", "chromosome", "cell")
-    val out = (if (bucketed) Seq("bkt") else Nil) ++
-      Seq("chromosome", "cell", "fbegin", "fend", "sample_id", "pool_size")
-    val ord = Window.partitionBy(key.map(col): _*).orderBy("fbegin", "fend")
-    val prev = ord.rowsBetween(Window.unboundedPreceding, -1)
-    frags
-      .withColumn("__pmax", max(col("fend")).over(prev))
-      .withColumn("__new",
-        (col("__pmax").isNull || col("fbegin") > col("__pmax") + 1).cast("int"))
-      .withColumn("__seg", sum(col("__new"))
-        .over(ord.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy((key.map(col) :+ col("__seg")): _*)
-      .agg(min(col("fbegin")).as("fbegin"), max(col("fend")).as("fend"),
-        max(col("pool_size")).as("pool_size"))
-      .select(out.head, out.tail: _*)
+    val bkt = if (bucketed) Seq("bkt") else Nil
+    VardaOps.mergeIntervals(frags, bkt ++ Seq("sample_id", "chromosome", "cell"),
+        "fbegin", "fend")
+      .select((bkt ++ Seq("chromosome", "cell", "fbegin", "fend", "sample_id",
+        "pool_size")).map(col): _*)
   }
 
   /** Per-cell interval subtraction `batch \ store`: for each batch

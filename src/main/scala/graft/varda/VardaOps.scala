@@ -139,29 +139,31 @@ object VardaOps {
       .agg(sum(col("pool_size") * ploidy).cast(LongType).as("denom"))
   }
 
-  /** Merge one sample's coverage regions to DISJOINT intervals per
-    * (sample, chromosome) — one gaps-and-islands window; adjacent
-    * intervals coalesce ([1,5]+[6,10] → [1,10]). `pool_size` is a
-    * per-sample constant denormalized onto coverage rows (the import
-    * pipeline's invariant), so `max` per island preserves it. The
-    * window partitions by sample: partition size = one sample's region
-    * count, never the corpus. */
-  private[graft] def mergeIntervals(covDf: DataFrame): DataFrame = {
+  /** Merge intervals to DISJOINT ones per `keys` — one gaps-and-islands
+    * window: running max of the prior ends, a new-segment flag where an
+    * interval begins past it + 1, a running segment id, then min/max per
+    * segment. Adjacent intervals coalesce ([1,5]+[6,10] → [1,10]).
+    * `pool_size` is a per-sample constant denormalized onto coverage rows
+    * (the import pipeline's invariant), so `max` per island preserves it.
+    * Returns `keys`, `begin`, `end`, `pool_size`. The defaults merge one
+    * sample's coverage regions per (sample, chromosome): partition size
+    * is one sample's region count, never the corpus. */
+  private[graft] def mergeIntervals(covDf: DataFrame,
+      keys: Seq[String] = Seq("sample_id", "chromosome"),
+      begin: String = "begin_pos", end: String = "end_pos"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ord = Window.partitionBy("sample_id", "chromosome")
-      .orderBy("begin_pos", "end_pos")
+    val ord = Window.partitionBy(keys.map(col): _*).orderBy(begin, end)
     val prev = ord.rowsBetween(Window.unboundedPreceding, -1)
     covDf
-      .withColumn("__pmax", max(col("end_pos")).over(prev))
+      .withColumn("__pmax", max(col(end)).over(prev))
       .withColumn("__new",
-        (col("__pmax").isNull || col("begin_pos") > col("__pmax") + 1).cast("int"))
+        (col("__pmax").isNull || col(begin) > col("__pmax") + 1).cast("int"))
       .withColumn("__seg", sum(col("__new"))
         .over(ord.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy("sample_id", "chromosome", "__seg")
-      .agg(min(col("begin_pos")).as("begin_pos"),
-        max(col("end_pos")).as("end_pos"),
+      .groupBy(keys.map(col) :+ col("__seg"): _*)
+      .agg(min(col(begin)).as(begin), max(col(end)).as(end),
         max(col("pool_size")).as("pool_size"))
-      .select("sample_id", "chromosome", "begin_pos", "end_pos", "pool_size")
+      .select((keys :+ begin :+ end :+ "pool_size").map(col): _*)
   }
 
   /** Per-sample interval SUBTRACTION `after \ before`: the fragments of
@@ -591,66 +593,48 @@ object VardaOps {
     dir
   }
 
-  /** The SERVING keys' shared store, built once per (session, sfDir) —
-    * the ANN-index memoization contract: the import is the amortized
-    * offline step (Bench warms it like the LSH/IVF fits), so
-    * `varda_freq_lookup` / `varda_freq_lookup_expr` /
-    * `varda_annotate_store` measure the serving path. The import-replay
-    * key itself ([[vardaFreqIncremental]]) deliberately does NOT use
-    * this memo. */
-  // weak keys: a memo entry must not pin a retired SparkSession (and
-  // its SessionState) for the JVM's lifetime — same liveness discipline
-  // as the graph edge cache
-  private val builtStores =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, String]]
+  /** The SERVING keys' shared store, a standing build per
+    * (session, sfDir): the import is the amortized offline step (Bench
+    * warms it like the LSH/IVF fits), so `varda_freq_lookup` /
+    * `varda_freq_lookup_expr` / `varda_annotate_store` measure the
+    * serving path. The import-replay key itself
+    * ([[vardaFreqIncremental]]) deliberately does NOT use this store. */
   private def committedFreqStore(s: SparkSession, d: String): String =
-    builtStores.synchronized {
-      builtStores.computeIfAbsent(s,
-          _ => scala.collection.mutable.Map.empty[String, String])
-        .getOrElseUpdate(d, {
-          val dir = buildFreqStore(s, d, "freq_store")
-          // the serving store runs COMPACTED (round-11): one snapshot
-          // generation, tombstones folded away, and — the point — the
-          // obslog re-bucketed under the point hash, so the filtered
-          // flagship lookups prune their obslog read to the probes'
-          // buckets instead of scanning import history. Amortized into
-          // the one-time build like the import replay itself.
-          new FreqStore(s, dir).compact()
-          dir
-        })
+    graft.util.Standing.get(s, "freq_store", d) {
+      val dir = buildFreqStore(s, d, "freq_store")
+      // the serving store runs COMPACTED (round-11): one snapshot
+      // generation, tombstones folded away, and — the point — the
+      // obslog re-bucketed under the point hash, so the filtered
+      // flagship lookups prune their obslog read to the probes'
+      // buckets instead of scanning import history. Amortized into
+      // the one-time build like the import replay itself.
+      new FreqStore(s, dir).compact()
+      dir
     }
 
-  /** TIME-TRAVEL store for the as-of key: the same 3-batch replay,
-    * memoized per (session, sfDir) like the serving store but NOT
-    * compacted — a snapshot floors the commit log, so addressable
-    * history is exactly what compaction has not yet consolidated
-    * (the lakehouse time-travel/vacuum trade). Build amortized into
-    * warmup like every other standing index. */
   /** The memoized time-travel store's directory, for tooling that
     * compares a declared key's output against the SAME store's direct
     * reads ([[graft.tools.ChangesParity]]). */
   private[graft] def ttStoreDirFor(s: SparkSession, d: String): String =
     timeTravelFreqStore(s, d)
 
+  /** TIME-TRAVEL store for the as-of key: the same 3-batch replay, a
+    * standing build like the serving store but NOT compacted — a
+    * snapshot floors the commit log, so addressable history is exactly
+    * what compaction has not yet consolidated (the lakehouse
+    * time-travel/vacuum trade). */
   private def timeTravelFreqStore(s: SparkSession, d: String): String =
-    builtStores.synchronized {
-      builtStores.computeIfAbsent(s,
-          _ => scala.collection.mutable.Map.empty[String, String])
-        .getOrElseUpdate(d + "#tt", buildFreqStore(s, d, "freq_store_tt"))
-    }
+    graft.util.Standing.get(s, "freq_store_tt", d)(
+      buildFreqStore(s, d, "freq_store_tt"))
 
   /** The BOOTSTRAP key's store: same 3-batch replay, but compaction
     * lands MID-HISTORY (after batch 1), so generations 0-1 consolidate
     * into a snapshot whose v0 deltas are swept while batch 2 commits as
     * a streamable tail — the store shape every late-attaching CDC
-    * consumer faces. Memoized per (session, sfDir) like its siblings. */
+    * consumer faces. A standing build like its siblings. */
   private def bootstrapFreqStore(s: SparkSession, d: String): String =
-    builtStores.synchronized {
-      builtStores.computeIfAbsent(s,
-          _ => scala.collection.mutable.Map.empty[String, String])
-        .getOrElseUpdate(d + "#boot",
-          buildFreqStore(s, d, "freq_store_boot", compactAfter = Some(1L)))
-    }
+    graft.util.Standing.get(s, "freq_store_boot", d)(
+      buildFreqStore(s, d, "freq_store_boot", compactAfter = Some(1L)))
 
   /** CHANGE-STREAM key [N] — the reference's poll-for-new-imports
     * lifecycle [U varda/tasks.py] consumed THROUGH the real streaming

@@ -208,6 +208,9 @@ class GlobalRankSpec extends AnyFunSuite {
       numPartitions = 4))
     parity(GlobalRank.groupedRowsAtRanks(_, Seq("g"), ckDesc, "rn", want,
       numPartitions = 4))
+    parity(GlobalRank.groupedRowsAtRanks(_, Nil, ck, "rn",
+      n => n.select(explode(array(lit(1L), col("n"))).as("__gr_want")),
+      numPartitions = 4))
   }
 
   test("local and chunked running sums agree on LONG and DECIMAL summands") {

@@ -16,5 +16,11 @@ rm -rf target/verify_sf0.01_chunked
 EXTRA_JAVA_OPTS=-Dspark.graft.globalRank.localMaxBytes=0 tools/run_main.sh Verify \
   ../testdata/sf0.01 target/verify_sf0.01_chunked 2>&1 | grep -E "\[verify\]" || true
 python3 tools/check.py ../testdata/sf0.01 target/verify_sf0.01_chunked | tail -1
+# the same sf0.01 oracle with AQE off, so results do not depend on the
+# adaptive plan (cleared first, like the chunked cell)
+rm -rf target/verify_sf0.01_noaqe
+EXTRA_JAVA_OPTS=-Dspark.sql.adaptive.enabled=false tools/run_main.sh Verify \
+  ../testdata/sf0.01 target/verify_sf0.01_noaqe 2>&1 | grep -E "\[verify\]" || true
+python3 tools/check.py ../testdata/sf0.01 target/verify_sf0.01_noaqe | tail -1
 sbt -batch test 2>&1 | grep -E "Tests:|FAILED"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" 2>/dev/null | grep metric
