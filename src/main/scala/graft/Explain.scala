@@ -9,13 +9,18 @@ package graft
   * Explain runs no action of its own (a key's builder may still run the
   * jobs of its checkpoints): the plan printed is the adaptive plan as
   * planned (`isFinalPlan=false`), exchanges and joins included. Expression ids
-  * (`#123`) and exchange `plan_id`s print as `#x` and `plan_id=x`, so two
-  * dumps of the same query on different commits diff line for line. */
+  * (`#123`) and exchange `plan_id`s print as `#x` and `plan_id=x`, and scan
+  * metadata prints in full, so two dumps of the same query on different
+  * commits diff line for line. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val keys = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = Session.local()
+    // untruncated scan metadata: a filter list cut at 100 characters cuts
+    // at a place that depends on the expression ids' digit counts, so two
+    // dumps of one plan would differ after the ids are normalized
+    spark.conf.set("spark.sql.maxMetadataStringLength", Int.MaxValue.toString)
     keys.foreach { k =>
       SparkEntry.queries.get(k) match {
         case Some(fn) =>

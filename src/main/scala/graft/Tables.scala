@@ -68,29 +68,6 @@ object Tables {
   def documents(spark: SparkSession, d: String): DataFrame = table(spark, d, "documents")
   def embeddings(spark: SparkSession, d: String): DataFrame = table(spark, d, "embeddings")
 
-  /** Raw on-disk bytes of one table's parquet directory — the
-    * size-gate input (r20): deterministic from the files, memoized per
-    * (sfDir, table) so gated query builders pay a filesystem stat once
-    * per JVM instead of a catalyst analyze+optimize pass per call
-    * (~40 ms, measured as 12% of varda_annotate_multi's bench line when
-    * the gate read `optimizedPlan.stats`). A failed stat returns 0 (the
-    * small-input plan) uncached, logged to stderr, and is retried on the
-    * next call. */
-  private val sizeCache = TrieMap.empty[(String, String), Long]
-  def inputBytes(spark: SparkSession, sfDir: String, name: String): Long =
-    sizeCache.getOrElse((sfDir, name), {
-      val p = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-      try {
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val n = fs.getContentSummary(p).getLength
-        sizeCache.put((sfDir, name), n)
-        n
-      } catch { case e: Exception =>
-        System.err.println(s"[tables] inputBytes($p) failed, gating as 0 bytes: $e")
-        0L
-      }
-    })
-
   /** Drop a short-lived CLONED session's standing builds and view
     * registration (`newSession` — the FreqStore replay, the rewrite
     * keys), so repeated calls do not accumulate SessionStates and

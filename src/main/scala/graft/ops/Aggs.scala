@@ -260,70 +260,26 @@ object Aggs {
       .orderBy("lang")
   }
 
-  /** Exact per-group median of `events.value`, DISTRIBUTED: the in-group
-    * rank comes from [[GlobalRank.withGroupedRowNumber]]'s arithmetic
-    * chunking, so no group is ever sorted inside a single task (the
-    * failure mode of `percentile` / a per-group window at fact scale —
-    * 5 event types over 100 TB would mean 5 tasks sorting 20 TB each).
-    * Declared output is 2×median ×10^4 as BIGINT: the sum of the one or
-    * two middle decimal values needs no division, keeping the result
-    * integer-exact and engine-portable (DuckDB's avg/median return
-    * DOUBLE, which can never hash-match). */
-  /** The r19 rank-SELECTING rewrite ([[GlobalRank.groupedRowsAtRanks]])
-    * trades the full row-level window sort for an extra chunk-count
-    * aggregate pass plus two broadcast joins — a FIXED cost that r19's
-    * interleaved A/B measured LARGER than the saved sort at sf0.1
-    * (agg_quartiles 0.81×, the round's one real regression). So the
-    * selecting path now gates on the events table's raw parquet bytes
-    * (deterministic from the files, memoized — a catalyst stats call
-    * here cost ~40 ms of analyze+optimize per invocation; tunable via
-    * `spark.graft.rankSelect.minInputBytes`): below the threshold the
-    * plain full-ranking form wins on plan-fixed overhead, above it the
-    * selecting form wins by sorting only the ~3/32 chunk slice that can
-    * contain a wanted rank. Both forms assign byte-identical ranks
-    * (r19, oracle-verified at every scale), so the gate never changes
-    * the result. Default 64 MB sits above the r20 sf1 measurement point
-    * (see OPTIMIZATION_r20.md — the crossover measured there). Below
-    * GlobalRank's own small-input threshold
-    * (`spark.graft.globalRank.localMaxBytes`, 8 MB) both branches run
-    * the same single `row_number` window over the events, so this gate
-    * only chooses between the two chunked forms. Both forms stay: at sf1
-    * (GenScale `events`, 16 MB, so both chunked) warm `tools.ProfKeys`
-    * reps (build + plan + exec, 4-vCPU VM, A B B A) put agg_exact_median
-    * at 2.5-4.4 s full-ranking vs 2.8-4.2 s selecting and agg_quartiles
-    * at 2.3-2.7 s vs 2.7-3.0 s — no win for selecting yet at 16 MB, and
-    * it is the only form that sorts a ~3/32 slice at fact scale. */
-  private def useRankSelect(s: org.apache.spark.sql.SparkSession,
-      d: String): Boolean = {
-    val thresh = s.conf
-      .get("spark.graft.rankSelect.minInputBytes", (64L << 20).toString).toLong
-    Tables.inputBytes(s, d, "events") >= thresh
-  }
-
+  /** Exact per-group median of `events.value`, DISTRIBUTED: the one or
+    * two middle in-group ranks come from
+    * [[GlobalRank.groupedRowsAtRanks]], so no group is ever sorted inside
+    * a single task (the failure mode of `percentile` / a per-group window
+    * at fact scale — 5 event types over 100 TB would mean 5 tasks sorting
+    * 20 TB each). Above GlobalRank's small-input threshold only the
+    * chunks whose rank interval holds a middle rank are window-sorted;
+    * below it one plain window ranks the events. Declared output is
+    * 2×median ×10^4 as BIGINT: the sum of the one or two middle decimal
+    * values needs no division, keeping the result integer-exact and
+    * engine-portable (DuckDB's avg/median return DOUBLE, which can never
+    * hash-match). */
   val aggExactMedian: Q = (s, d) => {
     val ev = Tables.events(s, d)
       .select(col("event_type"), dec4(col("value")).as("v"), col("event_id"))
     val lo = floor((col("n") + 1) / 2).cast(LongType)
     val hi = floor((col("n") + 2) / 2).cast(LongType)
-    // rank-SELECTING form (r19): only the chunks holding the two middle
-    // ranks are window-sorted, instead of ranking every row and
-    // discarding all but 1-2 per group — rank assignment (and thus the
-    // selected rows) is identical by construction. Size-gated (r20):
-    // below the threshold the full-ranking form's smaller plan wins.
-    val sel =
-      if (useRankSelect(s, d))
-        GlobalRank.groupedRowsAtRanks(ev, Seq("event_type"),
-          Seq(col("v"), col("event_id")), "rn",
-          n => n.select(col("event_type"),
-            explode(array(lo, hi)).as("__gr_want")))
-      else {
-        val ranked = GlobalRank.withGroupedRowNumber(ev, Seq("event_type"),
-          Seq(col("v"), col("event_id")), "rn")
-        val n = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
-        ranked.join(broadcast(n), "event_type")
-          .filter(col("rn") === lo || col("rn") === hi)
-      }
-    sel.groupBy("event_type")
+    GlobalRank.groupedRowsAtRanks(ev, Seq("event_type"),
+        Seq(col("v"), col("event_id")), "rn", array(lo, hi))
+      .groupBy("event_type")
       .agg(scaledLong(
         (sum(col("v")) * when(count(lit(1)) === 1, 2).otherwise(1))
           .cast(DecimalType(38, 4)), 4).as("med2_e4"))
@@ -379,37 +335,22 @@ object Aggs {
       .orderBy("l_returnflag")
 
   /** Discrete quartiles (percentile_disc at 0.25/0.5/0.75) per group,
-    * distributed exactly like [[aggExactMedian]]: chunked in-group rank,
-    * broadcast counts, pick rows at rank ceil(q·n) — integer formulas
-    * `(n+3) div 4`, `(n+1) div 2`, `(3n+3) div 4`, so both engines select
-    * the identical row with no floating-point q·n. The selected VALUE is
-    * deterministic even under value ties (any row at the target rank
-    * carries the same v). One shuffle for the rank, one broadcast join;
-    * never a per-group single-task sort. */
+    * distributed exactly like [[aggExactMedian]]:
+    * [[GlobalRank.groupedRowsAtRanks]] selects the rows at rank ceil(q·n)
+    * — integer formulas `(n+3) div 4`, `(n+1) div 2`, `(3n+3) div 4`, so
+    * both engines select the identical row with no floating-point q·n.
+    * The selected VALUE is deterministic even under value ties (any row
+    * at the target rank carries the same v). Never a per-group
+    * single-task sort. */
   val aggQuartiles: Q = (s, d) => {
     val ev = Tables.events(s, d)
       .select(col("event_type"), dec4(col("value")).as("v"), col("event_id"))
     val r25 = floor((col("n") + 3) / 4).cast(LongType)
     val r50 = floor((col("n") + 1) / 2).cast(LongType)
     val r75 = floor((col("n") * 3 + 3) / 4).cast(LongType)
-    // rank-SELECTING form (r19, the [[aggExactMedian]] rewrite): only
-    // the chunks holding the three quartile ranks are window-sorted.
-    // Size-gated like [[aggExactMedian]] (r20): the selecting form's
-    // extra chunk-count pass was a measured 19% regression at sf0.1.
-    val sel =
-      if (useRankSelect(s, d))
-        GlobalRank.groupedRowsAtRanks(ev, Seq("event_type"),
-          Seq(col("v"), col("event_id")), "rn",
-          n => n.select(col("event_type"),
-            explode(array(r25, r50, r75)).as("__gr_want")))
-          .withColumn("n", col("__gr_n"))
-      else {
-        val ranked = GlobalRank.withGroupedRowNumber(ev, Seq("event_type"),
-          Seq(col("v"), col("event_id")), "rn")
-        val n = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
-        ranked.join(broadcast(n), "event_type")
-          .filter(col("rn") === r25 || col("rn") === r50 || col("rn") === r75)
-      }
+    val sel = GlobalRank.groupedRowsAtRanks(ev, Seq("event_type"),
+        Seq(col("v"), col("event_id")), "rn", array(r25, r50, r75))
+      .withColumn("n", col("__gr_n"))
     def pick(r: org.apache.spark.sql.Column, out: String) =
       scaledLong(max(when(col("rn") === r, col("v")))
         .cast(DecimalType(38, 4)), 4).as(out)

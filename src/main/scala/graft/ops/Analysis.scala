@@ -140,14 +140,13 @@ object Analysis {
         Seq(s"(CASE WHEN 2 * $lo >= n THEN 1 ELSE 0 END) * ${1 << b}",
           s"(CASE WHEN 2 * $hi >= n THEN 1 ELSE 0 END) * ${1 << (b + 8)}")
       }.mkString(" + ")).as(s"b$k")
-    // One row per doc — persist so the self-join's two sides read the
-    // materialized table instead of re-running the shingle explode + agg
-    // (at 100 TB the signature table is the persisted asset; the corpus
-    // is scanned once).
-    val simh = withV.groupBy("doc_id")
+    // One row per doc — checkpointed so the self-join's two sides read
+    // the materialized table instead of re-running the shingle explode +
+    // agg (the corpus is scanned once). A per-query temporary, so Ckpt,
+    // not the session CacheManager.
+    val simh = graft.util.Ckpt.narrow(withV.groupBy("doc_id")
       .agg(packedAggs.head, packedAggs.tail :+ nAgg: _*)
-      .select(col("doc_id") +: (0 until 4).map(bandCol): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id") +: (0 until 4).map(bandCol): _*))
     // Band rows carry all four bands, so the candidate equi-join already
     // has both sides' full simhash — no join-back needed.
     val bands = simh.select(col("doc_id") +: (0 until 4).map(k => col(s"b$k")) :+

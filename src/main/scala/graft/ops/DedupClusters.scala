@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Ckpt
 
 /** Near-dup cluster resolution — the step after pair generation that an
   * actual dedup pipeline needs: near-dup PAIRS (from jaccard / minhash /
@@ -39,23 +40,23 @@ object DedupClusters {
     // No distinct: pair generators emit unique pairs, and both union-find
     // and the min-label aggregation are idempotent under duplicate edges,
     // so deduplication would be one whole extra shuffle for nothing.
-    val undirected = pairs.select(explode(array(
+    // Both edge frames are per-query temporaries, so they go through
+    // Ckpt, never the session CacheManager.
+    val undirected = Ckpt.narrow(pairs.select(explode(array(
         struct(col("d1").as("a"), col("d2").as("b")),
         struct(col("d2").as("a"), col("d1").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("e.a").as("a"), col("e.b").as("b")))
     // Size the iteration shuffles to the edge set, not the session default:
     // near-dup edge sets are orders of magnitude smaller than the corpus
     // (bounded by pair-generator selectivity), and every closure step is
     // join/agg over edges only — at a few hundred edges, 32-way shuffles
     // are pure scheduling overhead; at 10^9 edges this picks wide plans.
-    val nEdges = undirected.count() // also materializes the persist
+    val nEdges = undirected.count() // also writes the checkpoint
     val parts = if (numPartitions > 0) numPartitions
       else math.max(1, math.min(
         spark.sessionState.conf.numShufflePartitions,
         (nEdges / 2000000L).toInt + 1))
-    val edges = undirected.repartition(parts, col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = Ckpt.narrow(undirected.repartition(parts, col("b")))
     // phase 1: per-partition union-find (path-halving), one pass
     val contracted = edges.as[(Long, Long)].mapPartitions { it =>
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]

@@ -117,44 +117,47 @@ object GlobalRank {
     * every row to then discard all but 2-3 per group pays a full sort
     * exchange over the fact table; here only the chunks whose rank
     * interval [offset+1, offset+count] contains a wanted rank are
-    * window-sorted — with the default chunk count that is a ~3/32
-    * slice, and the chunk-count aggregate that decides it ships
-    * O(groups × chunks) rows (r19: this halved agg_exact_median /
-    * agg_quartiles). Selection is rank-identical to ranking everything:
-    * chunk ids, offsets and the in-chunk total order are byte-identical
-    * to [[withGroupedRowNumber]]'s, so the surviving rows carry the
-    * same `out` rank they would have had there.
+    * window-sorted. A group splits into [[SelectChunks]] chunks per
+    * shuffle partition (`numPartitions` sets the count instead), so k
+    * wanted ranks sort at most k of them, and the chunk-count aggregate
+    * that decides it ships O(groups × chunks) rows. Selection is
+    * rank-identical to ranking everything: any monotone chunk map gives
+    * the same offsets + in-chunk row numbers
+    * ([[withGroupedChunkId]]), so the surviving rows carry the same `out`
+    * rank [[withGroupedRowNumber]] gives them.
     *
-    * `wanted` maps the per-group count frame (groupCols + `n` BIGINT) to
-    * a frame of (groupCols + `__gr_want` BIGINT) wanted ranks — both are
-    * group-cardinality-sized and ride broadcasts. Returns the selected
-    * rows with `out` (the in-group rank) and `__gr_n` (the group's row
-    * count) appended. */
+    * `ranks` is an ARRAY<BIGINT> expression over the group's row count
+    * `n` (BIGINT) giving the wanted ranks; a rank out of [1, n] selects
+    * nothing and a repeated rank selects its row once. The per-group
+    * frame of counts and wanted ranks is group-cardinality-sized and
+    * rides a broadcast. Returns the selected rows with `out` (the
+    * in-group rank) and `__gr_n` (the group's row count) appended. */
   def groupedRowsAtRanks(df: DataFrame, groupCols: Seq[String],
-      keys: Seq[Column], out: String,
-      wanted: DataFrame => DataFrame, chunkKey: Option[Column] = None,
-      numPartitions: Int = 0): DataFrame = {
+      keys: Seq[Column], out: String, ranks: Column,
+      chunkKey: Option[Column] = None, numPartitions: Int = 0): DataFrame = {
     val gcols = groupCols.map(col)
-    val (ranked, nPer, want) = if (local(df)) {
+    // one row per (group, distinct wanted rank), carrying the group's count
+    def wantedOf(nPer: DataFrame) = nPer.select(gcols ++ Seq(
+      col("n").as("__gr_n"), explode(array_distinct(ranks)).as("__gr_want")): _*)
+    val (ranked, want) = if (local(df)) {
       // sum, not count: the chunked `n` (a sum of chunk counts) is nullable
       val nPer = df.groupBy(gcols: _*).agg(sum(lit(1L)).as("n"))
-      (localRowNumber(df, groupCols, keys, out), nPer, wanted(nPer))
+      (localRowNumber(df, groupCols, keys, out), wantedOf(nPer))
     } else {
       val bucketed = withGroupedChunkId(df, groupCols, keys, chunkKey,
-        numPartitions)
-      // O(groups × chunks); referenced by the offsets window AND the
-      // per-group totals — materialize once instead of re-running the
-      // count aggregate (and its scan) per reference
-      val chunkCounts = graft.util.Ckpt.narrow(
-        bucketed.groupBy(gcols :+ col("__gr_pid"): _*).count())
+        if (numPartitions > 0) numPartitions
+        else SelectChunks * df.sparkSession.sessionState.conf.numShufflePartitions)
+      // O(groups × chunks), read by the offsets window and the per-group
+      // totals: both sit in one query, so exchange reuse runs the count
+      // aggregate once, and no checkpoint runs it at build
+      val chunkCounts = bucketed.groupBy(gcols :+ col("__gr_pid"): _*).count()
       val withOff = chunkCounts
         .withColumn("__gr_offset",
           coalesce(sum(col("count")).over(
             Window.partitionBy(gcols: _*).orderBy("__gr_pid")
               .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      val nPer = chunkCounts.groupBy(gcols: _*)
-        .agg(sum(col("count")).as("n"))
-      val want = wanted(nPer)
+      val want = wantedOf(chunkCounts.groupBy(gcols: _*)
+        .agg(sum(col("count")).as("n")))
       // chunks whose global-rank interval contains a wanted rank
       val needed = nullSafeOn(withOff, want, groupCols,
           col("__gr_want") > col("__gr_offset") &&
@@ -166,16 +169,20 @@ object GlobalRank {
       val ranked = nullSafeBroadcastJoin(bucketed, needed,
           groupCols :+ "__gr_pid")
         .withColumn(out, col("__gr_offset") + row_number().over(localW))
-      (ranked, nPer, want)
+      (ranked, want)
     }
-    // keep exactly the wanted ranks; attach the group's row count
-    val sel = nullSafeOn(ranked, want.select(gcols :+ col("__gr_want"): _*)
-        .distinct(), groupCols, col(out) === col("__gr_want"))
-      .drop(groupCols.map(c => s"__gr_w_$c") :+ "__gr_want": _*)
-    nullSafeBroadcastJoin(sel,
-        nPer.withColumnRenamed("n", "__gr_n"), groupCols)
-      .drop("__gr_pid", "__gr_offset")
+    // keep exactly the wanted ranks, with the group's row count
+    nullSafeOn(ranked, want, groupCols, col(out) === col("__gr_want"))
+      .drop(groupCols.map(c => s"__gr_w_$c") ++
+        Seq("__gr_want", "__gr_pid", "__gr_offset"): _*)
   }
+
+  /** Chunks per shuffle partition in [[groupedRowsAtRanks]]. On 16 MB
+    * of `events` (GenScale sf1, 4 shuffle partitions, 4-vCPU VM) the
+    * median warm `tools.ProfKeys` rep of agg_exact_median and
+    * agg_quartiles took 2.9-3.8 s at 1 chunk per partition and
+    * 2.0-2.7 s at 16, 32 and 64. */
+  private val SelectChunks = 32
 
   /** Append `out` = inclusive global running sum of `value` under the
     * total order `keys`: [[withGroupedRunningSum]] with no group columns.
@@ -328,8 +335,10 @@ object GlobalRank {
 
   /** True when `df` is small enough for one plain Spark window (object
     * scaladoc): the input bytes of the leaves of its analyzed plan sum to
-    * less than `spark.graft.globalRank.localMaxBytes` (default 8 MB, the
-    * multiSweep gate's default; 0 forces the chunked form). A file
+    * less than `spark.graft.globalRank.localMaxBytes` (default 8 MB; 0
+    * forces every scale form). This is the one small-input decision in
+    * the engine: the median/quartile rank selection and
+    * varda_annotate_multi's denominator sweep ask it too. A file
     * relation counts its file index's `sizeInBytes`, listed when the
     * relation was resolved; any other leaf counts its Catalyst
     * `stats.sizeInBytes` — no job and no optimizer pass. A leaf of

@@ -312,9 +312,7 @@ object Pipeline {
       expr(zValueSpark("l_orderkey", "l_partkey")).as("z"))
     // explicit file count: at 100 TB this is total_bytes / target_file_size
     // (a write-time layout choice, not something AQE should coalesce away)
-    val parts = s.conf.getOption("spark.graft.zorder.partitions").map(_.toInt)
-      .getOrElse(s.sessionState.conf.numShufflePartitions)
-    z.repartitionByRange(parts, col("z"), col("l_orderkey"), col("l_partkey"),
+    z.repartitionByRange(s.sessionState.conf.numShufflePartitions, col("z"), col("l_orderkey"), col("l_partkey"),
         col("line_no"))
       .sortWithinPartitions("z", "l_orderkey", "l_partkey", "line_no")
       .write.mode("overwrite").parquet(dest)

@@ -5,7 +5,9 @@ import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** Per-key layer profile. For each key and rep it prints the builder call
-  * (`build_s`), physical planning (`plan_s`, `queryExecution.executedPlan`),
+  * (`build_s`) and the jobs that started during it (`build_jobs`: the
+  * checkpoints and standing builds a builder runs), physical planning
+  * (`plan_s`, `queryExecution.executedPlan`),
   * execution (`exec_s`, `count()`), `rows`, the `jobs`, `stages` and
   * `tasks` the rep ran, `driver_gap_s` (rep wall time no job covered) and
   * `compiles`: the classes Spark's code generator compiled during the rep
@@ -55,6 +57,7 @@ object ProfKeys {
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
+        val wb = System.currentTimeMillis()
         df.queryExecution.executedPlan
         val t2 = System.nanoTime()
         val rows = df.count()
@@ -72,7 +75,9 @@ object ProfKeys {
           reach = e
         }
         val fields = Seq(
-          "build_s" -> sec(t0, t1), "plan_s" -> sec(t1, t2),
+          "build_s" -> sec(t0, t1),
+          "build_jobs" -> js.count(_.start <= wb).toString,
+          "plan_s" -> sec(t1, t2),
           "exec_s" -> sec(t2, t3), "rows" -> rows.toString,
           "jobs" -> js.size.toString, "stages" -> js.map(_.stages).sum.toString,
           "tasks" -> js.map(_.tasks).sum.toString,

@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   *  - a `SparkContext`, for builds the whole application shares. Cloned
   *    sessions (`newSession()`) share the applicationId that keys every
   *    [[graft.ops.Scans.scratch]] directory, so a build that writes there
-  *    (sim_ann_ivf_persist's index) keys on the context: a session key
-  *    would let two clones race into the same directory.
+  *    (sim_ann_ivf_persist's index, the FreqStore stores) keys on the
+  *    context: a session key would let two clones race into the same
+  *    directory.
   *
   * `name` tells the call sites apart, so two builds never share an entry;
   * `key` is the build's own argument (usually the sfDir).

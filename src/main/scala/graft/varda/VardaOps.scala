@@ -520,19 +520,19 @@ object VardaOps {
     // this key's declared semantics IS the import replay — it rebuilds
     // its own store on every call (never the serving keys' memoized
     // one), so its bench line measures the commit path honestly
-    new FreqStore(s, buildFreqStore(s, d, "freq_store_replay")).serve()
+    new FreqStore(s, buildFreqStore(s, d,
+        graft.ops.Scans.scratch(s, "freq_store_replay", d))).serve()
       .orderBy("chromosome", "position", "reference", "observed")
   }
 
-  /** Replay the fixture into a committed [[FreqStore]] in 3 import
-    * batches. Commits run on a CLONED session (batch-sized shuffles
-    * want 8 partitions + AQE off; `newSession` keeps the overrides
-    * invisible to concurrent callers), and the fixture is materialized
-    * ONCE and sliced per batch — deriving it is the harness's job, not
-    * the store's. */
-  private def buildFreqStore(s: SparkSession, d: String, name: String,
+  /** Replay the fixture into a committed [[FreqStore]] at `dir` in 3
+    * import batches; returns `dir`. Commits run on a CLONED session
+    * (batch-sized shuffles want 8 partitions + AQE off; `newSession`
+    * keeps the overrides invisible to concurrent callers), and the
+    * fixture is materialized ONCE and sliced per batch — deriving it is
+    * the harness's job, not the store's. */
+  private def buildFreqStore(s: SparkSession, d: String, dir: String,
       compactAfter: Option[Long] = None): String = {
-    val dir = graft.ops.Scans.scratch(s, name, d)
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "8")
     s2.conf.set("spark.sql.adaptive.enabled", "false")
@@ -593,15 +593,28 @@ object VardaOps {
     dir
   }
 
-  /** The SERVING keys' shared store, a standing build per
-    * (session, sfDir): the import is the amortized offline step (Bench
+  /** A standing FreqStore: the directory of store `name` over `d`, where
+    * `build` replays it at most once. The store is a directory, not a
+    * frame bound to a session, and its [[graft.ops.Scans.scratch]] path
+    * is keyed by the applicationId that every `newSession()` clone
+    * shares, so the memo is scoped on the context and keyed by that
+    * directory: two clones get one replay, never two racing into one
+    * directory. */
+  private[graft] def standingStore(s: SparkSession, name: String, d: String)(
+      build: String => Unit): String = {
+    val dir = graft.ops.Scans.scratch(s, name, d)
+    graft.util.Standing.get(s.sparkContext, "freq_store", dir) { build(dir); dir }
+  }
+
+  /** The SERVING keys' shared store, a standing build per sfDir (see
+    * [[standingStore]]): the import is the amortized offline step (Bench
     * warms it like the LSH/IVF fits), so `varda_freq_lookup` /
     * `varda_freq_lookup_expr` / `varda_annotate_store` measure the
     * serving path. The import-replay key itself
     * ([[vardaFreqIncremental]]) deliberately does NOT use this store. */
   private def committedFreqStore(s: SparkSession, d: String): String =
-    graft.util.Standing.get(s, "freq_store", d) {
-      val dir = buildFreqStore(s, d, "freq_store")
+    standingStore(s, "freq_store", d) { dir =>
+      buildFreqStore(s, d, dir)
       // the serving store runs COMPACTED (round-11): one snapshot
       // generation, tombstones folded away, and — the point — the
       // obslog re-bucketed under the point hash, so the filtered
@@ -609,7 +622,6 @@ object VardaOps {
       // buckets instead of scanning import history. Amortized into
       // the one-time build like the import replay itself.
       new FreqStore(s, dir).compact()
-      dir
     }
 
   /** The memoized time-travel store's directory, for tooling that
@@ -624,8 +636,7 @@ object VardaOps {
     * what compaction has not yet consolidated (the lakehouse
     * time-travel/vacuum trade). */
   private def timeTravelFreqStore(s: SparkSession, d: String): String =
-    graft.util.Standing.get(s, "freq_store_tt", d)(
-      buildFreqStore(s, d, "freq_store_tt"))
+    standingStore(s, "freq_store_tt", d)(buildFreqStore(s, d, _))
 
   /** The BOOTSTRAP key's store: same 3-batch replay, but compaction
     * lands MID-HISTORY (after batch 1), so generations 0-1 consolidate
@@ -633,8 +644,8 @@ object VardaOps {
     * a streamable tail — the store shape every late-attaching CDC
     * consumer faces. A standing build like its siblings. */
   private def bootstrapFreqStore(s: SparkSession, d: String): String =
-    graft.util.Standing.get(s, "freq_store_boot", d)(
-      buildFreqStore(s, d, "freq_store_boot", compactAfter = Some(1L)))
+    standingStore(s, "freq_store_boot", d)(
+      buildFreqStore(s, d, _, compactAfter = Some(1L)))
 
   /** CHANGE-STREAM key [N] — the reference's poll-for-new-imports
     * lifecycle [U varda/tasks.py] consumed THROUGH the real streaming
@@ -1485,32 +1496,25 @@ object VardaOps {
     }
     val o = obs(s, d)
     val pts = o.select("chromosome", "position").distinct()
-    // per-expression denominators. Two result-identical forms, gated on
-    // the coverage scan's estimated bytes (r20, the OPT-5 gate pattern;
-    // spark.graft.multiSweep.minInputBytes, default 8 MB):
+    // per-expression denominators. Two result-identical forms, chosen by
+    // GlobalRank's one small-input rule on the coverage frame (its only
+    // leaf is the orders table, so the sf0.001-sf0.1 fixtures take the
+    // join and sf1 the sweep):
     //  - LARGE inputs: ONE merged-interval endpoint sweep for all
     //    expressions ([[sweepMassMergedMulti]]). The containment form's
     //    (point × covering sample) pair volume densifies quadratically —
-    //    measured this round at the sf1 decade: sink_vcf_multi 148.7 s
-    //    (c32) with the join vs 7.3 s with the sweep. Each covering
-    //    sample still counts once per expression (merged intervals make
-    //    it structural); the coverage-less pool stays a broadcast
+    //    measured at the sf1 decade: sink_vcf_multi 148.7 s (c32) with
+    //    the join vs 7.3 s with the sweep. Each covering sample still
+    //    counts once per expression (merged intervals make it
+    //    structural); the coverage-less pool stays a broadcast
     //    per-expression scalar.
-    //  - SMALL inputs: the containment join + pair distinct — at sf0.1
-    //    its pair volume is trivial and it avoids the sweep machinery's
-    //    fixed per-query stage latency (the measured r20 gap: 0.3 s join
-    //    vs 2.3 s sweep at sf0.1, inverted 20× at sf1). The gate stays
-    //    with GlobalRank's small-input window in place: warm
-    //    `tools.ProfKeys` reps at sf0.1 (build + plan + exec, 4-vCPU VM,
-    //    A B B A) put the join at 0.70-1.07 s and the forced sweep
-    //    (minInputBytes=0) at 1.96-2.72 s.
-    // gate input: the orders table's raw parquet bytes (the coverage
-    // fixture derives from orders) — memoized file stat, not a catalyst
-    // stats call (which cost ~40 ms of analyze+optimize per invocation)
+    //  - SMALL inputs: the containment join + pair distinct — its pair
+    //    volume is trivial there and it avoids the sweep machinery's
+    //    fixed per-query stage latency: warm `tools.ProfKeys` reps at
+    //    sf0.1 (build + plan + exec, 4-vCPU VM, A B B A) put the join at
+    //    0.70-1.07 s and the forced sweep at 1.96-2.72 s.
     val covDf = cov(s, d)
-    val sweepThresh = s.conf
-      .get("spark.graft.multiSweep.minInputBytes", (8L << 20).toString).toLong
-    val denoms = if (Tables.inputBytes(s, d, "orders") >= sweepThresh) {
+    val denoms = if (!graft.ops.GlobalRank.local(covDf)) {
       val masses = sweepMassMergedMulti(pts, mergeIntervals(covDf), preds)
       val uncovAggs = preds.map { case (n, p) =>
         coalesce(sum(when(p, col("pool_size"))), lit(0))

@@ -34,17 +34,6 @@ class AllQueriesSpec extends AnyFunSuite {
       Map("a" -> 1, "b" -> 2))
   }
 
-  test("inputBytes does not cache a failed stat: a table written later reports its size") {
-    val dir = java.nio.file.Files.createTempDirectory("inputbytes").toString
-    assert(Tables.inputBytes(spark, dir, "t") == 0L)
-    spark.range(1000).write.parquet(s"$dir/t.parquet")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/t.parquet")
-    val size = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
-    assert(size > 0L)
-    assert(Tables.inputBytes(spark, dir, "t") == size)
-  }
-
   test("agg_comoments sufficient statistics reproduce Spark's corr()") {
     import org.apache.spark.sql.functions.{col, corr}
     val m = ops.Aggs.aggComoments(spark, sf0001).collect()

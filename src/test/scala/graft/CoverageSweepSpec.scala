@@ -65,4 +65,23 @@ class CoverageSweepSpec extends AnyFunSuite {
     assert(viaKey() == viaJoin)
     assert(withLocalMaxBytes(0L)(viaKey()) == viaJoin, "chunked sweep")
   }
+
+  test("varda_annotate_multi: the containment join and the chunked sweep give the same rows") {
+    // the denominators take the join below GlobalRank's small-input
+    // threshold and the merged-interval sweep at localMaxBytes=0
+    def run(): (Set[String], Set[String]) = {
+      val df = VardaOps.vardaAnnotateMulti(spark, sf0001)
+      val cols = df.queryExecution.analyzed.collect { case p => p.output }
+        .flatten.map(_.name).toSet
+      (df.collect().map(_.toString).toSet, cols)
+    }
+    val (viaJoin, joinCols) = run()
+    val (viaSweep, sweepCols) = withLocalMaxBytes(0L)(run())
+    assert(joinCols.contains("bkt") && !joinCols.contains("mass_even"),
+      "the default did not take the containment join")
+    assert(sweepCols.contains("mass_even") && !sweepCols.contains("bkt"),
+      "localMaxBytes=0 did not take the sweep")
+    assert(viaJoin.nonEmpty)
+    assert(viaSweep == viaJoin)
+  }
 }

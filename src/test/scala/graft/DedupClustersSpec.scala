@@ -95,4 +95,16 @@ class DedupClustersSpec extends AnyFunSuite {
       .count(r => keptIds(r.getLong(0)) && keptIds(r.getLong(1)))
     assert(survivedPairs == 0, s"$survivedPairs near-dup pairs survived dedup")
   }
+
+  test("components and dedup_simhash leave no entry in the session CacheManager") {
+    def cached = org.apache.spark.sql.GraftTestBridge.cachedEntries(spark)
+    val before = cached
+    // 4 partitions: the iterating path, whose edge frames are read per round
+    val pairs = (0L until 10L).flatMap(c => Seq((10 * c, 10 * c + 1),
+      (10 * c + 1, 10 * c + 2))).toDF("d1", "d2")
+    assert(DedupClusters.components(pairs, numPartitions = 4).count() == 30)
+    ops.Analysis.dedupSimhash(spark, sf0001).count()
+    assert(cached <= before,
+      s"${cached - before} per-query frames left in the CacheManager")
+  }
 }

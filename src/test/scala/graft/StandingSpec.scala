@@ -79,4 +79,14 @@ class StandingSpec extends AnyFunSuite {
     assert(builds.get == 4)
     Seq(s1, s2).foreach(Standing.release)
   }
+
+  test("a FreqStore standing build is shared by clones: one directory, one replay") {
+    val (name, builds) = (s"spec_store_${fresh()}", new AtomicInteger)
+    val clones = Seq(spark.newSession(), spark.newSession())
+    val dirs = for (s <- clones ++ clones) yield
+      graft.varda.VardaOps.standingStore(s, name, sf0001)(_ => builds.incrementAndGet())
+    assert(dirs.distinct.size == 1)
+    assert(builds.get == 1)
+    clones.foreach(Standing.release)
+  }
 }
