@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.util.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -176,15 +177,13 @@ object Graph {
     * combine on the destination key. The vertex count enters as a
     * broadcast 1-row aggregate, never a driver-side collect. Symmetric
     * edges mean every vertex has out-degree ≥ 1: no dangling-mass term.
-    * At the declared 3 rounds the chained lazy plan stays shallow; for
-    * open-ended iteration use [[pagerankConverged]], which checkpoints
-    * per round. */
+    * At the declared 3 rounds the chained lazy plan stays shallow. */
   private[graft] def pagerank(edges: DataFrame, iters: Int): DataFrame = {
-    val dir = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint() // referenced by deg + every message round
-    val deg = dir.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint() // joined into every round's share computation
+    // referenced by deg + every message round
+    val dir = Ckpt.narrow(edges.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(edges.select(col("v").as("src"), col("u").as("dst"))))
+    // joined into every round's share computation
+    val deg = Ckpt.narrow(dir.groupBy("src").agg(count(lit(1)).as("deg")))
     val nRow = deg.agg(count(lit(1)).as("n"))
     var pr = deg.crossJoin(broadcast(nRow))
       .select(col("src").as("node"), expr("1000000000 div n").as("pr"))
@@ -203,52 +202,6 @@ object Graph {
   /** Declared graph_pagerank: 3 fixed-point iterations over the
     * support-thresholded supplier co-occurrence graph. */
   val graphPagerank: Q = (s, d) => pagerank(supplierEdges(s, d), 3)
-
-  /** Convergence-mode PageRank (round-8): the same integer recurrence as
-    * [[pagerank]], iterated until the e9-scaled rank vector stops moving
-    * (max per-vertex |Δpr| ≤ `tolE9`; 0 = the exact integer fixed point,
-    * which the floored contraction reaches — each round shrinks
-    * differences by ×0.85) or `maxIters` as the hard bound. Returns the
-    * rank frame plus the number of rounds actually run.
-    *
-    * Unlike the fixed-count loop, every round `localCheckpoint`s the new
-    * rank frame, so plan depth is O(1) however many rounds run — a user
-    * asking for 50 iterations no longer builds an exponentially nested
-    * plan — and the convergence test reads a single scalar per round
-    * (the changed-vertex COUNT, never row contents), the same O(1)
-    * driver-state discipline as [[DedupClusters]]' union-find loop.
-    * Because the arithmetic is identical, stopping after k rounds yields
-    * bit-for-bit `pagerank(edges, k)` (GraphSpec asserts it). */
-  private[graft] def pagerankConverged(edges: DataFrame, maxIters: Int,
-      tolE9: Long = 0L): (DataFrame, Int) = {
-    val dir = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint()
-    val deg = dir.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val nRow = deg.agg(count(lit(1)).as("n"))
-    var pr = deg.crossJoin(broadcast(nRow))
-      .select(col("src").as("node"), expr("1000000000 div n").as("pr"))
-      .localCheckpoint()
-    var rounds = 0
-    var converged = false
-    while (rounds < maxIters && !converged) {
-      val share = pr.join(deg, pr("node") === deg("src"))
-        .select(col("node"), expr("((pr * 85) div 100) div deg").as("sh"))
-      val next = dir.join(share, dir("src") === share("node"))
-        .groupBy(col("dst"))
-        .agg(sum(col("sh")).as("acc"))
-        .crossJoin(broadcast(nRow))
-        .select(col("dst").as("node"), expr("150000000 div n + acc").as("pr"))
-        .localCheckpoint()
-      rounds += 1
-      val moved = next.join(pr.withColumnRenamed("pr", "pr0"), "node")
-        .filter(abs(col("pr") - col("pr0")) > tolE9).count()
-      converged = moved == 0
-      pr = next
-    }
-    (pr.select(col("node"), col("pr").as("pr_e9")).orderBy("node"), rounds)
-  }
 
   /** Declared graph_components: connected components of the tightly-
     * associated (support ≥ 9) co-occurrence graph — component id = min

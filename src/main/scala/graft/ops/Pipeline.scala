@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.util.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,9 +100,8 @@ object Pipeline {
     // each reference re-scans the corpus text and re-hashes it. The
     // checkpointed frame is ~50 bytes/row vs the KB-scale text column —
     // at any corpus size this is the cheap side of the trade.
-    val hashed = docs.select(col("doc_id"), col("lang"),
-        md5(concat_ws("|", col("text"), col("doc_id"))).as("h"))
-      .localCheckpoint()
+    val hashed = Ckpt.narrow(docs.select(col("doc_id"), col("lang"),
+        md5(concat_ws("|", col("text"), col("doc_id"))).as("h")))
     GlobalRank.withGroupedRowNumber(hashed,
       Seq("lang"), Seq(col("h"), col("doc_id")), "rn",
       chunkKey = Some(conv(substring(col("h"), 1, 15), 16, 10)))
@@ -230,13 +230,12 @@ object Pipeline {
     * local running sums + an O(chunks) offset broadcast, so there is no
     * single-partition global window even at fact-table width. */
   val packSequences: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
+    // narrow (id, count) rows; the running sum references its input
+    // three times, and re-tokenizing the text column per reference is
+    // the expensive side at corpus scale
+    val docs = Ckpt.narrow(Tables.documents(s, d)
       .select(col("doc_id"),
-        size(split(col("text"), " ")).cast(LongType).as("n_tokens"))
-      // narrow (id, count) rows; the running sum references its input
-      // three times, and re-tokenizing the text column per reference is
-      // the expensive side at corpus scale
-      .localCheckpoint()
+        size(split(col("text"), " ")).cast(LongType).as("n_tokens")))
     GlobalRank.withGlobalRunningSum(docs, Seq(col("doc_id")),
         col("n_tokens"), "run")
       .select(col("doc_id"), col("n_tokens"),
@@ -430,7 +429,7 @@ object Pipeline {
       // cannot spare the executor storage set
       // spark.graft.checkpoint=reliable ([[graft.util.Ckpt]]) and pay a
       // durable write instead.
-      .transform(graft.util.Ckpt.narrow(_))
+      .transform(Ckpt.narrow(_))
     // "occurs in ≥ 2 distinct docs" ⟺ min(doc_id) ≠ max(doc_id): same
     // predicate, but min/max are plain map-side-combinable aggregates —
     // count_distinct planned a (sg, doc_id) distinct pre-aggregate whose

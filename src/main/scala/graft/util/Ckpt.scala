@@ -2,11 +2,14 @@ package graft.util
 
 import org.apache.spark.sql.Dataset
 
-/** Central policy for materializing a NARROW derived frame that a plan
-  * references several times (sweep event frames, chunk-count frames,
-  * shingle tables): one place to choose the checkpoint mechanism, so a
-  * deployment can trade speed for fault tolerance with a conf flag
-  * instead of a code change (r19 verdict item 7).
+/** The one checkpoint policy: every checkpoint in `src/main` goes
+  * through [[Ckpt.narrow]], so the mechanism (local or reliable) is
+  * chosen here, once, by a conf flag instead of per call site
+  * (`tools/gate.sh` fails on a raw `localCheckpoint`/`checkpoint` call
+  * outside this package). The frames routed here are narrow derived
+  * frames a plan references several times: sweep event frames,
+  * change-point and edge frames, hashed or tokenized projections,
+  * iteration labels.
   *
   * `spark.graft.checkpoint` modes:
   *
@@ -27,14 +30,35 @@ import org.apache.spark.sql.Dataset
   *    JVM tmpdir) when the deployment has not set one; a real cluster
   *    should point it at durable shared storage.
   *
+  * A frame that concurrent jobs will read must be materialized on ONE
+  * thread first (a `count()` on the checkpointed frame, or the first job
+  * that reads it), before any sibling job is planned over it: the lazy
+  * checkpoint's state transition at the end of that job deadlocks
+  * against the DAG scheduler planning a sibling job over the same RDD
+  * (see `FreqStore.prepare`). `VardaOps.buildFreqStore` counts each
+  * fixture in its own future; `FreqStore.retract`'s manifest job
+  * materializes its three frames before any concurrent write.
+  *
   * Why not `persist()` (the other lineage-keeping option): persisted
   * plans register with the session's CacheManager, which rewrites EVERY
   * later query's matching subtree to the cached data — two declared
   * keys that derive the same intermediate would silently share one
   * materialization, changing what each bench line measures (an
-  * undeclared cross-query cache). The explicitly-memoized standing
-  * indexes (graph edges, shingle index, ANN fits) declare that sharing;
-  * a per-query temporary must not acquire it by side effect.
+  * undeclared cross-query cache). `persist` stays only where that
+  * sharing is declared, or where concurrent jobs read the frame and its
+  * owner releases it:
+  *
+  *  - standing builds, memoized by [[Standing]] and shared on purpose:
+  *    the graph edge frames (`Graph.pairSupport`,
+  *    `Graph.orientedSupplierEdges`) and the jaccard index and pairs
+  *    (`Llm.jaccardIndexShared`, `Llm.jaccardPairsShared`);
+  *  - FreqStore's commit frames (`prepare`: the batch, its coverage
+  *    fragments and points; `commitPrepared`: new points and new
+  *    segments) and the compaction's consolidated cover: concurrent
+  *    write jobs read them, and FreqStore unpersists each when its
+  *    commit or compaction ends;
+  *  - the INSERT validation frame (`FreqStoreInsertable.insert`), read
+  *    by the check and the commit and unpersisted after them.
   */
 object Ckpt {
 

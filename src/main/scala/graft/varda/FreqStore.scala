@@ -1,5 +1,6 @@
 package graft.varda
 
+import graft.util.Ckpt
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -593,29 +594,26 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     // merge read to these buckets can never miss a live fragment.
     val coverAll = mergeRead("cover", batchId,
       Some(covBucketsOf(batchId, sids)))
-    val fragsGone = coverAll
+    val fragsGone = Ckpt.narrow(coverAll
       .join(broadcast(sids), Seq("sample_id"), "left_semi")
-      .select("chromosome", "cell", "fbegin", "fend", "sample_id", "pool_size")
-      .localCheckpoint(eager = false)
+      .select("chromosome", "cell", "fbegin", "fend", "sample_id", "pool_size"))
     val rsid = col("sample_id").cast(LongType)
-    val obsN = obsR
+    val obsN = Ckpt.narrow(obsR
       .select(col("chromosome"), col("position"), col("reference"),
         col("observed"), (-col("support")).cast(LongType).as("support"),
-        rsid.as("sample_id"))
-      .localCheckpoint(eager = false)
+        rsid.as("sample_id")))
     // the samples' NET registrations off the registry — not the caller's
     // sample rows: a second retraction of the same samples sees zero net
     // and subtracts nothing from the coverage-less pool (the same
     // tombstone idempotence the obslog gives the numerators)
-    val regNet = appendRead("smpreg", batchId, None)
+    val regNet = Ckpt.narrow(appendRead("smpreg", batchId, None)
       .join(broadcast(sids), Seq("sample_id"), "left_semi")
       .groupBy("sample_id", "has_coverage")
       .agg(sum(col("pool_size")).cast(IntegerType).as("pool_size"))
-      .filter(col("pool_size") =!= 0)
-      .localCheckpoint(eager = false)
+      .filter(col("pool_size") =!= 0))
     // the one manifest job: touched buckets + the retracted coverage-less
     // pool, materializing all three checkpoints as a side effect —
-    // which is also why localCheckpoint is SAFE here where the commit
+    // which is also why Ckpt.narrow is SAFE here where the commit
     // path needed persist(): the checkpoint transitions complete on
     // THIS thread at the manifest job's end, before writeGen launches
     // any concurrent job that references the frames (the deadlock

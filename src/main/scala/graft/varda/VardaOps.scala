@@ -1,6 +1,7 @@
 package graft.varda
 
 import graft.{Q, Tables}
+import graft.util.Ckpt
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -262,7 +263,7 @@ object VardaOps {
   private[graft] def sweepMassMergedMulti(pts: DataFrame, merged: DataFrame,
       preds: Seq[(String, org.apache.spark.sql.Column)],
       standalone: Boolean = true): DataFrame = {
-    val m = if (standalone) merged else graft.util.Ckpt.narrow(merged)
+    val m = if (standalone) merged else Ckpt.narrow(merged)
     val dpBegin = preds.map { case (n, p) =>
       when(p, col("pool_size")).otherwise(lit(0)).cast(LongType).as(s"dp_$n") }
     val dpEnd = preds.map { case (n, p) =>
@@ -284,7 +285,7 @@ object VardaOps {
       pts.select(Seq(col("chromosome"), col("position").as("coord"),
         lit(1).as("kind")) ++
         preds.map { case (n, _) => lit(0L).as(s"dp_$n") }: _*))
-    val ev = if (standalone) graft.util.Ckpt.narrow(evRaw) else evRaw
+    val ev = if (standalone) Ckpt.narrow(evRaw) else evRaw
     graft.ops.GlobalRank.withGroupedRunningSums(ev, Seq("chromosome"),
         Seq(col("coord"), col("kind")),
         preds.map { case (n, _) => col(s"dp_$n") -> s"__mass_$n" })
@@ -538,16 +539,18 @@ object VardaOps {
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     val store = new FreqStore(s2, dir, nBuckets = 8)
     // materialize the three fixture checkpoints CONCURRENTLY (round-10:
-    // the sequential eager checkpoints were ~0.4 s of the replay's head;
-    // view registration runs once on this thread first so the racing
-    // threads only plan + execute)
+    // the sequential checkpoints were ~0.4 s of the replay's head; view
+    // registration runs once on this thread first so the racing threads
+    // only plan + execute). Each count completes its checkpoint on its
+    // own thread before prepare's concurrent jobs plan over the frame
+    // (the deadlock rule in FreqStore.prepare).
     Tables.registerViews(s2, d)
     val (obsAll, covAll, smpAll) = {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       val fs = Seq(() => obs(s2, d), () => cov(s2, d), () => smp(s2, d))
-        .map(f => Future(f().localCheckpoint()))
+        .map(f => Future { val c = Ckpt.narrow(f()); c.count(); c })
       (Await.result(fs(0), Duration.Inf), Await.result(fs(1), Duration.Inf),
         Await.result(fs(2), Duration.Inf))
     }
@@ -1202,18 +1205,17 @@ object VardaOps {
     // points-sized, referenced by the event union AND the final
     // obs_id-mapping join — materialize once (the [[nearestRegionFrom]]
     // narrow-frame trade) instead of re-running the observation scan
-    val pts = graft.util.Ckpt.narrow(
-      obsDf.select("obs_id", "chromosome", "position"))
-    val ev = covDf.select(col("chromosome"), col("begin_pos").as("coord"),
-        lit(0).as("kind"), lit(1L).as("dc"),
+    val pts = Ckpt.narrow(obsDf.select("obs_id", "chromosome", "position"))
+    // the sweep's four subtrees read one event frame
+    val ev = Ckpt.narrow(covDf.select(col("chromosome"),
+        col("begin_pos").as("coord"), lit(0).as("kind"), lit(1L).as("dc"),
         col("pool_size").cast(LongType).as("dp"))
       .unionByName(covDf.select(col("chromosome"),
         (col("end_pos") + 1).as("coord"), lit(0).as("kind"),
         lit(-1L).as("dc"), (-col("pool_size")).cast(LongType).as("dp")))
       .unionByName(pts.select(col("chromosome"), col("position").as("coord"),
         lit(1).as("kind"), lit(0L).as("dc"), lit(0L).as("dp"))
-        .distinct())
-      .localCheckpoint() // the sweep's four subtrees read one event frame
+        .distinct()))
     // ONE fused sweep for both running sums (r20): n_regions and
     // total_pool are independent running sums under the SAME
     // (chromosome)/(coord, kind) order, so they ride one
@@ -1326,15 +1328,14 @@ object VardaOps {
     * dropped on both engines. */
   val vardaCoverageDepth: Q = (s, d) => {
     val c = cov(s, d)
-    val deltas = c.select(col("chromosome"), col("begin_pos").as("position"),
-        lit(1L).as("delta"))
+    // change-point-sized; materialized once instead of re-deriving the
+    // coverage fixture + delta aggregate per prefix-sum reference
+    val deltas = Ckpt.narrow(c.select(col("chromosome"),
+        col("begin_pos").as("position"), lit(1L).as("delta"))
       .unionByName(c.select(col("chromosome"),
         (col("end_pos") + 1).as("position"), lit(-1L).as("delta")))
       .groupBy("chromosome", "position").agg(sum(col("delta")).as("d"))
-      .filter(col("d") =!= 0)
-      // change-point-sized; materialized once instead of re-deriving the
-      // coverage fixture + delta aggregate per prefix-sum reference
-      .localCheckpoint()
+      .filter(col("d") =!= 0))
     graft.ops.GlobalRank.withGroupedRunningSum(deltas, Seq("chromosome"),
         Seq(col("position")), col("d"), "depth")
       .select("chromosome", "position", "d", "depth")
@@ -1649,9 +1650,8 @@ object VardaOps {
     // than the raw tables they derive from — so materializing them once
     // is the right trade at any scale (the full-width-table checkpoint
     // this codebase removed from GlobalRank was the opposite case).
-    val pts = ptsIn.select("chromosome", "position").distinct()
-      .localCheckpoint()
-    val cov = covDf.localCheckpoint()
+    val pts = Ckpt.narrow(ptsIn.select("chromosome", "position").distinct())
+    val cov = Ckpt.narrow(covDf)
     val nullV = lit(null).cast(LongType)
     // TWO sweeps instead of three (r19): the coverage test (max end_pos
     // over intervals with begin_pos <= p) and the prev-end distance (max

@@ -26,6 +26,18 @@ class DedupClustersSpec extends AnyFunSuite {
     assert(got.size == 16 && got.values.forall(_ == 0L))
   }
 
+  test("components: long paths converge within maxIter on 4 partitions") {
+    // plain min-label propagation moves a label one hop per round, so
+    // both paths need more than maxIter = 20 rounds without hook + jump
+    val shuffled = new scala.util.Random(7).shuffle((0L until 200L).map(_ * 3 + 5))
+    for (ids <- Seq(0L to 40L, shuffled)) {
+      val pairs = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("d1", "d2")
+      val got = DedupClusters.components(pairs, numPartitions = 4)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == ids.map(_ -> ids.min).toMap, s"${ids.size}-node path")
+    }
+  }
+
   test("survivors: one doc per cluster plus all unpaired docs") {
     val docs = (1L to 10L).map(i => (i, s"text$i")).toDF("doc_id", "text")
     val pairs = Seq((2L, 5L), (5L, 9L), (3L, 4L)).toDF("d1", "d2")

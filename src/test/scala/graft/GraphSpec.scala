@@ -82,33 +82,6 @@ class GraphSpec extends AnyFunSuite {
     assert(total >= 1000000000L - 3L * perRound, s"mass lost too fast: $total")
   }
 
-  test("pagerank convergence mode reaches the exact integer fixed point") {
-    // two triangles joined by a bridge — asymmetric enough that ranks
-    // genuinely move for several rounds before fixating
-    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),
-      (4L, 5L), (5L, 6L), (4L, 6L))
-    val (df, rounds) = ops.Graph.pagerankConverged(g.toDF("u", "v"), 100)
-    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(rounds > 1 && rounds < 100, s"no real convergence: $rounds rounds")
-    // stopping after k rounds is bit-for-bit the fixed-count loop at k —
-    // identical arithmetic, checkpointing changes nothing
-    assert(got == prRef(g, rounds))
-    // and it IS the integer fixed point: one more round changes nothing
-    assert(prRef(g, rounds) == prRef(g, rounds + 1))
-    // per-round checkpointing keeps the final plan shallow regardless of
-    // round count (the chained lazy plan would be ~rounds joins deep)
-    val depth = df.queryExecution.optimizedPlan.collect { case p => p }.size
-    assert(depth < 15, s"plan did not stay shallow: $depth nodes")
-  }
-
-  test("pagerank convergence respects maxIters as a hard bound") {
-    val g = Seq((1L, 2L), (2L, 3L))
-    val (df, rounds) = ops.Graph.pagerankConverged(g.toDF("u", "v"), 2)
-    assert(rounds == 2)
-    assert(df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      == prRef(g, 2))
-  }
-
   test("components: disjoint subgraphs get distinct min-id labels") {
     // {1,2,3} triangle, {10,11} edge, {20,21,22} path — 3 components
     val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L),

@@ -4,6 +4,14 @@
 # though its output is piped through tail.
 set -eo pipefail
 cd /root/repo
+# one checkpoint policy: every checkpoint goes through graft.util.Ckpt, so
+# a raw localCheckpoint/checkpoint call anywhere else fails the gate
+raw=$(grep -rn '\.localCheckpoint(\|\.checkpoint(' src/main --include=*.scala \
+  | grep -v '^src/main/scala/graft/util/' || true)
+if [ -n "$raw" ]; then
+  echo "raw checkpoint calls outside graft.util (use Ckpt.narrow):"; echo "$raw"
+  exit 1
+fi
 for sf in sf0.001 sf0.01 sf0.1; do
   sbt -batch "runMain graft.Verify /root/testdata/$sf target/verify_$sf" 2>&1 | grep -E "\[verify\]" || true
   python3 tools/check.py /root/testdata/$sf target/verify_$sf | tail -1
@@ -31,5 +39,12 @@ rm -rf target/verify_sf0.01_reliable
 EXTRA_JAVA_OPTS=-Dspark.graft.checkpoint=reliable tools/run_main.sh Verify \
   ../testdata/sf0.01 target/verify_sf0.01_reliable 2>&1 | grep -E "\[verify\]" || true
 python3 tools/check.py ../testdata/sf0.01 target/verify_sf0.01_reliable | tail -1
+# the same sf0.01 oracle at 7 shuffle partitions: Session.local sets
+# spark.sql.shuffle.partitions (over any -D flag) and the local[n] width
+# from SPARK_GRAFT_CPUS (cleared first)
+rm -rf target/verify_sf0.01_p7
+SPARK_GRAFT_CPUS=7 tools/run_main.sh Verify \
+  ../testdata/sf0.01 target/verify_sf0.01_p7 2>&1 | grep -E "\[verify\]" || true
+python3 tools/check.py ../testdata/sf0.01 target/verify_sf0.01_p7 | tail -1
 sbt -batch test 2>&1 | grep -E "Tests:|FAILED"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" 2>/dev/null | grep metric
