@@ -21,8 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSource V2 READ surface over the committed [[FreqStore]] —
   * `spark.read.format("freqstore").load(dir)` — so the reference's
   * flagship point query [U GET /variants] composes from `spark.sql`
-  * instead of the bespoke Scala API, with the SAME driver-side hash
-  * pruning the API lookup does:
+  * as well as from the Scala API, whose point and range lookups
+  * ([[FreqStore.lookupPoints]], [[FreqStore.lookupRange]]) are this
+  * scan plus a filter:
   *
   *  - one [[InputPartition]] per live bucket; numer and denom share the
   *    store's bucket function, so the serving join (numer ⟕ denom on the
@@ -33,7 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    push down ([[SupportsPushDownFilters]]) and prune the partition
   *    list to the probes' buckets via the same driver-evaluated Murmur3
   *    hash the store writes with — a point query plans O(probes/nBuckets)
-  *    of the store. All filters are ALSO left residual (pushedFilters
+  *    of the store — and reach each reader's parquet row-group filter
+  *    (`position IN (…)` per chromosome; a range as its bounds). All
+  *    filters are ALSO left residual (pushedFilters
   *    stays empty), so pruning is a pure optimization and Spark's own
   *    evaluation keeps the semantics airtight;
   *  - the generation resolution (newest live generation per bucket,
@@ -260,7 +263,6 @@ class FreqStoreScanBuilder(dir: String, asOf: Option[Long] = None,
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownAggregates {
-  private var probes: Option[Set[(String, Long)]] = None
   private var range: FreqStoreScanBuilder.PushedRange =
     FreqStoreScanBuilder.PushedRange.empty
   private var limit: Option[Int] = None
@@ -283,7 +285,7 @@ class FreqStoreScanBuilder(dir: String, asOf: Option[Long] = None,
         .isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar]
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    isBareCountStar(agg) && probes.isEmpty && range.isEmpty && limit.isEmpty
+    isBareCountStar(agg) && range.isEmpty && limit.isEmpty
   /** Footer-STATISTICS aggregation (round-12): an unfiltered, ungrouped
     * combination of `MIN(position)` / `MAX(position)` / `COUNT(*)` over
     * the serving table is answered from the numer parquet footers alone
@@ -300,7 +302,7 @@ class FreqStoreScanBuilder(dir: String, asOf: Option[Long] = None,
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     countStar = supportCompletePushDown(agg)
     if (countStar) return true
-    if (probes.nonEmpty || !range.isEmpty || limit.nonEmpty ||
+    if (!range.isEmpty || limit.nonEmpty ||
         agg.groupByExpressions.nonEmpty) return false
     val kinds = agg.aggregateExpressions.toSeq
       .map(FreqStoreScanBuilder.statAggOf)
@@ -325,15 +327,14 @@ class FreqStoreScanBuilder(dir: String, asOf: Option[Long] = None,
     required = requiredSchema
 
   /** Derive, when possible, a point set S with `filter ⇒ (chromosome,
-    * position) ∈ S`. Recognized: top-level chromosome=/position= (or
-    * position IN) conjuncts, and a single OR-tree of such conjunctions.
-    * Anything else → no pruning (scan every live bucket). */
+    * position) ∈ S` ([[FreqStoreScanBuilder.pointSet]]: top-level
+    * chromosome=/position= (or position IN) conjuncts, or a single
+    * OR-tree of such conjunctions) and the implied position range.
+    * Either one names the buckets to scan; neither → every live bucket.
+    * Both also push into the executor-side parquet reads (row-group
+    * statistics + record filter) — the point and region lookups' scale
+    * lever on the sorted compacted layout. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    probes = FreqStoreScanBuilder.pointSet(filters)
-    // RANGE predicates cannot prune hash buckets, but they DO push into
-    // the executor-side parquet reads (row-group statistics + record
-    // filter) — the region query's scale lever on the sorted compacted
-    // layout (see FreqStore.lookupRange)
     range = FreqStoreScanBuilder.rangeOf(filters)
     filters // everything stays residual: pruning is a pure optimization
   }
@@ -343,7 +344,7 @@ class FreqStoreScanBuilder(dir: String, asOf: Option[Long] = None,
     val spark = SparkSession.active
     val store = new FreqStore(spark, dir)
     val nPlan = store.nBkts // hoisted: nBkts re-reads the commit log
-    val buckets = probes.map { ps =>
+    val buckets = range.points.map { ps =>
       // the store's own point-bucket helper — never re-derive the cell
       // shift here: with residual-only filters a mismatched bucket
       // would silently drop rows, not just slow the scan
@@ -441,29 +442,50 @@ object FreqStoreScanBuilder {
   }
 
   /** The (chromosome, position-range) implication of a pushed filter
-    * array, normalized to INCLUSIVE position bounds. Only top-level
-    * conjuncts contribute (each is independently implied by the whole
-    * predicate, so applying it inside the parquet reads can only remove
-    * rows Spark's residual evaluation would drop anyway — soundness by
-    * construction, whatever else the filter contains). Serializable: it
-    * rides the reader factory into the task binary and compiles to a
-    * parquet-mr `FilterPredicate` executor-side. */
+    * array, normalized to INCLUSIVE position bounds, plus the point set
+    * [[pointSet]] derives from it. Only implied predicates contribute: a
+    * top-level conjunct is independently implied by the whole predicate,
+    * and so is `(chromosome, position) ∈ points`, so applying them inside
+    * the parquet reads can only remove rows Spark's residual evaluation
+    * would drop anyway — soundness by construction, whatever else the
+    * filter contains. Serializable: it rides the reader factory into the
+    * task binary and compiles to a parquet-mr `FilterPredicate`
+    * executor-side. */
   case class PushedRange(chromosome: Option[String], posLower: Option[Long],
-      posUpper: Option[Long]) extends Serializable {
+      posUpper: Option[Long], points: Option[Set[(String, Long)]] = None)
+      extends Serializable {
     def isEmpty: Boolean =
-      chromosome.isEmpty && posLower.isEmpty && posUpper.isEmpty
+      chromosome.isEmpty && posLower.isEmpty && posUpper.isEmpty && points.isEmpty
+    /** Plan-string summary (a point set prints as its size: a lookup's
+      * probe list is request-sized). */
+    def describe: String = Seq(chromosome.map(c => s"chromosome=$c"),
+      posLower.map(lo => s"position>=$lo"), posUpper.map(hi => s"position<=$hi"),
+      points.map(ps => s"points=${ps.size}")).flatten.mkString(" AND ")
     /** Compile to the parquet filter (row-group statistics pruning +
-      * record-level filtering via `ParquetReader.Builder.withFilter`). */
+      * record-level filtering via `ParquetReader.Builder.withFilter`). A
+      * point set compiles per chromosome to `chromosome = c AND position
+      * IN (…)`, so a point lookup on a compacted (position-sorted) store
+      * skips every row group whose position span holds none of its
+      * probes. */
     def toParquetFilter: Option[org.apache.parquet.filter2.compat.FilterCompat.Filter] = {
       import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
       import org.apache.parquet.io.api.Binary
+      import scala.jdk.CollectionConverters._
+      def chromEq(c: String): FilterPredicate =
+        FilterApi.eq(FilterApi.binaryColumn("chromosome"), Binary.fromString(c))
+      val pointPred = points.flatMap(_.groupBy(_._1).toSeq.sortBy(_._1).map {
+        case (c, ps) =>
+          val in: FilterPredicate = FilterApi.in(FilterApi.longColumn("position"),
+            ps.map(p => java.lang.Long.valueOf(p._2)).asJava)
+          FilterApi.and(chromEq(c), in)
+      }.reduceOption(FilterApi.or(_, _)))
       val preds: Seq[FilterPredicate] = Seq[Option[FilterPredicate]](
-        chromosome.map(c => FilterApi.eq(FilterApi.binaryColumn("chromosome"),
-          Binary.fromString(c))),
+        chromosome.map(chromEq),
         posLower.map(lo => FilterApi.gtEq(FilterApi.longColumn("position"),
           java.lang.Long.valueOf(lo))),
         posUpper.map(hi => FilterApi.ltEq(FilterApi.longColumn("position"),
-          java.lang.Long.valueOf(hi)))).flatten
+          java.lang.Long.valueOf(hi))),
+        pointPred).flatten
       preds.reduceOption(FilterApi.and(_, _))
         .map(org.apache.parquet.filter2.compat.FilterCompat.get)
     }
@@ -489,7 +511,7 @@ object FreqStoreScanBuilder {
       case LessThanOrEqual("position", v) => asLong(v).foreach(tightenHi)
       case _ => ()
     }
-    PushedRange(chrom, lo, hi)
+    PushedRange(chrom, lo, hi, pointSet(filters))
   }
 }
 
@@ -546,9 +568,10 @@ class FreqStoreScan(perBucket: Map[Int, (Seq[String], Seq[String])],
     * The probed POSITIONS alone determine the buckets (the round-12
     * single-column hash), so the position values — a superset of the
     * true probe set's — prune partitions without ever dropping a row:
-    * the same driver-hash pruning [[FreqStore.lookupPoints]] does by
-    * hand, now firing for plain `probe JOIN freqstore USING
-    * (chromosome, position)`. Past the value cap the scan stays as
+    * the plan-time point-set pruning ([[FreqStoreScanBuilder.pointSet]],
+    * which serves [[FreqStore.lookupPoints]]) applied at run time, so it
+    * fires for plain `probe JOIN freqstore USING (chromosome,
+    * position)`. Past the value cap the scan stays as
     * planned — runtime pruning is a pure optimization; Spark still
     * evaluates the join itself. */
   override def filterAttributes(): Array[
@@ -590,7 +613,8 @@ class FreqStoreScan(perBucket: Map[Int, (Seq[String], Seq[String])],
       range, limit, columnar)
   override def description(): String =
     s"FreqStoreScan(buckets=${perBucket.keySet.toSeq.sorted.mkString(",")}, " +
-      s"columns=${required.fieldNames.mkString(",")})"
+      s"columns=${required.fieldNames.mkString(",")}" +
+      (if (range.isEmpty) "" else s", pushed=${range.describe}") + ")"
 }
 
 object FreqStoreScan {

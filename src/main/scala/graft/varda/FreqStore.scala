@@ -1073,65 +1073,63 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
   }
 
   /** Point lookup — the reference's flagship query [U GET /variants]:
-    * serve ONE (chromosome, position)'s frequencies by evaluating the
-    * shared bucket hash on the driver and opening only that bucket's
-    * directories (a plan-asserted O(store/nBuckets) read, vs the full
-    * [[serve]] frame). Row-equal to `serve()` filtered to the point. */
+    * serve ONE (chromosome, position)'s frequencies through
+    * [[lookupPoints]]'s one-bucket scan. Row-equal to `serve()` filtered
+    * to the point. */
   def lookup(chromosome: String, position: Long): DataFrame =
     lookupPoints(Seq((chromosome, position)))
 
-  /** Multi-point lookup for annotation-sized probes: prunes to the
-    * probe set's bucket directories, then restricts rows with an
-    * OR-chain predicate for small probe sets (pushable into the parquet
-    * scans) or a broadcast semi-join against the probe frame for large
-    * ones (a thousand-term OR would bloat the plan; the file-level
-    * bucket pruning already happened on the driver either way). */
+  /** Multi-point lookup: ONE scan of the store's DSv2 source
+    * ([[servedRead]]) filtered per chromosome by `chromosome = c AND
+    * position IN (…)`, the one form for any probe count (Spark turns a
+    * long IN list into InSet, which reaches the scan as `sources.In`).
+    * The scan names the probes' buckets on the driver, compiles the point
+    * set into each reader's parquet row-group filter, and joins numer to
+    * denom inside each bucket's reader: one job, no exchange, no
+    * broadcast. Row-equal to [[serve]] filtered to the points — `serve()`
+    * stays on the DataFrame join as the independent parity reference
+    * (FreqStoreSpec pins parity and the one-bucket read). */
   def lookupPoints(points: Seq[(String, Long)]): DataFrame = {
     require(points.nonEmpty, "lookupPoints needs at least one point")
-    val upTo = highWater
-    val n = nBkts
-    val ks = points.map { case (c, p) => FreqStore.pointBucket(p, n) }.toSet
-    val restrict: DataFrame => DataFrame =
-      if (points.size <= 64) {
-        val pred = points.map { case (c, p) =>
-          col("chromosome") === c && col("position") === p }.reduce(_ || _)
-        df => df.filter(pred)
-      } else {
-        import spark.implicits._
-        val probe = points.toDF("chromosome", "position")
-        df => df.join(broadcast(probe), Seq("chromosome", "position"), "left_semi")
-      }
-    VardaOps.serveFrom(
-      restrict(mergeRead("numer", upTo, Some(ks))),
-      restrict(mergeRead("denom", upTo, Some(ks))),
-      uncovFrame(upTo))
+    servedRead().filter(points.groupBy(_._1).toSeq.sortBy(_._1).map {
+      case (c, ps) =>
+        col("chromosome") === c && col("position").isin(ps.map(_._2).distinct: _*)
+    }.reduce(_ || _))
   }
 
   /** Region-range lookup — the reference's region query [U GET
-    * /variants?region=chrom:begin-end]: serve every variant inside a
-    * genomic range from the committed store. Since the round-12
-    * single-column bucket layout, a range CAN name its buckets on the
-    * driver — it enumerates its cells (bounded by [[FreqStore.MaxRangeCells]])
-    * and hashes each, so the read opens only the matching bucket
-    * DIRECTORIES, like the point lookup. The range predicate also still
-    * PUSHES into the parquet reads, and [[compact]] writes the
-    * point-keyed components sorted by (chromosome, position) within
-    * each bucket file, so row-group min/max statistics trim the read
-    * further: O(range-rows + pruned footers), not O(store). A range too
-    * wide to enumerate falls back to the all-bucket listing with the
-    * sorted-layout statistics carrying the read. Row-equal to [[serve]]
-    * filtered to the range (RangeLookupSpec pins parity, the pushed
-    * filters, the sorted layout, and the bucket pruning). */
+    * /variants?region=chrom:begin-end]: ONE scan of the store's DSv2
+    * source ([[servedRead]]) under the range predicate. Since the
+    * round-12 single-column bucket layout a range names its buckets on
+    * the driver (it enumerates its cells, bounded by
+    * [[FreqStore.MaxRangeCells]], and hashes each), and the scan opens
+    * only those; the predicate also reaches each reader's parquet
+    * row-group filter, and [[compact]] writes the point-keyed components
+    * sorted by (chromosome, position) within each bucket file, so
+    * min/max statistics trim the read further: O(range-rows + pruned
+    * footers), not O(store). A range too wide to enumerate scans every
+    * bucket with the sorted-layout statistics carrying the read.
+    * Row-equal to [[serve]] filtered to the range, `serve()` being the
+    * parity reference (RangeLookupSpec pins parity, the pushed range,
+    * the sorted layout, and the bucket pruning). */
   def lookupRange(chromosome: String, begin: Long, end: Long): DataFrame = {
     require(begin <= end, s"empty range [$begin, $end]")
+    servedRead().filter(col("chromosome") === chromosome &&
+      col("position").between(begin, end))
+  }
+
+  /** The DSv2 serving scan (`spark.read.format("freqstore")`) bound to
+    * the generation [[serve]] on this instance resolves: the high-water
+    * mark is pinned NOW as the scan's `asOfGeneration`. The scan plans
+    * lazily, when the caller's query is optimized, so without the pin a
+    * commit landing between this call and the action would show in the
+    * lookup but not in a `serve()` taken at the same time. An empty store
+    * has no generation to pin. */
+  private def servedRead(): DataFrame = {
     val upTo = highWater
-    val ks = FreqStore.rangeBuckets(begin, end, nBkts)
-    val pred = col("chromosome") === chromosome &&
-      col("position") >= begin && col("position") <= end
-    VardaOps.serveFrom(
-      mergeRead("numer", upTo, ks).filter(pred),
-      mergeRead("denom", upTo, ks).filter(pred),
-      uncovFrame(upTo))
+    val r = spark.read.format("freqstore")
+    (if (upTo == Long.MaxValue) r
+     else r.option("asOfGeneration", (upTo - 1).toString)).load(dir)
   }
 
   /** Range lookup under a SAMPLE SUBSET — the reference's combined

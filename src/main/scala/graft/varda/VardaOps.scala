@@ -808,10 +808,11 @@ object VardaOps {
 
   /** The reference's FLAGSHIP query [U GET /variants]: serve a handful
     * of variant points from the committed store through the pruned
-    * bucket lookup ([[FreqStore.lookupPoints]]) — the driver-side hash
-    * names each probe's bucket directory, so the scan opens
+    * bucket lookup ([[FreqStore.lookupPoints]]) — one DSv2 scan whose
+    * driver-side hash names each probe's bucket, so it opens
     * O(probes/nBuckets) of the store instead of all of it
-    * (FreqStoreSpec pins the single-bucket claim via inputFiles). The
+    * (FreqStoreSpec pins the single-bucket claim via the scan's planned
+    * buckets, `FreqStoreDataSource.lastPlannedBuckets`). The
     * probe set is a deterministic fixture slice (obs_id ≡ 1 mod 2999 —
     * 1 point at sf0.001, ~34 at sf0.1), and the oracle is the one-shot
     * frequency SQL restricted to those points: the pruned serving path
@@ -829,10 +830,10 @@ object VardaOps {
 
   /** The reference's REGION query [U GET /variants?region=chrom:begin-end]:
     * serve every variant of a genomic range from the committed store
-    * through [[FreqStore.lookupRange]]. Two scale levers compose since
-    * round 12: the single-column bucket layout lets the range NAME its
-    * buckets on the driver (enumerate cells, hash each — the read opens
-    * only those directories), and the serving store is compacted with
+    * through [[FreqStore.lookupRange]], one DSv2 scan. Two scale levers
+    * compose since round 12: the single-column bucket layout lets the
+    * range NAME its buckets on the driver (enumerate cells, hash each —
+    * the scan opens only those), and the serving store is compacted with
     * its point-keyed components sorted by (chromosome, position) within
     * each bucket file, so the pushed range predicate skips all
     * non-matching row groups via parquet min/max statistics —

@@ -93,6 +93,9 @@ class FreqStoreDsv2Spec extends AnyFunSuite {
       .contains("ColumnarToRow"),
       "columnar=false must plan the row-based reader")
     assert(rowSet(rowRead) == rowSet(store.serve()))
+    // the row reader applies a pushed point set record-level as well
+    val pts = "chromosome = '1' AND position IN (5000, 5001)"
+    assert(rowSet(rowRead.filter(pts)) == rowSet(store.serve().filter(pts)))
   }
 
   test("asOfGeneration option time-travels the scan; invalid bounds fail at plan time") {

@@ -505,13 +505,18 @@ class FreqStoreSpec extends AnyFunSuite {
     assert(served((r.getString(0), r.getLong(1), r.getString(2), r.getString(3)))
       == ((r.getLong(4), r.getLong(5), r.getLong(6))))
 
-    // the lookup's variant-store scans touch exactly ONE bucket; the
-    // full serve touches many (the layout's serving-side payoff)
+    // the lookup is ONE store scan that touches exactly the probe's
+    // bucket; the full serve touches many (the layout's serving-side
+    // payoff)
+    val probeBkt = FreqStore.pointBucket(1000L + 17 * 4096L, store.nBkts)
+    assert(graft.sources.FreqStoreDataSource.lastPlannedBuckets ==
+      Some(Set(probeBkt)))
+    val (lookupBkts, nScans) = scannedBuckets(probe)
+    assert(nScans == 1 && lookupBkts == Set(probeBkt),
+      s"lookup read buckets $lookupBkts in $nScans scans")
     def bktsOf(files: Seq[String]) = files
       .filter(f => f.contains("comp=numer") || f.contains("comp=denom"))
       .flatMap("bkt=([0-9]+)".r.findFirstMatchIn(_)).map(_.group(1)).toSet
-    val lookupBkts = bktsOf(probe.inputFiles.toSeq)
-    assert(lookupBkts.size == 1, s"lookup read buckets $lookupBkts")
     assert(bktsOf(store.serve().inputFiles.toSeq).size > 2,
       "fixture must spread buckets for the pruning assertion to mean anything")
 
@@ -523,15 +528,75 @@ class FreqStoreSpec extends AnyFunSuite {
       assert(multi((c, p)) == served.collect {
         case ((`c`, `p`, _, _), v) => v._3 }.head)
 
-    // a LARGE probe set takes the broadcast semi-join path (> 64 probes;
-    // an OR-chain that long would bloat the plan) and must equal the
-    // full serve over the probed keys
+    // a LARGE probe set (> 64 probes, the size the old OR-chain form
+    // stopped at) takes the same per-chromosome IN-list scan and must
+    // equal the full serve over the probed keys
     val allPts = (0 until 64).map(i => ("1", 1000L + i * 4096L)) ++
       (0 until 10).map(i => ("2", 5000L + i * 4096L)) // absent points
     val big = store.lookupPoints(allPts).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3)) ->
         ((r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
     assert(big == served, "large-probe lookup diverged from serve()")
+  }
+
+  test("point and range lookups are one store scan row-equal to serve()") {
+    import graft.sources.{FreqStoreDataSource, FreqStoreScanBuilder}
+    import org.apache.parquet.filter2.compat.FilterCompat.FilterPredicateCompat
+    val dir = tmpDir("fqs_lookup_scan")
+    val store = new FreqStore(spark, dir, nBuckets = 4)
+    val chroms = Seq("1", "2", "X")
+    val obs = (for (c <- chroms; i <- 0 until 40)
+      yield (c, 700L + i * 1531L, "A", "G", 1 + i % 4)).toDF(
+      "chromosome", "position", "reference", "observed", "support")
+    val cov = (for ((c, j) <- chroms.zipWithIndex; i <- 0 until 30)
+      yield (j * 100L + i, c, i * 2000L, i * 2000L + 1999L, 1L + i % 2, 2)).toDF(
+      "region_id", "chromosome", "begin_pos", "end_pos", "sample_id", "pool_size")
+    val smp = Seq((1L, 2, true), (2L, 3, true), (5L, 4, false)).toDF(
+      "sample_id", "pool_size", "has_coverage")
+    store.commit(0, obs, cov, smp)
+    // a second generation overlays some buckets: the scan must resolve
+    // the newest generation per bucket, as serve() does
+    store.commit(1, Seq(("1", 700L, "A", "G", 5), ("2", 2231L, "A", "T", 1))
+      .toDF("chromosome", "position", "reference", "observed", "support"),
+      cov.filter("false"), smp.filter("false"))
+    val present = obs.select("chromosome", "position").as[(String, Long)]
+      .collect().toSeq.sorted
+    val pointCases = Seq(
+      "1 point" -> Seq(("2", 2231L)),
+      "4 points over 3 chromosomes" ->
+        Seq(("1", 700L), ("1", 3762L), ("X", 5293L), ("2", 700L + 39 * 1531L)),
+      "> 64 points with absent probes" -> (present ++
+        (0 until 10).map(i => ("2", 999999L + i)) :+ ("Y", 700L)))
+    assert(pointCases.last._2.size > 64)
+    for (state <- Seq("two generations", "compacted")) {
+      if (state == "compacted") store.compact()
+      val served = freqKey(store.serve())
+      for ((what, pts) <- pointCases) {
+        val df = store.lookupPoints(pts)
+        val got = freqKey(df)
+        assert(got.nonEmpty && got == served.filter { case (k, _) =>
+          pts.contains((k._1, k._2)) }, s"$what ($state) diverged from serve()")
+        val (bkts, nScans) = scannedBuckets(df)
+        assert(nScans == 1 && bkts.subsetOf(
+          pts.map(p => FreqStore.pointBucket(p._2, store.nBkts)).toSet),
+          s"$what ($state) read buckets $bkts in $nScans scans")
+        // the probe set reaches the readers' parquet row-group filter
+        val r = FreqStoreDataSource.lastPlannedRange
+        assert(r.points.contains(pts.toSet), s"$what ($state): pushed $r")
+        val pf = r.toParquetFilter.collect {
+          case f: FilterPredicateCompat => f.getFilterPredicate.toString
+        }.getOrElse("")
+        assert(pf.contains("in(position"), s"$what ($state): parquet filter $pf")
+      }
+      val range = store.lookupRange("2", 5000L, 40000L)
+      val want = served.filter { case (k, _) =>
+        k._1 == "2" && k._2 >= 5000L && k._2 <= 40000L }
+      assert(want.nonEmpty && freqKey(range) == want,
+        s"range ($state) diverged from serve()")
+      assert(scannedBuckets(range)._2 == 1)
+      assert(FreqStoreDataSource.lastPlannedRange ==
+        FreqStoreScanBuilder.PushedRange(Some("2"), Some(5000L), Some(40000L)))
+    }
   }
 
   test("expression-filtered lookup equals the one-shot over the sample subset") {

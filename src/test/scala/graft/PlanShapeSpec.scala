@@ -118,9 +118,9 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("varda_freq_lookup reads only its probe points' store buckets") {
     val df = SparkEntry.queries("varda_freq_lookup")(spark, sf0001)
-    val bkts = df.inputFiles.toSeq
-      .filter(f => f.contains("comp=numer") || f.contains("comp=denom"))
-      .flatMap("bkt=([0-9]+)".r.findFirstMatchIn(_)).map(_.group(1)).toSet
+    val (bktIds, nScans) = scannedBuckets(df)
+    assert(nScans == 1, s"expected one freqstore scan, got $nScans")
+    val bkts = bktIds.map(_.toString)
     val served = graft.varda.VardaOps.queries("varda_freq_incremental")(spark, sf0001)
     val allBkts = served.inputFiles.toSeq
       .filter(f => f.contains("comp=numer") || f.contains("comp=denom"))
@@ -190,8 +190,8 @@ class PlanShapeSpec extends AnyFunSuite {
       "sink_vcf",
       "sim_topk_cosine", "dedup_near_embedding", "varda_frequency",
       "agg_freq_ratio", "varda_sample_expr", "varda_annotate",
-      "source_vcf_file", "varda_freq_incremental", "varda_freq_lookup",
-      "varda_freq_lookup_range", "varda_freq_lookup_range_expr",
+      "source_vcf_file", "varda_freq_incremental",
+      "varda_freq_lookup_range_expr",
       "varda_freq_lookup_expr", "varda_freq_lookup_multi",
       "varda_freq_asof", // serveFrom's 1-row coverage-less pool broadcast
       "stream_store_changes_freq", // refoldChanges ends in the same serveFrom

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.sources.FreqStoreScanBuilder
 import graft.varda.{FreqStore, VardaOps}
+import org.apache.parquet.filter2.compat.FilterCompat.FilterPredicateCompat
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The committed store's region-range serving tier [U GET
   * /variants?region=chrom:begin-end]: `lookupRange` must be row-equal to
   * `serve()` filtered to the range, its range predicate must reach the
-  * parquet scans (PushedFilters), and compaction must leave the
+  * store scan's parquet filter, and compaction must leave the
   * point-keyed components SORTED by (chromosome, position) within each
   * bucket file — the layout that turns the pushed predicate into
   * row-group skipping at scale. */
@@ -69,8 +71,11 @@ class RangeLookupSpec extends AnyFunSuite {
     val all = bktsOf(store.serve().inputFiles.toSeq)
     assert(all.size >= 3, s"fixture must spread buckets, got $all")
     val expect = FreqStore.rangeBuckets(20000L, 24000L, store.nBkts).get
-    val got = bktsOf(store.lookupRange("7", 20000L, 24000L).inputFiles.toSeq)
-    assert(got.subsetOf(expect),
+    val (got, nScans) = scannedBuckets(store.lookupRange("7", 20000L, 24000L))
+    assert(graft.sources.FreqStoreDataSource.lastPlannedBuckets == Some(expect),
+      s"range scan planned ${graft.sources.FreqStoreDataSource.lastPlannedBuckets}, " +
+        s"not its cells' buckets $expect")
+    assert(nScans == 1 && got.nonEmpty && got.subsetOf(expect),
       s"range read opened buckets outside its cells': $got vs $expect")
     assert(got.size < all.size,
       s"range read did not prune ($got of $all)")
@@ -80,26 +85,22 @@ class RangeLookupSpec extends AnyFunSuite {
 
   test("the range predicate reaches the parquet scans as pushed filters") {
     val store = buildStore(tmpDir("fqs_rangepush"))
-    // inspect the scans' own metadata — the plan's toString elides long
-    // PushedFilters lists
-    val scans = store.lookupRange("7", 15000L, 30000L)
-      .queryExecution.executedPlan.collect {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan.collect {
-            case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      }.flatten
-    // numer and denom reads both carry the full pushed range
-    assert(scans.size >= 2, s"expected numer+denom scans, got ${scans.size}")
-    for (sc <- scans) {
-      val pushed = sc.metadata("PushedFilters")
-      assert(pushed.contains("GreaterThanOrEqual(position,15000)"),
-        s"range lower bound not pushed: $pushed")
-      assert(pushed.contains("LessThanOrEqual(position,30000)"),
-        s"range upper bound not pushed: $pushed")
-      assert(pushed.contains("EqualTo(chromosome,7)"),
-        s"chromosome equality not pushed: $pushed")
-    }
+    val df = store.lookupRange("7", 15000L, 30000L)
+    // ONE store scan reads numer and denom, and its readers apply the
+    // pushed range to both components' parquet reads
+    val (_, nScans) = scannedBuckets(df)
+    assert(nScans == 1, s"expected one freqstore scan, got $nScans")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("FileScan") && !plan.contains("BroadcastExchange"),
+      s"range lookup fell back to the file-scan join:\n$plan")
+    val r = graft.sources.FreqStoreDataSource.lastPlannedRange
+    assert(r == FreqStoreScanBuilder.PushedRange(Some("7"), Some(15000L),
+      Some(30000L)), s"range not pushed: $r")
+    val pushed = r.toParquetFilter.collect {
+      case f: FilterPredicateCompat => f.getFilterPredicate.toString }.getOrElse("")
+    for (term <- Seq("gteq(position, 15000)", "lteq(position, 30000)",
+        "eq(chromosome, Binary{\"7\"})"))
+      assert(pushed.contains(term), s"$term missing from parquet filter: $pushed")
   }
 
   test("compaction leaves point-keyed bucket files sorted by (chromosome, position)") {

@@ -46,5 +46,14 @@ rm -rf target/verify_sf0.01_p7
 SPARK_GRAFT_CPUS=7 tools/run_main.sh Verify \
   ../testdata/sf0.01 target/verify_sf0.01_p7 2>&1 | grep -E "\[verify\]" || true
 python3 tools/check.py ../testdata/sf0.01 target/verify_sf0.01_p7 | tail -1
+# the same sf0.01 oracle with the interval-join rewrite on for every key:
+# spark.sql.extensions registers graft.plans.RewriteIntervalJoin on the
+# session and spark.graft.rewriteIntervalJoin enables it, so every naive
+# range join any key plans is rewritten, not only join_range_rewrite's
+# (cleared first)
+rm -rf target/verify_sf0.01_rewrite
+EXTRA_JAVA_OPTS="-Dspark.sql.extensions=graft.plans.GraftExtensions -Dspark.graft.rewriteIntervalJoin=true" \
+  tools/run_main.sh Verify ../testdata/sf0.01 target/verify_sf0.01_rewrite 2>&1 | grep -E "\[verify\]" || true
+python3 tools/check.py ../testdata/sf0.01 target/verify_sf0.01_rewrite | tail -1
 sbt -batch test 2>&1 | grep -E "Tests:|FAILED"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" 2>/dev/null | grep metric
