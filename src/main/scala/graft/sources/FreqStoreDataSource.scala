@@ -5,8 +5,6 @@ import java.util
 import graft.varda.FreqStore
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -48,10 +46,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference, observed, numer, denom, freq_ppm), with denom =
   * denom_cov + uncovPool × ploidy(chromosome) and freq_ppm =
   * floor(numer·10⁶ / denom) (null when denom = 0) — spec-pinned equal to
-  * the DataFrame serving path. Executor-side reading uses parquet-hadoop
-  * directly (the component schemas are fixed and tiny), so no Spark
-  * internals are touched. Batch read only — writes go through the
-  * store's transactional [[FreqStore.commit]], never through SQL inserts. */
+  * the DataFrame serving path. Executor-side reading opens the files
+  * with parquet-hadoop and decodes them with Spark's vectorized parquet
+  * reader ([[FreqStoreColumnarPartitionReader]]). Batch read only —
+  * writes go through the store's transactional [[FreqStore.commit]],
+  * never through SQL inserts. */
 class FreqStoreDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "freqstore"
 
@@ -66,9 +65,10 @@ class FreqStoreDataSource extends TableProvider with DataSourceRegister {
   }
 }
 
-/** Executor-side helpers shared by every parquet-mr Group reader in this
-  * package (the batch scan's row reader and the change stream's): a fix
-  * to conf handling or string decoding lands once. */
+/** Executor-side helpers shared by the parquet-mr readers in this
+  * package (the batch scan's columnar and footer-statistics readers
+  * take the conf; the change stream's Group reader also decodes
+  * strings): a fix to conf handling or string decoding lands once. */
 private[sources] object GroupReads {
   def hadoopConf(m: Map[String, String]): Configuration = {
     val c = new Configuration()
@@ -86,8 +86,8 @@ private[sources] object GroupReads {
     * store's own files (written by Spark's parquet v1 writer:
     * PLAIN / dictionary encodings materialize per-value arrays), NOT
     * for reused-buffer encodings like parquet v2's DELTA_BYTE_ARRAY.
-    * Every file this helper reads is store-written (the components and
-    * the change feed), so the contract holds by construction; if a
+    * Every file this helper reads is store-written (the change feed's
+    * components), so the contract holds by construction; if a
     * foreign-written parquet ever enters these paths, copy here
     * (`getBytesUnsafe` vs `getBytes` semantics) before widening the
     * contract. */
@@ -194,12 +194,7 @@ class FreqStoreTable(dir: String, catalogPartitioned: Boolean = false,
       s.toLongOption.getOrElse(sys.error(
         s"freqstore: asOfGeneration must be a long generation id, got '$s'"))
     }.orElse(asOfFixed) // SQL `VERSION AS OF` pins via the catalog
-    // `.option("columnar", "false")` forces the row-based readers (parity
-    // tests). Read ONCE per scan here and carried through the ScanBuilder
-    // into the ReaderFactory, so BatchScanExec's columnar plan shape
-    // always matches the reader kind actually created (round-14 ADVICE).
-    val columnar = Option(options.get("columnar")).forall(_.toBoolean)
-    new FreqStoreScanBuilder(dir, asOf, catalogPartitioned, columnar)
+    new FreqStoreScanBuilder(dir, asOf, catalogPartitioned)
   }
 }
 
@@ -259,7 +254,7 @@ private[sources] class FreqStoreInsertable(dir: String)
 }
 
 class FreqStoreScanBuilder(dir: String, asOf: Option[Long] = None,
-    reportPartitioning: Boolean = false, columnar: Boolean = true)
+    reportPartitioning: Boolean = false)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownAggregates {
@@ -331,8 +326,9 @@ class FreqStoreScanBuilder(dir: String, asOf: Option[Long] = None,
     * chromosome=/position= (or position IN) conjuncts, or a single
     * OR-tree of such conjunctions) and the implied position range.
     * Either one names the buckets to scan; neither → every live bucket.
-    * Both also push into the executor-side parquet reads (row-group
-    * statistics + record filter) — the point and region lookups' scale
+    * Both also push into the executor-side parquet reads, which skip
+    * the row groups whose statistics miss them (Spark's residual filter
+    * drops the remaining rows) — the point and region lookups' scale
     * lever on the sorted compacted layout. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     range = FreqStoreScanBuilder.rangeOf(filters)
@@ -378,7 +374,7 @@ class FreqStoreScanBuilder(dir: String, asOf: Option[Long] = None,
         statAggs, confMap)
     else
       new FreqStoreScan(perBucket, uncov, confMap, required, bytes, n, range,
-        limit, reportPartitioning, columnar)
+        limit, reportPartitioning)
   }
 }
 
@@ -461,12 +457,12 @@ object FreqStoreScanBuilder {
     def describe: String = Seq(chromosome.map(c => s"chromosome=$c"),
       posLower.map(lo => s"position>=$lo"), posUpper.map(hi => s"position<=$hi"),
       points.map(ps => s"points=${ps.size}")).flatten.mkString(" AND ")
-    /** Compile to the parquet filter (row-group statistics pruning +
-      * record-level filtering via `ParquetReader.Builder.withFilter`). A
-      * point set compiles per chromosome to `chromosome = c AND position
-      * IN (…)`, so a point lookup on a compacted (position-sorted) store
-      * skips every row group whose position span holds none of its
-      * probes. */
+    /** Compile to the parquet filter the bucket reader prunes row groups
+      * with (by their statistics; Spark's residual filter evaluates the
+      * rows of the groups that survive). A point set compiles per
+      * chromosome to `chromosome = c AND position IN (…)`, so a point
+      * lookup on a compacted (position-sorted) store skips every row
+      * group whose position span holds none of its probes. */
     def toParquetFilter: Option[org.apache.parquet.filter2.compat.FilterCompat.Filter] = {
       import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
       import org.apache.parquet.io.api.Binary
@@ -532,7 +528,7 @@ class FreqStoreScan(perBucket: Map[Int, (Seq[String], Seq[String])],
     uncov: Long, hadoopConf: Map[String, String], required: StructType,
     planBytes: (Long, Long), nBkts: Int,
     range: FreqStoreScanBuilder.PushedRange, limit: Option[Int],
-    reportPartitioning: Boolean = false, columnar: Boolean = true)
+    reportPartitioning: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning {
   /** Storage-partitioned planning (catalog-loaded tables only — the
@@ -610,7 +606,7 @@ class FreqStoreScan(perBucket: Map[Int, (Seq[String], Seq[String])],
     }.toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new FreqStoreReaderFactory(hadoopConf, required.fieldNames.toSeq, uncov,
-      range, limit, columnar)
+      range, limit)
   override def description(): String =
     s"FreqStoreScan(buckets=${perBucket.keySet.toSeq.sorted.mkString(",")}, " +
       s"columns=${required.fieldNames.mkString(",")}" +
@@ -624,9 +620,6 @@ object FreqStoreScan {
   private[graft] val MaxRuntimePoints = 1L << 16
 }
 
-/** The COUNT(*) scan: one partition carrying the live numer file list;
-  * its reader sums the files' footer record counts and emits the one
-  * aggregated row. O(files) footer reads, zero data pages. */
 /** Footer-statistics scan (aggregate pushdown): one partition per
   * file group, each emitting ONE row of its group's min(position) /
   * max(position) / count(*) read from the numer files' parquet
@@ -719,39 +712,34 @@ class FreqStoreStatsReaderFactory(hadoopConf: Map[String, String])
 
 class FreqStoreReaderFactory(hadoopConf: Map[String, String],
     columns: Seq[String], uncov: Long,
-    range: FreqStoreScanBuilder.PushedRange, limit: Option[Int],
-    columnar: Boolean = true)
+    range: FreqStoreScanBuilder.PushedRange, limit: Option[Int])
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new FreqStorePartitionReader(p.asInstanceOf[FreqStorePartition],
-      hadoopConf, columns, uncov, range, limit)
-  /** COLUMNAR is the scan's real read path (round-12 VERDICT #1): every
+  /** COLUMNAR is the scan's only read path (round-12 VERDICT #1): every
     * projected schema is flat fixed-width-or-string, so ColumnarBatch
-    * always applies. The one exception is the EMPTY projection (a
-    * filtered bare count plans a zero-column scan), which the row
-    * reader serves as count-only rows — a zero-column vectorized read
-    * has nothing to decode. The decision is a per-scan constant
-    * (columns ride the factory), matching BatchScanExec's
-    * all-partitions-or-none columnar contract. */
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    columns.nonEmpty && columnar
+    * always applies, and the EMPTY projection (`select(lit(1))`, or a
+    * count under a limit) reads column-less batches that carry only
+    * their row counts. The answer is the same for every partition, as
+    * BatchScanExec's all-partitions-or-none columnar contract needs. */
+  override def supportColumnarReads(p: InputPartition): Boolean = true
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "freqstore scans read columnar only; Spark asks for a row reader " +
+        "only when supportColumnarReads is false")
   override def createColumnarReader(p: InputPartition):
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new FreqStoreColumnarPartitionReader(p.asInstanceOf[FreqStorePartition],
       hadoopConf, columns, uncov, range, limit)
 }
 
-/** Columnar (vectorized) bucket reader — the 100 TB read path. The
-  * hand-rolled row readers below materialize one boxed Group and one
-  * GenericInternalRow per row; at full-store serve scale that per-row
-  * boxing IS the throughput ceiling (round-12 VERDICT). This reader
-  * instead:
+/** Columnar (vectorized) bucket reader — the 100 TB read path and the
+  * scan's only one. Boxing one parquet Group and one GenericInternalRow
+  * per row is the throughput ceiling at full-store serve scale
+  * (round-12 VERDICT), so this reader instead:
   *
   *  - opens each component file with parquet-mr's [[ParquetFileReader]]
   *    under the SESSION's Hadoop conf, with the pushed
   *    (chromosome, position) range compiled to a row-group statistics
-  *    filter (same pruning the row path had — record-level filtering is
-  *    Spark's residual job either way);
+  *    filter (record-level filtering is Spark's residual job);
   *  - hands the surviving row groups to Spark's own
   *    [[VectorizedParquetRecordReader]] (the exact decoder the built-in
   *    parquet scan uses — dictionary-aware, batch-decoded, null-bitmap
@@ -765,8 +753,8 @@ class FreqStoreReaderFactory(hadoopConf: Map[String, String],
   *    consumes vectors directly (the plan shows ColumnarToRow above
   *    this scan instead of per-row get()s).
   *
-  * Semantics are pinned row-identical to the row reader by
-  * FreqStoreDsv2Spec's serve()-parity suites. */
+  * Semantics are pinned row-identical to `FreqStore.serve()` by
+  * FreqStoreDsv2Spec's parity suites. */
 class FreqStoreColumnarPartitionReader(p: FreqStorePartition,
     hadoopConf: Map[String, String], columns: Seq[String], uncov: Long,
     range: FreqStoreScanBuilder.PushedRange, limit: Option[Int])
@@ -785,12 +773,17 @@ class FreqStoreColumnarPartitionReader(p: FreqStorePartition,
   private val needsDerived = needsDenomCol || needsFreq
   /** Parquet columns to DECODE from the numer component: the projected
     * base columns plus the derivation inputs (chromosome+position key
-    * the denom probe; numer feeds the ppm division). */
+    * the denom probe; numer feeds the ppm division). The empty
+    * projection decodes position alone, only to count the rows it
+    * emits as column-less batches. */
   private val readCols: Seq[String] = {
     val base = columns.filter(c => c != "denom" && c != "freq_ppm")
     val extra = (if (needsDerived) Seq("chromosome", "position") else Nil) ++
       (if (needsFreq) Seq("numer") else Nil)
-    (base ++ extra).distinct
+    (base ++ extra).distinct match {
+      case Nil => Seq("position")
+      case cs => cs
+    }
   }
   private val readIdx: Map[String, Int] = readCols.zipWithIndex.toMap
 
@@ -885,12 +878,12 @@ class FreqStoreColumnarPartitionReader(p: FreqStorePartition,
   }
 
   /** Open-addressing position→denom map, primitive throughout — the
-    * derived-column loop must not allocate per row (the row readers'
-    * HashMap costs a key tuple + String per probe; at full-serve scale
-    * that churn is the reader's overhead). Linear probing, power-of-two
-    * capacity, last-put-wins on duplicates (identical to the HashMap
-    * semantics it replaces). EMPTY sentinel is Long.MinValue with an
-    * explicit side slot, so no position value is unrepresentable. */
+    * derived-column loop must not allocate per row (a boxed HashMap
+    * costs a key tuple + String per probe; at full-serve scale that
+    * churn is the reader's overhead). Linear probing, power-of-two
+    * capacity, last-put-wins on duplicates (a map's put semantics).
+    * EMPTY sentinel is Long.MinValue with an explicit side slot, so no
+    * position value is unrepresentable. */
   private final class PosDenomMap(initCap: Int) {
     private var cap = java.lang.Integer.highestOneBit(
       math.max(16, initCap * 2) * 2 - 1)
@@ -1069,112 +1062,4 @@ class FreqStoreColumnarPartitionReader(p: FreqStorePartition,
     if (denomVec != null) denomVec.close()
     if (freqVec != null) freqVec.close()
   }
-}
-
-/** Bucket-local serving join: hash the bucket's denom rows by point
-  * (the map is the bounded working set), then STREAM the numer rows
-  * against it — one file open at a time, one output row per next().
-  * Both components were written under one bucket function, so this
-  * partition sees every row it needs. */
-class FreqStorePartitionReader(p: FreqStorePartition,
-    hadoopConf: Map[String, String], columns: Seq[String], uncov: Long,
-    range: FreqStoreScanBuilder.PushedRange, limit: Option[Int])
-    extends PartitionReader[InternalRow] {
-  import org.apache.parquet.example.data.Group
-
-  private val conf = GroupReads.hadoopConf(hadoopConf)
-
-  /** The pushed (chromosome, position-range) predicate compiled to a
-    * parquet filter, applied to BOTH components: row groups whose
-    * min/max statistics miss the range are skipped without reading
-    * (tight stats on the compacted sorted layout — FreqStore.compact),
-    * and surviving rows are record-filtered. Sound for the denom
-    * hash-build too: denom lookups only happen for numer rows, which
-    * pass the same predicate. */
-  private val parquetFilter = range.toParquetFilter
-
-  private def open(file: String): ParquetReader[Group] = {
-    val b = ParquetReader.builder(new GroupReadSupport(), new Path(file))
-      .withConf(conf)
-    parquetFilter.fold(b)(b.withFilter).build()
-  }
-
-  private val denomByPoint: java.util.HashMap[(String, Long), Long] = {
-    val m = new java.util.HashMap[(String, Long), Long]()
-    p.denomFiles.foreach { file =>
-      val r = open(file)
-      try {
-        var g = r.read()
-        while (g != null) {
-          m.put((g.getBinary("chromosome", 0).toStringUsingUTF8,
-            g.getLong("position", 0)), g.getLong("denom_cov", 0))
-          g = r.read()
-        }
-      } finally r.close()
-    }
-    m
-  }
-
-  private def denomOf(chrom: String, pos: Long): Long =
-    denomByPoint.getOrDefault((chrom, pos), 0L) +
-      uncov * FreqStore.ploidyOf(chrom)
-
-  /** Projection compiled ONCE to extractor functions — the per-row loop
-    * must not pattern-match column-name strings (round-10 review). */
-  private val extractors: Array[Group => Any] = columns.map[Group => Any] {
-    case "chromosome" => g => GroupReads.utf8(g, "chromosome")
-    case "position" => g => g.getLong("position", 0)
-    case "reference" => g => GroupReads.utf8(g, "reference")
-    case "observed" => g => GroupReads.utf8(g, "observed")
-    case "numer" => g => g.getLong("numer", 0)
-    case "denom" => g =>
-      denomOf(g.getBinary("chromosome", 0).toStringUsingUTF8,
-        g.getLong("position", 0))
-    case "freq_ppm" => g => {
-      val d = denomOf(g.getBinary("chromosome", 0).toStringUsingUTF8,
-        g.getLong("position", 0))
-      if (d == 0L) null
-      // TRUNCATING division (toward zero), matching serveFrom's SQL
-      // `div` (IntegralDivide) — Math.floorDiv floors toward -inf and
-      // diverges on a negative net numerator (a hand-built retract()
-      // exceeding prior imports can produce one)
-      else java.lang.Long.valueOf(g.getLong("numer", 0) * 1000000L / d)
-    }
-    case other => sys.error(s"freqstore: unknown projected column $other")
-  }.toArray
-
-  private val fileIter = p.numerFiles.iterator
-  private var reader: ParquetReader[Group] = _
-  private var cur: InternalRow = _
-
-  private def nextGroup(): Group = {
-    while (true) {
-      if (reader == null) {
-        if (!fileIter.hasNext) return null
-        reader = open(fileIter.next())
-      }
-      val g = reader.read()
-      if (g != null) return g
-      reader.close(); reader = null
-    }
-    null // unreachable
-  }
-
-  private var emitted = 0L
-
-  override def next(): Boolean = {
-    // pushed LIMIT: this partition's share is capped (Spark's own
-    // global limit still sits on top — pushLimit returned false)
-    if (limit.exists(emitted >= _)) { cur = null; return false }
-    val g = nextGroup()
-    if (g == null) { cur = null; return false }
-    val vals = new Array[Any](extractors.length)
-    var i = 0
-    while (i < extractors.length) { vals(i) = extractors(i)(g); i += 1 }
-    cur = new GenericInternalRow(vals)
-    emitted += 1
-    true
-  }
-  override def get(): InternalRow = cur
-  override def close(): Unit = if (reader != null) { reader.close(); reader = null }
 }

@@ -977,13 +977,7 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     * pinned ONCE and every component reads strictly below it, so a
     * commit landing mid-serve cannot skew one component ahead of
     * another: readers get snapshot consistency from the log bound. */
-  def serve(): DataFrame = {
-    val upTo = highWater
-    VardaOps.serveFrom(
-      mergeRead("numer", upTo, None),
-      mergeRead("denom", upTo, None),
-      uncovFrame(upTo))
-  }
+  def serve(): DataFrame = servedBelow(highWater)
 
   /** TIME-TRAVEL serve — the store's state AS OF generation `asOf`
     * (i.e. after commit/retraction `asOf` and everything below it).
@@ -1002,11 +996,13 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
   def serveAsOf(asOf: Long): DataFrame = {
     val before = math.addExact(asOf, 1L)
     validateAsOf(asOf, before)
-    VardaOps.serveFrom(
-      mergeRead("numer", before, None),
-      mergeRead("denom", before, None),
-      uncovFrame(before))
+    servedBelow(before)
   }
+
+  /** The serving join over every generation below `before`. */
+  private def servedBelow(before: Long): DataFrame =
+    VardaOps.serveFrom(mergeRead("numer", before, None),
+      mergeRead("denom", before, None), uncovFrame(before))
 
   /** An as-of bound is only honest while every generation <= asOf is
     * still individually addressable in the log — and while asOf itself
@@ -1158,22 +1154,11 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     // ONE obslog read feeds both the numerators and the probe point
     // set (variants only exist at observed points)
     val obsR = appendRead("obslog", upTo, ks).filter(rangePred)
-    val numerF = obsR.filter(samplePred)
-      .groupBy("chromosome", "position", "reference", "observed")
-      .agg(sum(col("support")).cast(LongType).as("numer"))
-      .filter(col("numer") =!= 0)
-    val ptsF = obsR.select("chromosome", "position").distinct()
     val coverF = mergeRead("cover", upTo, ks)
       .filter(col("chromosome") === chromosome &&
         col("cell") >= (begin >> CellShift) && col("cell") <= (end >> CellShift))
-      .filter(samplePred)
-    val denomF = containSamples(ptsF, coverF)
-      .groupBy("chromosome", "position")
-      .agg(sum(col("pool_size") * VardaOps.ploidy).cast(LongType).as("denom_cov"))
-    val uncovF = appendRead("smpreg", upTo, None)
-      .filter(samplePred && !col("has_coverage"))
-      .agg(coalesce(sum(col("pool_size")), lit(0L)).cast(LongType).as("uncov_pool"))
-    VardaOps.serveFrom(numerF, denomF, uncovF)
+    servedSubset(obsR, obsR.select("chromosome", "position").distinct(),
+      coverF, samplePred, upTo)
   }
 
   /** Point lookup restricted to a SAMPLE SUBSET — the reference's
@@ -1207,14 +1192,24 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     val ks = points.map { case (c, p) => FreqStore.pointBucket(p, n) }.toSet
     import spark.implicits._
     val probe = broadcast(points.toDF("chromosome", "position"))
-    val numerF = appendRead("obslog", upTo, Some(ks))
-      .join(probe, Seq("chromosome", "position"), "left_semi")
-      .filter(samplePred)
+    servedSubset(
+      appendRead("obslog", upTo, Some(ks))
+        .join(probe, Seq("chromosome", "position"), "left_semi"),
+      probe, mergeRead("cover", upTo, Some(ks)), samplePred, upTo)
+  }
+
+  /** The serving tail of the sample-subset lookups: numerators from the
+    * `samplePred` rows of the obslog read `obs`, denominators from a
+    * containment probe of the points `pts` against the `samplePred`
+    * fragments of the cover read `cover`, and the coverage-less pool of
+    * the `samplePred` samples registered below `upTo`. */
+  private def servedSubset(obs: DataFrame, pts: DataFrame, cover: DataFrame,
+      samplePred: Column, upTo: Long): DataFrame = {
+    val numerF = obs.filter(samplePred)
       .groupBy("chromosome", "position", "reference", "observed")
       .agg(sum(col("support")).cast(LongType).as("numer"))
       .filter(col("numer") =!= 0)
-    val coverF = mergeRead("cover", upTo, Some(ks)).filter(samplePred)
-    val denomF = containSamples(probe, coverF)
+    val denomF = containSamples(pts, cover.filter(samplePred))
       .groupBy("chromosome", "position")
       .agg(sum(col("pool_size") * VardaOps.ploidy).cast(LongType).as("denom_cov"))
     val uncovF = appendRead("smpreg", upTo, None)
@@ -1274,11 +1269,11 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     val uncovRow = appendRead("smpreg", upTo, None)
       .agg(uncovAggs.head, uncovAggs.tail: _*)
     val outPpm = exprs.map { case (nm, _) =>
+      val denom = coalesce(col(s"denomcov_$nm"), lit(0L)) +
+        col(s"uncov_$nm") * VardaOps.ploidy
       coalesce(
-        expr(s"cast((numer_$nm * 1000000) div " +
-          s"nullif(coalesce(denomcov_$nm, 0L) + uncov_$nm * " +
-          s"(CASE WHEN chromosome IN ('X','Y','MT') THEN 1 ELSE 2 END), 0) " +
-          "as bigint)"),
+        call_function("div", col(s"numer_$nm") * 1000000, nullif(denom, lit(0)))
+          .cast(LongType),
         lit(0L)).as(s"freq_ppm_$nm") }
     numers
       .join(denoms, Seq("chromosome", "position"), "left")
@@ -1902,10 +1897,11 @@ object FreqStore {
   private[graft] val LayoutVersion = 2
 
   /** The haploid chromosomes — ONE definition of the ploidy rule for
-    * every Scala-side denominator derivation (the row and columnar
-    * DSv2 readers both build on it; the SQL serving path states the
-    * same rule inside serveFrom's expression). A naming change (e.g.
-    * 'M' vs 'MT') edits exactly this list. */
+    * every Scala-side denominator derivation: the columnar DSv2 reader
+    * builds on it, and so does [[VardaOps.ploidy]], the Column every
+    * DataFrame path (serveFrom and the lookups included) multiplies by.
+    * A naming change (e.g. 'M' vs 'MT') edits exactly this list; the
+    * oracle's SQL text states it apart ([[VardaSql.ploidyOf]]). */
   private[graft] val HaploidChromosomes: Seq[String] = Seq("X", "Y", "MT")
   private[graft] def ploidyOf(chromosome: String): Long =
     if (HaploidChromosomes.contains(chromosome)) 1L else 2L

@@ -53,9 +53,10 @@ object VardaOps {
       .drop("bkt")
   }
 
-  /** Per-chromosome ploidy as a Column (mirrors [[VardaSql.ploidyOf]]). */
+  /** Per-chromosome ploidy as a Column, built from
+    * [[FreqStore.HaploidChromosomes]] (mirrors [[VardaSql.ploidyOf]]). */
   private[graft] val ploidy =
-    when(col("chromosome").isin("X", "Y", "MT"), 1).otherwise(2)
+    when(col("chromosome").isin(FreqStore.HaploidChromosomes: _*), 1).otherwise(2)
 
   /** Shared frequency computation (varda/tasks.py frequency calc [U]):
     * numerator = Σ support per variant; denominator = Σ over covering

@@ -83,19 +83,35 @@ class FreqStoreDsv2Spec extends AnyFunSuite {
       .select("freq_ppm", "denom")
     val expected = store.serve().select("freq_ppm", "denom")
     assert(ppmDenom(derived) == ppmDenom(expected))
-    // the A/B switch is a PER-SCAN read option captured at plan time
-    // (round-14 ADVICE: a process-global toggle between planning and
-    // execution could mismatch the plan shape against the reader kind):
-    // columnar=false plans row reads and stays row-identical
-    val rowRead = spark.read.format("freqstore")
-      .option("columnar", "false").load(dir)
-    assert(!rowRead.queryExecution.executedPlan.toString
-      .contains("ColumnarToRow"),
-      "columnar=false must plan the row-based reader")
-    assert(rowSet(rowRead) == rowSet(store.serve()))
-    // the row reader applies a pushed point set record-level as well
-    val pts = "chromosome = '1' AND position IN (5000, 5001)"
-    assert(rowSet(rowRead.filter(pts)) == rowSet(store.serve().filter(pts)))
+  }
+
+  test("a zero-column scan reads columnar and counts serve()'s rows") {
+    // select(lit(1)) projects no store column, and a limit between the
+    // scan and the count blocks the footer COUNT(*) pushdown, so both
+    // plan an empty-projection scan: column-less batches that carry
+    // only their row counts
+    val (store, dir) = builtStore()
+    def check(stage: String): Unit = {
+      val ones = spark.read.format("freqstore").load(dir).select(lit(1))
+      val expected = store.serve().count()
+      assert(expected > 2, s"$stage: fixture must exceed the limit")
+      assert(ones.collect().length == expected, stage)
+      assert(graft.sources.FreqStoreDataSource.lastPlannedColumns.isEmpty,
+        s"$stage: select(lit(1)) must plan an empty projection")
+      assert(spark.read.format("freqstore").load(dir).limit(2).count() == 2,
+        stage)
+      val limited = spark.read.format("freqstore").load(dir).limit(2)
+        .agg(count(lit(1)))
+      assert(limited.collect()(0).getLong(0) == 2L, stage)
+      for (df <- Seq(ones, limited)) {
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("ColumnarToRow"),
+          s"$stage: zero-column freqstore scan is not columnar:\n$plan")
+      }
+    }
+    check("two generations")
+    store.compact()
+    check("compacted")
   }
 
   test("asOfGeneration option time-travels the scan; invalid bounds fail at plan time") {

@@ -46,6 +46,13 @@ rm -rf target/verify_sf0.01_p7
 SPARK_GRAFT_CPUS=7 tools/run_main.sh Verify \
   ../testdata/sf0.01 target/verify_sf0.01_p7 2>&1 | grep -E "\[verify\]" || true
 python3 tools/check.py ../testdata/sf0.01 target/verify_sf0.01_p7 | tail -1
+# the same sf0.01 oracle at ONE partition and local[1] (one task thread),
+# under a timeout so a key that hangs at one core fails the cell instead
+# of stalling the gate (cleared first)
+rm -rf target/verify_sf0.01_p1
+SPARK_GRAFT_CPUS=1 timeout 3600 tools/run_main.sh Verify \
+  ../testdata/sf0.01 target/verify_sf0.01_p1 2>&1 | grep -E "\[verify\]" || true
+python3 tools/check.py ../testdata/sf0.01 target/verify_sf0.01_p1 | tail -1
 # the same sf0.01 oracle with the interval-join rewrite on for every key:
 # spark.sql.extensions registers graft.plans.RewriteIntervalJoin on the
 # session and spark.graft.rewriteIntervalJoin enables it, so every naive
