@@ -71,6 +71,9 @@ object Bench {
       // same way; its build is the amortized offline step, the timed
       // line measures the generation-pinned read)
       SparkEntry.queries.get("varda_freq_asof").foreach(_(spark, sfDir).count())
+      // … and the retraction key's replayed-then-retracted store (same
+      // standing build; the timed line measures serving the retracted state)
+      SparkEntry.queries.get("varda_sample_retract").foreach(_(spark, sfDir).count())
       // … and the shared standing shingle inverted index (persisted once
       // per session × corpus, reused by the whole jaccard family):
       // without this, whichever family key runs first alphabetically

@@ -8,10 +8,10 @@ package graft
   *
   * Explain runs no action of its own (a key's builder may still run the
   * jobs of its checkpoints): the plan printed is the adaptive plan as
-  * planned (`isFinalPlan=false`), exchanges and joins included. Expression ids
-  * (`#123`) and exchange `plan_id`s print as `#x` and `plan_id=x`, and scan
-  * metadata prints in full, so two dumps of the same query on different
-  * commits diff line for line. */
+  * planned (`isFinalPlan=false`), exchanges and joins included. Scan
+  * metadata prints in full, and every per-run token is masked
+  * ([[normalized]]), so two dumps of the same query diff line for line,
+  * on one commit or two. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -32,7 +32,18 @@ object Explain {
     spark.stop()
   }
 
-  /** `plan` with expression ids and exchange plan ids replaced by `x`. */
-  private def normalized(plan: String): String =
-    plan.replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
+  /** `plan` with its per-run tokens masked: expression ids (`#123`),
+    * exchange `plan_id`s, the scratch root's application id
+    * (`graft-scratch/local-<epoch ms>`), lambdas' hidden-class addresses
+    * and the identity hash codes of printed objects (lambdas,
+    * aggregators), the checkout's absolute `spark-warehouse` path and
+    * the streaming drains' `run<random>` temp dirs. */
+  private[graft] def normalized(plan: String): String =
+    plan.replaceAll("#\\d+", "#x")
+      .replaceAll("plan_id=\\d+", "plan_id=x")
+      .replaceAll("graft-scratch/local-\\d+", "graft-scratch/local-x")
+      .replaceAll("\\$Lambda(\\$\\d+)?/0x\\p{XDigit}+", "\\$Lambda")
+      .replaceAll("(\\.[\\w$]+)@\\p{XDigit}+\\b", "$1@x")
+      .replaceAll("[^\\s\\[\\],]*/spark-warehouse\\b", "spark-warehouse")
+      .replaceAll("/run\\d+\\b", "/runx")
 }

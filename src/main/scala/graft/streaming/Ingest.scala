@@ -69,9 +69,9 @@ object Ingest {
     * checkpoint commit replays the batch), so each batch writes its OWN
     * `batch=<id>` generation dir with mode overwrite — a replayed batch
     * rewrites the same directory instead of appending duplicates, the
-    * same idempotence shape [[startFrequencyMaintenance]] uses. The
-    * store stays chromosome-partitioned inside each generation, so
-    * partition pruning on chromosome still works for readers. */
+    * same idempotence shape [[startFreqStoreMaintenance]]'s generations
+    * use. The store stays chromosome-partitioned inside each generation,
+    * so partition pruning on chromosome still works for readers. */
   def startVcfIngest(spark: SparkSession, srcDir: String,
       destDir: String, checkpointDir: String): StreamingQuery =
     spark.readStream.text(srcDir)
@@ -107,8 +107,7 @@ object Ingest {
         element_at(col("f"), 2).cast(IntegerType).as("pool_size"),
         element_at(col("f"), 3).cast(BooleanType).as("has_coverage"))
 
-  /** Continuous FULL-STATE frequency maintenance (round-8; the round-7
-    * numerator-only stream is [[startFrequencyMaintenance]] below): ONE
+  /** Continuous FULL-STATE frequency maintenance (round-8): ONE
     * inbox directory receives typed import files — `*.obs` observation
     * lines, `*.bed` coverage lines, `*.smp` sample registrations,
     * `*.rm` sample RETRACTIONS (round-9; the reference treats
@@ -137,7 +136,7 @@ object Ingest {
     * import-history rescan; a crash between write and checkpoint commit
     * replays into the same generations. Coverage bin assignment (the
     * region → 2^11-cell explode) happens in-path inside the commit. */
-  def startFreqStateMaintenance(spark: SparkSession, srcDir: String,
+  def startFreqStoreMaintenance(spark: SparkSession, srcDir: String,
       storeDir: String, checkpointDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       compactEvery: Option[Int] = None,
@@ -330,79 +329,6 @@ object Ingest {
       val p = new Path(tableDir, s"batch=$g")
       if (fs.exists(p)) fs.delete(p, true)
     }
-  }
-
-  /** Continuous frequency-numerator maintenance — the second half of the
-    * reference's import task (import_variation both INSERTS observations
-    * and updates served state [U]): each micro-batch of observation
-    * lines folds its per-variant partial sums into a persistent
-    * numerator store via [[graft.varda.VardaOps.foldNumer]]'s
-    * merge-upsert shape, so serving never rescans ingest history.
-    *
-    * The store is GENERATIONAL and replay-idempotent: batch `b` reads
-    * the newest generation with id < `b` and overwrites `gen-b` — a pure
-    * function of (previous generation, batch content), so a batch
-    * replayed after a crash rewrites the same generation instead of
-    * double-counting (exactly the reason a plain read-merge-overwrite of
-    * one store path would be wrong under the checkpoint's at-least-once
-    * foreachBatch contract).
-    *
-    * This numerator-only stream writes O(store) generations — kept as
-    * the minimal round-7 form its test documents. The PRODUCTION path
-    * is [[startFreqStateMaintenance]]: full state, bucket-partitioned
-    * O(batch) commits, a commit log for partial-write invisibility,
-    * retention compaction. */
-  def startFrequencyMaintenance(spark: SparkSession, srcDir: String,
-      storeDir: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val prev = latestGen(s, storeDir, before = batchId)
-          .map(readNumerGen(s, _)).getOrElse(emptyNumer(s))
-        graft.varda.VardaOps.foldNumer(prev, parseObservationLines(batch))
-          .write.mode("overwrite").parquet(s"$storeDir/gen-$batchId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Serve the maintained numerator store: newest committed generation,
-    * or an empty frame before any batch has folded. */
-  def readNumerStore(spark: SparkSession, storeDir: String): DataFrame =
-    latestGen(spark, storeDir, before = Long.MaxValue)
-      .map(readNumerGen(spark, _)).getOrElse(emptyNumer(spark))
-
-  private val numerSchema = StructType(Seq(
-    StructField("chromosome", StringType), StructField("position", LongType),
-    StructField("reference", StringType), StructField("observed", StringType),
-    StructField("numer", LongType)))
-
-  private def readNumerGen(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(numerSchema).parquet(path)
-
-  private def emptyNumer(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      numerSchema)
-
-  /** Newest `gen-<id>` directory with id < `before` (Hadoop FS listing —
-    * works on any supported filesystem, not just local). */
-  private def latestGen(spark: SparkSession, storeDir: String,
-      before: Long): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("gen-")) n.stripPrefix("gen-").toLongOption
-          .filter(_ < before).map(_ -> st.getPath.toString)
-        else None
-      }
-      .sortBy(_._1).lastOption.map(_._2)
   }
 
   /** Read the VCF-ingested store with the written schema ([[graft.varda

@@ -6,15 +6,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The COMMITTED form of [[VardaOps.FreqState]] (round-8, compressed and
-  * hardened round-9): every import batch folds into durable,
-  * bucket-partitioned, generational parquet stores, and serving reads
-  * the stores alone — the at-scale shape the in-session lazy replay
-  * (`VardaOps.vardaFreqIncremental`) stood in for. This is the
-  * reference's actual continuous-import surface [U varda/tasks.py ::
-  * import_variation / import_coverage]: imports arrive forever, served
-  * state must never rescan import history, and a restart must lose
-  * nothing.
+/** The one incremental frequency state (round-8, compressed and
+  * hardened round-9): every import batch, and every sample retraction,
+  * folds into durable, bucket-partitioned, generational parquet stores,
+  * and serving reads the stores alone. This is the reference's actual
+  * continuous-import surface [U varda/tasks.py :: import_variation /
+  * import_coverage, varda/models.py :: Sample.active]: imports arrive
+  * forever, served state must never rescan import history, and a
+  * restart must lose nothing.
   *
   * Layout — one directory per generation, one dynamic-partition leaf per
   * (component, bucket):
@@ -151,11 +150,10 @@ import org.apache.spark.sql.types._
   * ([[unmarkGeneration]]), so readers never pair a retraction's folds
   * with pre-import bucket content.
   *
-  * Semantics MATCH [[VardaOps.foldFreqState]]'s served state — a
+  * Semantics MATCH the one-shot [[VardaOps.frequencyFrom]] — a
   * sample's overlapping regions arriving in any batch order still
   * count each covered point once — and FreqStoreSpec replays
-  * adversarial and randomized interleavings against the one-shot
-  * [[VardaOps.frequencyFrom]] oracle.
+  * adversarial and randomized interleavings against it.
   */
 class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
   import FreqStore._
@@ -709,7 +707,7 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     * observations are read off the obslog component (appended +rows
     * minus tombstones), so the caller supplies only the sample rows —
     * how the streaming inbox routes a `.rm` file
-    * ([[graft.streaming.Ingest.startFreqStateMaintenance]]). */
+    * ([[graft.streaming.Ingest.startFreqStoreMaintenance]]). */
   def retractSamples(batchId: Long, smpR: DataFrame): Unit =
     retract(batchId, netObsOf(batchId, smpR), smpR)
 
@@ -971,8 +969,8 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     }
   }
 
-  /** Serve ppm frequencies from the committed stores alone — the same
-    * three-frame join as the in-session state, no containment join and
+  /** Serve ppm frequencies from the committed stores alone — the
+    * three-frame [[VardaOps.serveFrom]] join, no containment join and
     * no history rescan at serve time. The commit-log high-water mark is
     * pinned ONCE and every component reads strictly below it, so a
     * commit landing mid-serve cannot skew one component ahead of

@@ -2,6 +2,7 @@ package graft
 
 import graft.varda.VardaOps
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{count, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The pair-free (interval-stabbing sweep) form of the coverage-join
@@ -13,6 +14,15 @@ class CoverageSweepSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame) = df.collect()
     .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  /** The reference form: the binned containment JOIN's pair set,
+    * aggregated per observation (obs_id, n_regions, total_pool). */
+  private def coverageAggByJoin(obsDf: DataFrame, covDf: DataFrame): DataFrame =
+    VardaOps.bucketedContainment(
+        obsDf.select("obs_id", "chromosome", "position"), covDf)
+      .groupBy("obs_id")
+      .agg(count(lit(1)).as("n_regions"),
+        sum($"pool_size").cast("long").as("total_pool"))
 
   test("sweep aggregates equal the containment join on crafted boundaries") {
     val obs = Seq(
@@ -30,19 +40,12 @@ class CoverageSweepSpec extends AnyFunSuite {
       (12L, "2", 100L, 100L, 3L, 7))  // single-point region
       .toDF("region_id", "chromosome", "begin_pos", "end_pos",
         "sample_id", "pool_size")
-    val viaJoin = VardaOps.bucketedContainment(
-        obs, cov)
-      .groupBy("obs_id")
-      .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n_regions"),
-        org.apache.spark.sql.functions.sum($"pool_size")
-          .cast("long").as("total_pool"))
+    val viaJoin = rows(coverageAggByJoin(obs, cov))
     // both sides of GlobalRank's size gate: these rows run the one-window
     // sweep by default, the chunked running sums under localMaxBytes=0
     def check(): Unit = {
       val viaSweep = VardaOps.coverageAggBySweep(obs, cov)
-      assert(rows(viaSweep) == rows(viaJoin.select(
-        $"obs_id", $"n_regions", $"total_pool")))
+      assert(rows(viaSweep) == viaJoin)
       // spot-pin the boundaries
       val m = rows(viaSweep).map(t => t._1 -> ((t._2, t._3))).toMap
       assert(m(1L) == ((2L, 7L)))
@@ -58,7 +61,7 @@ class CoverageSweepSpec extends AnyFunSuite {
 
   test("declared varda_coverage_join (sweep plan) equals the containment join on the fixture") {
     val d = "/root/testdata/sf0.001"
-    val viaJoin = rows(VardaOps.coverageAggByJoin(
+    val viaJoin = rows(coverageAggByJoin(
       VardaOps.obs(spark, d), VardaOps.cov(spark, d)))
     def viaKey() = VardaOps.vardaCoverageJoin(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

@@ -572,11 +572,11 @@ class FreqStoreChangesSpec extends AnyFunSuite {
     put("a.obs", Seq("1;1;5000;A;C;3;1", "2;X;5000;A;C;1;2"))
     put("a.bed", Seq("10;1;4000;6000;1;2", "12;X;4000;6000;2;5"))
     put("a.smp", Seq("1;2;true", "2;5;true", "3;7;false"))
-    graft.streaming.Ingest.startFreqStateMaintenance(spark, src, store, ckpt)
+    graft.streaming.Ingest.startFreqStoreMaintenance(spark, src, store, ckpt)
       .awaitTermination()
     put("b.obs", Seq("3;X;5000;A;C;2;2"))
     put("b.rm", Seq("1;2;true", "3;7;false"))
-    graft.streaming.Ingest.startFreqStateMaintenance(spark, src, store, ckpt)
+    graft.streaming.Ingest.startFreqStoreMaintenance(spark, src, store, ckpt)
       .awaitTermination()
 
     val got = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]

@@ -24,7 +24,7 @@ class FreqStoreSpec extends AnyFunSuite {
       ((r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
 
   test("committed replay converges to the one-shot state (adversarial batches)") {
-    // the FrequencySemanticsSpec cross-batch shapes: same-sample
+    // the adversarial cross-batch shapes: same-sample
     // overlapping regions split across batches (count once), coverage
     // arriving after its point, a point arriving after its coverage, a
     // coverage-less sample registering mid-stream, haploid X
@@ -54,7 +54,8 @@ class FreqStoreSpec extends AnyFunSuite {
       withZyg = false))
     val got = freqKey(store.serve())
     assert(got == expected)
-    // hand-derived spot checks (same numbers as the in-session fold)
+    // hand-derived spot checks: chr1 = sample 1 once (2×2) + coverage-less
+    // sample 3 (7×2) despite the split overlap; X's region arrived late
     assert(got(("1", 5000L, "A", "C")) == ((3L, 18L, 3L * 1000000 / 18)))
     assert(got(("2", 700L, "G", "T")) == ((2L, 24L, 2L * 1000000 / 24)))
     assert(got(("X", 5000L, "A", "C")) == ((1L, 12L, 1L * 1000000 / 12)))

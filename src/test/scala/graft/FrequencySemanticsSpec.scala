@@ -1,7 +1,6 @@
 package graft
 
 import graft.varda.VardaOps
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The reference's core frequency semantics (SURVEY.md §1 item 3), pinned
@@ -59,96 +58,5 @@ class FrequencySemanticsSpec extends AnyFunSuite {
     assert(rows("1") == ((3L * 1000000 / 18, 0L)))
     // X obs is homozygous support 1 → het 0, hom 1/12
     assert(rows("X") == ((0L, 1L * 1000000 / 12)))
-  }
-
-  test("batched coverage folds converge to the one-shot state") {
-    // the adversarial cross-batch shapes: sample 1's two OVERLAPPING
-    // chr1 regions arrive in DIFFERENT batches (must still count once);
-    // the X observation arrives in batch 0 but its covering region only
-    // in batch 2 (existing point gains denominator later); the chr2
-    // observation arrives in batch 2 after its region in batch 0 (new
-    // point probes the accumulated region store); the coverage-less
-    // sample arrives mid-stream in batch 1
-    val obsB = Seq(
-      Seq(("1", 5000L, "A", "C", 1L, 3, "heterozygous"),
-          ("X", 5000L, "A", "C", 2L, 1, "homozygous")),
-      Seq.empty[(String, Long, String, String, Long, Int, String)],
-      Seq(("2", 700L, "G", "T", 3L, 2, "heterozygous")))
-      .map(_.toDF("chromosome", "position", "reference", "observed",
-        "sample_id", "support", "zygosity"))
-    val covB = Seq(
-      Seq((10L, "1", 4000L, 6000L, 1L, 2), (14L, "2", 600L, 800L, 2L, 5)),
-      Seq((11L, "1", 4500L, 5500L, 1L, 2)),
-      Seq((12L, "X", 4000L, 6000L, 2L, 5), (13L, "X", 9000L, 9500L, 1L, 2)))
-      .map(_.toDF("region_id", "chromosome", "begin_pos", "end_pos",
-        "sample_id", "pool_size"))
-    val smpB = Seq(
-      Seq((1L, 2, true)), Seq((3L, 7, false)), Seq((2L, 5, true)))
-      .map(_.toDF("sample_id", "pool_size", "has_coverage"))
-
-    val allObs = obsB.reduce(_ unionByName _)
-    val allCov = covB.reduce(_ unionByName _)
-    val allSmp = smpB.reduce(_ unionByName _)
-    val expected = VardaOps.frequencyFrom(allObs, allCov, allSmp, withZyg = false)
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        ((r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
-
-    val st = (0 until 3).foldLeft(VardaOps.emptyFreqState(allObs, allCov)) {
-      case (acc, i) => VardaOps.foldFreqState(acc, obsB(i), covB(i), smpB(i))
-    }
-    val got = VardaOps.serveFreqState(st)
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        ((r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
-    assert(got == expected)
-    // spot-check the hand-derived numbers: chr1 denom = sample1 once
-    // (2×2) + uncovered sample3 (7×2) = 18 despite split overlap
-    assert(got(("1", 5000L)) == ((3L, 18L, 3L * 1000000 / 18)))
-    // chr2:700 — sample2 covers (5×2) + sample3 (7×2) = 24, numer 2
-    assert(got(("2", 700L)) == ((2L, 24L, 2L * 1000000 / 24)))
-    // X:5000 — sample2 (5×1) + sample3 (7×1) = 12 (region arrived late)
-    assert(got(("X", 5000L)) == ((1L, 12L, 1L * 1000000 / 12)))
-    // and the region store keeps the merged-disjoint invariant that
-    // makes "a sample counts once per point" structural: per
-    // (sample, chromosome), intervals neither overlap nor touch
-    val regs = st.regions.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .groupBy(t => (t._1, t._2))
-    for ((_, ivs) <- regs; Seq(a, b) <- ivs.toSeq.sortBy(_._3).sliding(2))
-      assert(b._3 > a._4 + 1, s"intervals not merged-disjoint: $a, $b")
-  }
-
-  test("sample retraction converges to the one-shot over remaining samples") {
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getLong(1)) ->
-        ((r.getLong(4), r.getLong(5), r.getLong(6)))
-    val st = VardaOps.foldFreqState(
-      VardaOps.emptyFreqState(obsDf, covDf), obsDf, covDf, smpDf)
-    // retract sample 1 (covered, sole observer of the chr1 variant) and
-    // sample 3 (coverage-less) — both retraction paths in one go
-    val gone = Set(1L, 3L)
-    val st2 = VardaOps.retractSample(st,
-      obsDf.filter(col("sample_id").isin(gone.toSeq: _*)),
-      smpDf.filter(col("sample_id").isin(gone.toSeq: _*)))
-    val got = VardaOps.serveFreqState(st2).collect().map(key).toMap
-    val expected = VardaOps.frequencyFrom(
-      obsDf.filter(!col("sample_id").isin(gone.toSeq: _*)),
-      covDf.filter(!col("sample_id").isin(gone.toSeq: _*)),
-      smpDf.filter(!col("sample_id").isin(gone.toSeq: _*)),
-      withZyg = false).collect().map(key).toMap
-    assert(got == expected)
-    // the chr1 variant (observed only by retracted sample 1) is GONE,
-    // and X:5000 keeps only sample 2's haploid contribution (5×1)
-    assert(!got.contains(("1", 5000L)))
-    assert(got(("X", 5000L)) == ((1L, 5L, 1L * 1000000 / 5)))
-    // re-importing the retracted sample restores the full state — the
-    // store cleanup (pair/region/pool subtraction) must leave no residue
-    val st3 = VardaOps.foldFreqState(st2,
-      obsDf.filter(col("sample_id").isin(gone.toSeq: _*)),
-      covDf.filter(col("sample_id").isin(gone.toSeq: _*)),
-      smpDf.filter(col("sample_id").isin(gone.toSeq: _*)))
-    val restored = VardaOps.serveFreqState(st3).collect().map(key).toMap
-    val full = VardaOps.frequencyFrom(obsDf, covDf, smpDf, withZyg = false)
-      .collect().map(key).toMap
-    assert(restored == full)
   }
 }

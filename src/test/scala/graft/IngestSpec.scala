@@ -316,7 +316,7 @@ class IngestSpec extends AnyFunSuite {
     put("a.obs", Seq("1;1;5000;A;C;3", "2;X;5000;A;C;1"))
     put("a.bed", Seq("10;1;4000;6000;1;2"))
     put("a.smp", Seq("1;2;true", "2;7;false"))
-    Ingest.startFreqStateMaintenance(spark, src, store, ckpt)
+    Ingest.startFreqStoreMaintenance(spark, src, store, ckpt)
       .awaitTermination()
     val got1 = freqKey(Ingest.readFreqStore(spark, store))
     // chr1:5000 — numer 3, denom = covered 2×2 + uncovered 7×2 = 18;
@@ -330,7 +330,7 @@ class IngestSpec extends AnyFunSuite {
     put("b.obs", Seq("3;1;5000;A;C;2"))
     put("b.bed", Seq("11;1;4500;5500;1;2", "12;X;4000;6000;3;5"))
     put("b.smp", Seq("3;5;true"))
-    Ingest.startFreqStateMaintenance(spark, src, store, ckpt)
+    Ingest.startFreqStoreMaintenance(spark, src, store, ckpt)
       .awaitTermination()
     val got2 = freqKey(Ingest.readFreqStore(spark, store))
     assert(got2(("1", 5000L, "A", "C")) == ((5L, 18L, 5L * 1000000 / 18)))
@@ -367,7 +367,7 @@ class IngestSpec extends AnyFunSuite {
     put("a.obs", Seq("1;1;5000;A;C;3;1", "2;X;5000;A;C;1;2"))
     put("a.bed", Seq("10;1;4000;6000;1;2", "12;X;4000;6000;2;5"))
     put("a.smp", Seq("1;2;true", "2;5;true", "3;7;false"))
-    Ingest.startFreqStateMaintenance(spark, src, store, ckpt)
+    Ingest.startFreqStoreMaintenance(spark, src, store, ckpt)
       .awaitTermination()
 
     // wave 2: one micro-batch carrying BOTH a new import (sample 2 adds
@@ -375,7 +375,7 @@ class IngestSpec extends AnyFunSuite {
     // the reference's normal lifecycle, not an offline admin op
     put("b.obs", Seq("3;X;5000;A;C;2;2"))
     put("b.rm", Seq("1;2;true", "3;7;false"))
-    Ingest.startFreqStateMaintenance(spark, src, store, ckpt)
+    Ingest.startFreqStoreMaintenance(spark, src, store, ckpt)
       .awaitTermination()
 
     val obs = Seq(("1", 5000L, "A", "C", 1L, 3), ("X", 5000L, "A", "C", 2L, 1),
@@ -413,7 +413,7 @@ class IngestSpec extends AnyFunSuite {
     // state exact through repeated splits. retainGens=0 (no grace):
     // this test pins the tightest generation BOUND; the default grace
     // is exercised by the in-loop grace test below
-    def run() = Ingest.startFreqStateMaintenance(spark, src, store, ckpt,
+    def run() = Ingest.startFreqStoreMaintenance(spark, src, store, ckpt,
       compactEvery = Some(1), splitThreshold = Some(1L), retainGens = 0)
       .awaitTermination()
 
@@ -465,7 +465,7 @@ class IngestSpec extends AnyFunSuite {
       Files.write(Paths.get(s"$src/$name"), String.join("\n", rows: _*).getBytes)
     // the DEFAULT retainGens: the streamed cadence must carry the
     // cross-process grace without the caller asking for it
-    def run() = Ingest.startFreqStateMaintenance(spark, src, store, ckpt,
+    def run() = Ingest.startFreqStoreMaintenance(spark, src, store, ckpt,
       compactEvery = Some(1)).awaitTermination()
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3)) ->
@@ -489,40 +489,5 @@ class IngestSpec extends AnyFunSuite {
     // and the store itself moved on: the new import is served
     val now = key(Ingest.readFreqStore(spark, store))
     assert(now(("2", 700L, "G", "T"))._1 == 3L)
-  }
-
-  test("streaming frequency maintenance folds each micro-batch into the store") {
-    val base = Files.createTempDirectory(Paths.get("/root/repo/target"), "ingmaint")
-    val (src, store, ckpt) = (s"$base/src", s"$base/store", s"$base/ckpt")
-    Files.createDirectories(Paths.get(src))
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getLong(1), r.getString(2), r.getString(3)) -> r.getLong(4)
-
-    // two files, maxFilesPerTrigger=1 → two folded generations in one run
-    Files.write(Paths.get(s"$src/b0.txt"), String.join("\n",
-      "1;1;1000;A;T;1", "2;1;1000;A;T;2", "3;2;1500;G;A;1").getBytes)
-    Files.write(Paths.get(s"$src/b1.txt"), String.join("\n",
-      "4;1;1000;A;T;2", "5;2;1500;G;C;1").getBytes)
-    Ingest.startFrequencyMaintenance(spark, src, store, ckpt).awaitTermination()
-    val after2 = Ingest.readNumerStore(spark, store).collect().map(key).toMap
-    assert(after2 == Map(
-      ("1", 1000L, "A", "T") -> 5L,
-      ("2", 1500L, "G", "A") -> 1L,
-      ("2", 1500L, "G", "C") -> 1L))
-
-    // restart with one new file: the checkpoint skips history, the new
-    // batch folds onto the newest prior generation
-    Files.write(Paths.get(s"$src/b2.txt"),
-      String.join("\n", "6;2;1500;G;A;3").getBytes)
-    Ingest.startFrequencyMaintenance(spark, src, store, ckpt).awaitTermination()
-    val after3 = Ingest.readNumerStore(spark, store).collect().map(key).toMap
-    assert(after3(("2", 1500L, "G", "A")) == 4L)
-    assert(after3(("1", 1000L, "A", "T")) == 5L)
-
-    // replay-idempotence: re-running a batch's fold rewrites the same
-    // generation (pure function of prior gen + batch), never doubles
-    val gens = new java.io.File(store).listFiles()
-      .filter(_.getName.startsWith("gen-")).map(_.getName).sorted
-    assert(gens.length == 3, s"expected 3 generations, got ${gens.mkString(",")}")
   }
 }

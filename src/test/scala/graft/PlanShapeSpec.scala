@@ -194,13 +194,14 @@ class PlanShapeSpec extends AnyFunSuite {
       "varda_freq_lookup_range_expr",
       "varda_freq_lookup_expr", "varda_freq_lookup_multi",
       "varda_freq_asof", // serveFrom's 1-row coverage-less pool broadcast
+      "varda_sample_retract", // serveFrom's 1-row coverage-less pool broadcast
       "stream_store_changes_freq", // refoldChanges ends in the same serveFrom
       "stream_store_changes_bootstrap", // bootstrap refold: same serveFrom
       "sink_vcf_multi", // inherits the per-file #CHROM-header broadcast
       "varda_annotate_store", "varda_annotate_multi",
       "stream_late_watermark", "win_global_rank",
       "pack_sequences", "sample_mixture", "sample_temperature",
-      "text_perplexity", "varda_sample_retract", "text_line_dedup", "varda_trio_denovo")
+      "text_perplexity", "text_line_dedup", "varda_trio_denovo")
     for ((k, fn) <- SparkEntry.queries.toSeq.sortBy(_._1) if !sanctioned(k)) {
       val p = fn(spark, sf0001).queryExecution.executedPlan.toString
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

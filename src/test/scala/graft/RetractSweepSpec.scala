@@ -5,11 +5,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The pair-free denominator machinery behind the round-11
-  * [[VardaOps.FreqState]]: interval merge, per-sample interval
-  * subtraction, and the stabbing-sweep mass — each pinned against the
-  * pair-enumerating containment form it replaced, on crafted boundary
-  * cases and on the real fixture. */
+/** The pair-free denominator machinery: interval merge and the
+  * stabbing-sweep mass, pinned against the pair-enumerated ground truth
+  * ([[denomCovByPairs]]) on crafted boundary cases and on the real
+  * fixture, plus the declared retraction key against the one-shot over
+  * the remaining samples. */
 class RetractSweepSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -20,8 +20,10 @@ class RetractSweepSpec extends AnyFunSuite {
   private def massSet(df: DataFrame) = df.collect()
     .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
-  /** The covered part of [[VardaOps.denomFor]] — pair-enumerated ground
-    * truth (distinct (point, sample) containment pairs × pool × ploidy). */
+  /** The covered denominator, PAIR-ENUMERATED — the ground truth
+    * (distinct (point, sample) containment pairs × pool × ploidy) whose
+    * pair volume grows with coverage depth × points, so no production
+    * plan computes it this way. */
   private def denomCovByPairs(pts: DataFrame, cov: DataFrame): DataFrame =
     VardaOps.bucketedContainment(pts, cov)
       .select("chromosome", "position", "sample_id", "pool_size").distinct()
@@ -40,23 +42,6 @@ class RetractSweepSpec extends AnyFunSuite {
     assert(got == Set(
       (1L, "1", 10L, 40L, 2), (1L, "1", 50L, 60L, 2),
       (2L, "1", 18L, 25L, 5), (1L, "2", 10L, 20L, 2)))
-  }
-
-  test("subtractIntervals emits exactly the uncovered-before fragments") {
-    val after = covRows(
-      (1L, "1", 10L, 40L, 2),   // before covers [15,25] → two fragments
-      (1L, "1", 50L, 60L, 2),   // untouched by before → whole interval
-      (2L, "1", 5L, 9L, 5))     // sample with no before rows
-    val before = covRows(
-      (1L, "1", 15L, 25L, 2))
-    val got = VardaOps.subtractIntervals(after, before)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).toSet
-    assert(got == Set(
-      (1L, "1", 10L, 14L), (1L, "1", 26L, 40L),
-      (1L, "1", 50L, 60L), (2L, "1", 5L, 9L)))
-    // identical frames subtract to nothing (the re-imported-overlap case)
-    assert(VardaOps.subtractIntervals(after, after).isEmpty)
   }
 
   test("denomCovBySweep equals the pair-enumerated form on crafted boundaries") {
@@ -97,7 +82,7 @@ class RetractSweepSpec extends AnyFunSuite {
     withLocalMaxBytes(0L)(check())
   }
 
-  test("declared varda_sample_retract (sweep state) equals the remaining-samples one-shot on the fixture") {
+  test("declared varda_sample_retract equals the remaining-samples one-shot on the fixture") {
     val gone = Seq(4, 14)
     val got = VardaOps.vardaSampleRetract(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3),

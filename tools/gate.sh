@@ -12,6 +12,9 @@ if [ -n "$raw" ]; then
   echo "raw checkpoint calls outside graft.util (use Ckpt.narrow):"; echo "$raw"
   exit 1
 fi
+# the src/main line count (ROADMAP E's figure), so each change reads its
+# count from the gate
+echo "src/main lines: $(find src/main -name '*.scala' | xargs cat | wc -l)"
 for sf in sf0.001 sf0.01 sf0.1; do
   sbt -batch "runMain graft.Verify /root/testdata/$sf target/verify_$sf" 2>&1 | grep -E "\[verify\]" || true
   python3 tools/check.py /root/testdata/$sf target/verify_$sf | tail -1
