@@ -567,11 +567,15 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     * [[retractSamples]] derives `obsR` from the obslog store, so the
     * stream needs only the sample rows. */
   def retract(batchId: Long, obsR: DataFrame, smpR: DataFrame): Unit =
-    withWriterLock(s"retract batch $batchId")(
-      retractLocked(batchId, obsR, smpR))
+    withWriterLock(s"retract batch $batchId") {
+      val ids = sampleIds(smpR)
+      retractLocked(batchId, obsR, ids, registryBuckets(batchId, ids)._1)
+    }
 
+  /** The retraction under the writer lock, for the samples `ids` whose
+    * fragments the covidx registry places in `covBkts`. */
   private def retractLocked(batchId: Long, obsR: DataFrame,
-      smpR: DataFrame): Unit = {
+      ids: Seq[Long], covBkts: Set[Int]): Unit = {
     // a retraction's obslog tombstones MUST be sample-tagged: a
     // null-sample_id tombstone can never net against the sample-tagged
     // +rows, so a later retractSamples() for the same samples would
@@ -583,17 +587,15 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
         "and a repeated retraction double-subtracts; use retractSamples() " +
         "to derive the observations from the store's obslog")
     val n = nBkts
-    val sids = smpR.select("sample_id")
+    val gone = isRetracted(ids)
     // prune the cover read to the retracted samples' buckets via the
     // covidx registry (round-11; was the store's one remaining
     // full-component administrative scan). covidx is an append-only
     // SUPERSET — commits record every bucket a sample's coverage ever
     // landed in, compaction rewrites it exactly — so restricting the
     // merge read to these buckets can never miss a live fragment.
-    val coverAll = mergeRead("cover", batchId,
-      Some(covBucketsOf(batchId, sids)))
-    val fragsGone = Ckpt.narrow(coverAll
-      .join(broadcast(sids), Seq("sample_id"), "left_semi")
+    val fragsGone = Ckpt.narrow(mergeRead("cover", batchId, Some(covBkts))
+      .filter(gone)
       .select("chromosome", "cell", "fbegin", "fend", "sample_id", "pool_size"))
     val rsid = col("sample_id").cast(LongType)
     val obsN = Ckpt.narrow(obsR
@@ -605,7 +607,7 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     // and subtracts nothing from the coverage-less pool (the same
     // tombstone idempotence the obslog gives the numerators)
     val regNet = Ckpt.narrow(appendRead("smpreg", batchId, None)
-      .join(broadcast(sids), Seq("sample_id"), "left_semi")
+      .filter(gone)
       .groupBy("sample_id", "has_coverage")
       .agg(sum(col("pool_size")).cast(IntegerType).as("pool_size"))
       .filter(col("pool_size") =!= 0))
@@ -649,7 +651,7 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
       .groupBy("chromosome", "position")
       .agg(sum(col("denom_cov")).cast(LongType).as("denom_cov"))
     val coverNew = mergeRead("cover", batchId, Some(cBkts))
-      .join(broadcast(sids), Seq("sample_id"), "left_anti")
+      .filter(!gone)
       .select("chromosome", "cell", "fbegin", "fend", "sample_id", "pool_size")
     val numerNew = VardaOps.foldNumer(
         mergeRead("numer", batchId, Some(oBkts)), obsN)
@@ -685,23 +687,35 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     markCommitted(batchId, 0, n, uncovPool(batchId) - uncovGone)
   }
 
-  /** The covidx registry's bucket set for `sids` as of `batchId` —
-    * every cover bucket that can hold those samples' fragments (a
-    * superset between compactions; exact after one). O(samples ×
-    * nBuckets) rows scanned, one scalar collect. */
-  private[graft] def covBucketsOf(batchId: Long, sids: DataFrame): Set[Int] =
-    idxBucketsOf("covidx", batchId, sids)
+  /** The retracted samples' ids, collected once (one job, no shuffle:
+    * a sample frame holds a row per sample) and matched by
+    * [[isRetracted]] in every read that follows — no broadcast job per
+    * read of the sample frame. */
+  private def sampleIds(smpR: DataFrame): Seq[Long] =
+    smpR.select(col("sample_id").cast(LongType)).collect()
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }.distinct.sorted.toSeq
 
-  /** The obsidx twin: every obslog bucket that can hold the samples'
-    * (tagged) observation rows. */
-  private[graft] def obsBucketsOf(batchId: Long, sids: DataFrame): Set[Int] =
-    idxBucketsOf("obsidx", batchId, sids)
+  /** `sample_id ∈ ids`, false for a NULL sample (a semi-join's match).
+    * The array literal reaches generated code as a reference, not
+    * inlined, so one class serves every retracted set. */
+  private def isRetracted(ids: Seq[Long]): Column =
+    coalesce(array_contains(typedLit(ids), col("sample_id")), lit(false))
 
-  private def idxBucketsOf(comp: String, batchId: Long,
-      sids: DataFrame): Set[Int] =
-    appendRead(comp, batchId, None)
-      .join(broadcast(sids.select("sample_id")), Seq("sample_id"), "left_semi")
-      .select("bkt_id").distinct().collect().map(_.getInt(0)).toSet
+  /** The covidx and obsidx registries' bucket sets for the samples
+    * `ids` as of `batchId`, in ONE job: every cover bucket that can
+    * hold the samples' fragments, and every obslog bucket that can hold
+    * their (tagged) observation rows (a superset between compactions;
+    * exact after one). O(samples × nBuckets) rows collected. */
+  private[graft] def registryBuckets(batchId: Long,
+      ids: Seq[Long]): (Set[Int], Set[Int]) =
+    if (ids.isEmpty) (Set.empty, Set.empty)
+    else {
+      def reg(comp: String, tag: Int) = appendRead(comp, batchId, None)
+        .filter(isRetracted(ids)).select(lit(tag).as("reg"), col("bkt_id"))
+      val rows = reg("covidx", 0).unionByName(reg("obsidx", 1)).collect()
+      def of(tag: Int) = rows.collect { case r if r.getInt(0) == tag => r.getInt(1) }.toSet
+      (of(0), of(1))
+    }
 
   /** Sample deactivation from the store alone: the samples' net
     * observations are read off the obslog component (appended +rows
@@ -709,19 +723,23 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     * how the streaming inbox routes a `.rm` file
     * ([[graft.streaming.Ingest.startFreqStoreMaintenance]]). */
   def retractSamples(batchId: Long, smpR: DataFrame): Unit =
-    retract(batchId, netObsOf(batchId, smpR), smpR)
+    withWriterLock(s"retract batch $batchId") {
+      val ids = sampleIds(smpR)
+      val (covBkts, obsBkts) = registryBuckets(batchId, ids)
+      retractLocked(batchId, netObsOf(batchId, ids, obsBkts), ids, covBkts)
+    }
 
   /** The samples' NET observations off the obslog store, as of
     * generation `batchId` — the derivation [[retractSamples]] and the
-    * SQL DELETE path share. The obsidx registry names the buckets that
-    * can hold the samples' tagged observations (untagged rows never
-    * match the semi-join, so skipping their buckets is lossless); once
+    * SQL DELETE path share. The obsidx registry's `obsBkts` name the
+    * buckets that can hold the samples' tagged observations (untagged
+    * rows never match, so skipping their buckets is lossless); once
     * compaction has bucketed the obslog, the read opens only those
     * directories. */
-  private def netObsOf(batchId: Long, smpR: DataFrame): DataFrame =
-    appendRead("obslog", batchId,
-        Some(obsBucketsOf(batchId, smpR)))
-      .join(broadcast(smpR.select("sample_id")), Seq("sample_id"), "left_semi")
+  private def netObsOf(batchId: Long, ids: Seq[Long],
+      obsBkts: Set[Int]): DataFrame =
+    appendRead("obslog", batchId, Some(obsBkts))
+      .filter(isRetracted(ids))
       .groupBy("sample_id", "chromosome", "position", "reference", "observed")
       .agg(sum(col("support")).cast(LongType).as("support"))
       .filter(col("support") =!= 0)
@@ -746,23 +764,23 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
       // hazard appendGeneration documents
       logCache = None
       val gen = generations.map(_._1).maxOption.fold(0L)(_ + 1L)
-      val sids = broadcast(smpR.select("sample_id"))
+      val ids = sampleIds(smpR)
+      val (covBkts, obsBkts) = registryBuckets(gen, ids)
       // short-circuit order: the common live-sample case answers on the
       // first (bucket-pruned) probe; the fully-vacuous case costs three
       // limit-1 jobs over pruned reads
-      def hasObs = netObsOf(gen, smpR).limit(1).count() > 0
+      def hasObs = netObsOf(gen, ids, obsBkts).limit(1).count() > 0
       def hasReg = appendRead("smpreg", gen, None)
-        .join(sids, Seq("sample_id"), "left_semi")
+        .filter(isRetracted(ids))
         .groupBy("sample_id", "has_coverage")
         .agg(sum(col("pool_size")).as("p")).filter(col("p") =!= 0)
         .limit(1).count() > 0
-      def hasCover = mergeRead("cover", gen,
-          Some(covBucketsOf(gen, smpR.select("sample_id"))))
-        .join(sids, Seq("sample_id"), "left_semi")
+      def hasCover = mergeRead("cover", gen, Some(covBkts))
+        .filter(isRetracted(ids))
         .limit(1).count() > 0
       if (!hasObs && !hasReg && !hasCover) None
       else {
-        retractLocked(gen, netObsOf(gen, smpR), smpR)
+        retractLocked(gen, netObsOf(gen, ids, obsBkts), ids, covBkts)
         Some(gen)
       }
     }

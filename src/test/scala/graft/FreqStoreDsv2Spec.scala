@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.sources.{FreqStoreDataSource, FreqStoreScanBuilder}
 import graft.varda.{FreqStore, VardaOps}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, sources}
 import org.apache.spark.sql.functions.{count, lit, max, min, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -514,4 +515,117 @@ class FreqStoreDsv2Spec extends AnyFunSuite {
     assert(rowSet(spark.read.format("freqstore").load(dir)) ==
       rowSet(store.serve()))
   }
+
+  /** A two-generation store with every probe position on three
+    * chromosomes, two alleles at one point, and coverage on two of them,
+    * so random predicates select from several rows in every bucket. */
+  private def spreadStore(): (FreqStore, String) = {
+    val dir = tmpDir("fqs_exact")
+    val store = new FreqStore(spark, dir, nBuckets = 4)
+    val obs = (for ((c, ci) <- Seq("1", "2", "X").zipWithIndex;
+                    (p, pi) <- spreadPositions.zipWithIndex)
+      yield (c, p, "A", if ((ci + pi) % 2 == 0) "C" else "G",
+        1 + (ci + pi) % 4)) :+ ("1", 5000L, "A", "T", 2)
+    val cov = Seq((10L, "1", 1L, 10000L, 1L, 2), (11L, "X", 1L, 50000L, 2L, 5))
+      .toDF("region_id", "chromosome", "begin_pos", "end_pos",
+        "sample_id", "pool_size")
+    val smp = Seq((1L, 2, true), (2L, 5, true), (3L, 7, false))
+      .toDF("sample_id", "pool_size", "has_coverage")
+    val obsCols = Seq("chromosome", "position", "reference", "observed", "support")
+    store.commit(0, obs.toDF(obsCols: _*), cov, smp)
+    store.commit(1, Seq(("2", 1500L, "A", "G", 3), ("X", 91000L, "T", "A", 1))
+      .toDF(obsCols: _*), cov.filter("false"), smp.filter("false"))
+    (store, dir)
+  }
+  private val spreadPositions =
+    Seq(700L, 1500L, 5000L, 5001L, 9000L, 40000L, 91000L)
+
+  test("pushed predicates are enforced exactly: random filters equal serve().filter") {
+    val (store, dir) = spreadStore()
+    val rnd = new scala.util.Random(13)
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    val chroms = Seq("1", "2", "X", "7")
+    val poss = spreadPositions ++ Seq(123L, 4999L)
+    // up to 12 values: past 10 Spark plans an InSet, which also pushes
+    def posList = Seq.fill(1 + rnd.nextInt(12))(pick(poss)).mkString(", ")
+    def point = if (rnd.nextBoolean())
+      s"(chromosome = '${pick(chroms)}' AND position = ${pick(poss)})"
+    else s"(position IN ($posList) AND chromosome = '${pick(chroms)}')"
+    def term: String = rnd.nextInt(9) match {
+      case 0 => s"chromosome = '${pick(chroms)}'"
+      case 1 => s"position = ${pick(poss)}"
+      case 2 => s"position IN ($posList)"
+      case 3 => s"position ${pick(Seq(">", ">=", "<", "<="))} ${pick(poss)}"
+      case 4 => s"position BETWEEN ${pick(poss)} AND ${pick(poss)}"
+      case 5 => Seq.fill(1 + rnd.nextInt(3))(point).mkString("(", " OR ", ")")
+      case 6 => s"numer >= ${1 + rnd.nextInt(4)}"
+      // a mixed OR and a point OR carrying another column stay residual
+      case 7 => s"(chromosome = '${pick(chroms)}' OR numer >= 3)"
+      case _ => s"($point OR ($point AND numer >= 2))"
+    }
+    val fixed = Seq(
+      "chromosome = '1' AND chromosome = 'X'",
+      "chromosome = '1' AND position >= 0 AND (chromosome = 'X' OR numer >= 100)",
+      "chromosome = '1' AND position IN (5000, 9000) AND numer >= 2",
+      "(chromosome = '1' AND position = 5000) OR (chromosome = 'X' AND position IN (700, 91000))",
+      "position > 9223372036854775807",
+      "chromosome = '2' AND position <= 9223372036854775807")
+    val projections = Seq(FreqStoreDataSource.schema.fieldNames.toSeq,
+      Seq("numer"), Seq("reference", "freq_ppm"), Seq("denom", "chromosome"))
+    def rows(df: DataFrame, cols: Seq[String]) =
+      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.toString).sorted.toSeq
+    for (state <- Seq("two generations", "compacted")) {
+      if (state == "compacted") store.compact()
+      val served = store.serve()
+      var pushedCases = 0
+      for (e <- fixed ++ Seq.fill(36)(
+          Seq.fill(1 + rnd.nextInt(3))(term).mkString(" AND "))) {
+        val cols = pick(projections)
+        FreqStoreDataSource.lastPlannedRange = FreqStoreScanBuilder.PushedRange.empty
+        val got = rows(spark.read.format("freqstore").load(dir).filter(e), cols)
+        if (!FreqStoreDataSource.lastPlannedRange.isEmpty) pushedCases += 1
+        assert(got == rows(served.filter(e), cols),
+          s"$state: '$e' over ${cols.mkString(",")} diverged from serve()")
+      }
+      assert(pushedCases > 20, s"$state: only $pushedCases cases pushed a predicate")
+    }
+
+    // a second, different chromosome conjunct is not consumed
+    val (r, consumed) = FreqStoreScanBuilder.rangeOf(Array(
+      sources.EqualTo("chromosome", "1"), sources.EqualTo("chromosome", "X"),
+      sources.IsNotNull("chromosome"), sources.GreaterThan("numer", 1L)))
+    assert(r.chromosome.contains("1") &&
+      consumed.toSeq == Seq(sources.EqualTo("chromosome", "1")), s"$r $consumed")
+
+    // a pushed LIMIT counts rows that passed the pushed predicate: the
+    // OR of points leaves no residual filter, so Spark pushes the limit
+    val pts = "(chromosome = '1' AND position IN (700, 5000, 9000, 91000)) OR " +
+      "(chromosome = 'X' AND position IN (1500, 40000))"
+    val want = rows(store.serve().filter(pts), Seq("chromosome", "position"))
+    assert(want.size > 2)
+    val lim = rows(spark.read.format("freqstore").load(dir).filter(pts).limit(2),
+      Seq("chromosome", "position"))
+    assert(FreqStoreDataSource.lastPlannedLimit.contains(2),
+      "the limit over pushed points was not pushed")
+    assert(lim.size == 2 && lim.forall(want.contains), s"limit gave $lim")
+    // a range keeps its literal-free isnotnull residual: limit stays on top
+    val range = "chromosome = '1' AND position BETWEEN 1000 AND 60000"
+    val inRange = rows(store.serve().filter(range), Seq("chromosome", "position"))
+    val limR = rows(spark.read.format("freqstore").load(dir).filter(range).limit(2),
+      Seq("chromosome", "position"))
+    assert(limR.size == 2 && limR.forall(inRange.contains), s"range limit gave $limR")
+
+    // a filtered count / min(position) never reaches the footers, even
+    // when no residual filter blocks Spark from offering the aggregate
+    val cnt = spark.read.format("freqstore").load(dir).filter(pts).count()
+    assert(cnt == want.size && !FreqStoreDataSource.lastPushedCountStar,
+      "a pushed-filter count must not use the footer path")
+    val lo = spark.read.format("freqstore").load(dir).filter(pts)
+      .agg(min("position")).collect().head.getLong(0)
+    assert(lo == store.serve().filter(pts).agg(min("position")).collect().head.getLong(0))
+    assert(FreqStoreDataSource.lastPushedAggs.isEmpty,
+      "a pushed-filter min must not use the footer path")
+  }
+
 }

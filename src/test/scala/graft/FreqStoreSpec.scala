@@ -540,6 +540,55 @@ class FreqStoreSpec extends AnyFunSuite {
     assert(big == served, "large-probe lookup diverged from serve()")
   }
 
+  test("lookups reuse one generated class: a new probe set or range compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = tmpDir("fqs_class_reuse")
+    val store = new FreqStore(spark, dir, nBuckets = 4)
+    val chroms = Seq("1", "2", "X")
+    store.commit(0, (for (c <- chroms; i <- 0 until 40)
+        yield (c, 700L + i * 1531L, "A", "G", 1 + i % 4)).toDF(
+        "chromosome", "position", "reference", "observed", "support"),
+      (for ((c, j) <- chroms.zipWithIndex; i <- 0 until 30)
+        yield (j * 100L + i, c, i * 2000L, i * 2000L + 1999L, 1L + i % 2, 2)).toDF(
+        "region_id", "chromosome", "begin_pos", "end_pos", "sample_id", "pool_size"),
+      Seq((1L, 2, true), (2L, 3, true)).toDF("sample_id", "pool_size", "has_coverage"))
+    /** Classes compiled while `df` is built and collected. */
+    def compiles(df: => DataFrame): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(df.collect().nonEmpty)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    def filters(df: DataFrame) = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case f: FilterExec => f }
+    def pos(i: Int) = 700L + i * 1531L
+    // the first lookup of each kind compiles its whole-stage class ...
+    compiles(store.lookupPoints(Seq(("1", pos(3)), ("X", pos(5)))))
+    compiles(store.lookupRange("2", pos(2), pos(9)))
+    // ... which every later probe set of the same size and every later
+    // range reuse: the pushed predicate holds the literals, not the code
+    val pts = store.lookupPoints(Seq(("1", pos(11)), ("X", pos(17))))
+    assert(compiles(pts) == 0, "a second point lookup compiled a class")
+    assert(filters(pts).isEmpty,
+      s"a Filter sits above the point scan:\n${pts.queryExecution.executedPlan}")
+    val range = store.lookupRange("2", pos(20), pos(31))
+    assert(compiles(range) == 0, "a second range lookup compiled a class")
+    // the range keeps only Spark's literal-free null checks
+    assert(filters(range).forall(_.condition.collectFirst {
+        case l: org.apache.spark.sql.catalyst.expressions.Literal => l }.isEmpty),
+      s"the range bounds were left to a residual Filter:\n${range.queryExecution.executedPlan}")
+
+    // the same through the declared flagship key (its probes span
+    // several chromosomes at sf0.01)
+    val key = () => SparkEntry.queries("varda_freq_lookup")(spark, sf001)
+    compiles(key())
+    val df = key()
+    assert(compiles(df) == 0, "a second varda_freq_lookup compiled a class")
+    assert(filters(df).isEmpty,
+      s"a Filter sits above varda_freq_lookup's scan:\n${df.queryExecution.executedPlan}")
+  }
+
   test("point and range lookups are one store scan row-equal to serve()") {
     import graft.sources.{FreqStoreDataSource, FreqStoreScanBuilder}
     import org.apache.parquet.filter2.compat.FilterCompat.FilterPredicateCompat
@@ -1014,15 +1063,19 @@ class FreqStoreSpec extends AnyFunSuite {
 
     def cellBkts(cells: Range) =
       cells.map(c => FreqStore.driverBucket(c.toLong, n)).toSet
-    val s1 = Seq(1L).toDF("sample_id")
-    val s2 = Seq(2L).toDF("sample_id")
-    assert(store.covBucketsOf(9, s1) == cellBkts(1 to 2))
-    assert(store.covBucketsOf(9, s2) == cellBkts(43 to 44))
+    def covBucketsOf(sid: Long) = store.registryBuckets(9, Seq(sid))._1
+    def obsBucketsOf(sid: Long) = store.registryBuckets(9, Seq(sid))._2
+    assert(covBucketsOf(1L) == cellBkts(1 to 2))
+    assert(covBucketsOf(2L) == cellBkts(43 to 44))
     // ...and the obsidx twin names each sample's obslog point bucket
-    assert(store.obsBucketsOf(9, s1) ==
+    assert(obsBucketsOf(1L) ==
       Set(FreqStore.pointBucket(5000L, n)))
-    assert(store.obsBucketsOf(9, s2) ==
+    assert(obsBucketsOf(2L) ==
       Set(FreqStore.pointBucket(90000L, n)))
+    // both registries resolve in one call for a set of samples
+    assert(store.registryBuckets(9, Seq(1L, 2L)) ==
+      (cellBkts(1 to 2) ++ cellBkts(43 to 44),
+        Set(FreqStore.pointBucket(5000L, n), FreqStore.pointBucket(90000L, n))))
 
     // the retraction through the pruned cover read still converges to
     // the one-shot over the surviving sample
@@ -1037,12 +1090,12 @@ class FreqStoreSpec extends AnyFunSuite {
     // compaction rewrites the registries EXACTLY from the consolidated
     // stores: the retracted sample's stale hints age out
     store.compact()
-    assert(store.covBucketsOf(9, s1).isEmpty,
+    assert(covBucketsOf(1L).isEmpty,
       "compaction kept the retracted sample's covidx residue")
-    assert(store.covBucketsOf(9, s2) == cellBkts(43 to 44))
-    assert(store.obsBucketsOf(9, s1).isEmpty,
+    assert(covBucketsOf(2L) == cellBkts(43 to 44))
+    assert(obsBucketsOf(1L).isEmpty,
       "compaction kept the retracted sample's obsidx residue")
-    assert(store.obsBucketsOf(9, s2) ==
+    assert(obsBucketsOf(2L) ==
       Set(FreqStore.pointBucket(90000L, n)))
     // and a post-compaction retraction through the doubly-pruned reads
     // still nets the surviving sample out to an empty store

@@ -12,6 +12,15 @@ if [ -n "$raw" ]; then
   echo "raw checkpoint calls outside graft.util (use Ckpt.narrow):"; echo "$raw"
   exit 1
 fi
+# one reader conf per JVM: graft.sources.GroupReads builds the only Hadoop
+# Configuration under src/main (once per session conf map), so a
+# `new Configuration(` anywhere else fails the gate
+conf=$(grep -rn 'new Configuration(' src/main --include=*.scala \
+  | grep -v '^src/main/scala/graft/sources/GroupReads.scala:' || true)
+if [ -n "$conf" ]; then
+  echo "Configuration built outside GroupReads (use GroupReads.hadoopConf):"; echo "$conf"
+  exit 1
+fi
 # the src/main line count (ROADMAP E's figure), so each change reads its
 # count from the gate
 echo "src/main lines: $(find src/main -name '*.scala' | xargs cat | wc -l)"
