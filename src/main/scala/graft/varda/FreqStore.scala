@@ -1981,8 +1981,7 @@ object FreqStore {
   /** Driver-side bucket of a POINT — the one authority on the cell
     * granule for every serving caller (API lookups and the DSv2 scan
     * alike; re-deriving the shift at a call site risks pruning to the
-    * wrong bucket, which for residual-only filters is silent row
-    * loss). */
+    * wrong bucket, which is silent row loss). */
   private[graft] def pointBucket(position: Long, n: Int): Int =
     driverBucket(position >> CellShift, n)
 
